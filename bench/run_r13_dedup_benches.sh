@@ -7,8 +7,8 @@
 # operator's answer is printed by tools.Count BEFORE the streams run,
 # then each full-history stream run re-checks it via check=1.
 #
-# Task 7: one post-__lineage-stamp datapoint each for NearDupBench /
-# EmbedDupBench / SubstrBench at the 10x replica on final HEAD.
+# Task 7: one post-__lineage-stamp datapoint each for the neardup /
+# embed / substr modalities at the 10x replica on final HEAD.
 set -x
 cd /root/repo
 
@@ -16,16 +16,16 @@ cd /root/repo
 sbt -batch "runMain graft.tools.Count q_minhash_pairs,q_minhash_jaccard_est /tmp/scale100_docs" 2>&1 | grep "COUNT"
 
 # MinHash 100x: full history + batch cross-check, then retention
-sbt -batch "runMain graft.tools.MinHashDupBench /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "MINHASHDUPBENCH"
-sbt -batch "runMain graft.tools.MinHashDupBench /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "MINHASHDUPBENCH"
+sbt -batch "runMain graft.tools.DupStreamBench minhash /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.DupStreamBench minhash /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "DUPSTREAMBENCH"
 
 # Jaccard 100x: full history + cross-check, then retention
-sbt -batch "runMain graft.tools.JaccardDupBench /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "JACCARDDUPBENCH"
-sbt -batch "runMain graft.tools.JaccardDupBench /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "JACCARDDUPBENCH"
+sbt -batch "runMain graft.tools.DupStreamBench jaccard /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.DupStreamBench jaccard /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "DUPSTREAMBENCH"
 
 # Task 7: post-lineage-stamp datapoints on final HEAD, 10x replicas
 # (full-history config — the stores' shipped format now includes the
 # constant __lineage column; EditDist already re-ran in r12)
-sbt -batch "runMain graft.tools.NearDupBench /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "NEARDUPBENCH"
-sbt -batch "runMain graft.tools.SubstrBench /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "SUBSTRBENCH"
-sbt -batch "runMain graft.tools.EmbedDupBench /tmp/scale10_emb/embeddings.parquet 0 0 1" 2>&1 | grep "EMBEDDUPBENCH"
+sbt -batch "runMain graft.tools.DupStreamBench neardup /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.DupStreamBench substr /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.DupStreamBench embed /tmp/scale10_emb/embeddings.parquet 0 0 1" 2>&1 | grep "DUPSTREAMBENCH"

@@ -199,7 +199,7 @@ object Bench {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
       }
     }

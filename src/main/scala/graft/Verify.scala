@@ -1,9 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the DuckDB oracle compare. A failed query
+  * is logged and the dump goes on, but the run then fails: a
+  * `[verify] FAILED n/N: q_a, q_b` summary and exit status 1. */
 object Verify {
+  /** Thrown by [[dump]] after everything else was written. */
+  final class Failed(val queries: Seq[String], total: Int)
+      extends RuntimeException(
+        s"[verify] FAILED ${queries.size}/$total: ${queries.mkString(", ")}")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -14,18 +22,34 @@ object Verify {
         .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // Optional comma-separated subset for local iteration; the driver sets
     // no env and gets every query.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed =
+      try {
+        dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
+          .filter { case (name, _) => only.forall(_.contains(name)) })
+        None
+      } catch { case f: Failed => Some(f) }
+      finally spark.stop()
+    failed.foreach { f => System.err.println(f.getMessage); sys.exit(1) }
+  }
+
+  /** Write each query's result to `<outDir>/<name>` and oracle_sql.json;
+    * throws [[Failed]] at the end when any query failed. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Unit = {
+    new java.io.File(outDir).mkdirs()
+    val failed = queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -35,6 +59,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    if (failed.nonEmpty) throw new Failed(failed, queries.size)
   }
 }

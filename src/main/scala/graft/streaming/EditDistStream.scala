@@ -1,52 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
 
-/** STREAMING edit-distance near-duplicate detection — the fourth
-  * at-ingest dedup modality beside [[NearDupStream]] (SimHash token
-  * sets), [[SubstrDedupStream]] (exact substrings) and [[EmbedDupStream]]
-  * (embedding cosine): arriving documents are matched by bounded
+/** STREAMING edit-distance near-duplicate detection on the
+  * [[CandidateJoin]] skeleton: arriving documents are matched by bounded
   * Levenshtein distance on their fixed-length prefix, within the batch
-  * and against everything ingested so far, using the SAME PassJoin
+  * and against everything ingested so far, with the SAME PassJoin
   * pigeonhole partitioning as the batch operator
-  * ([[Dedup.editDistancePairs]]) — character-level noise (OCR scans of
-  * one source, version-stamped boilerplate) caught when the doc lands.
+  * ([[Dedup.editDistancePairs]]) — OCR noise or version-stamped
+  * boilerplate caught when the document lands.
   *
-  * Shape per microbatch (foreachBatch, serialized):
-  *  1. prefix keys once ([[Dedup.prefixKeys]], checkpointed — both joins
-  *     and the store append consume them);
-  *  2. within-batch pairs from the batch operator itself (bit-identical
-  *     semantics by construction);
-  *  3. cross-batch pairs: the batch's probe substrings
-  *     ([[Dedup.passjoinProbe]]) equi-join the accumulated segment store
-  *     `(seg_part, i, sub, doc_id, s)` — PARTITIONED by a 64-way hash of
-  *     the segment text and pruned to the batch's own distinct parts (a
-  *     bounded ≤ 64-value collect) — then exact `levenshtein` on the
-  *     distinct candidates only, prefixes read from the store rows, the
-  *     corpus never re-read;
-  *  4. matches append with `__batch_id`; the batch's index segments
-  *     append to the store AFTER the lookup, clustered on the partition
-  *     key ([[Streams.appendPartitioned]]).
-  *
-  * Replay safety of the emitted MATCHES needs no lineage guard — the
-  * [[EmbedDupStream]] argument: a batch that crashed after its store
-  * append replays against its own segments, but the `least/greatest`
-  * pair normalization plus the `doc_id` inequality mean those can only
-  * re-produce pairs the intra-batch join already emits — duplicate
-  * ROWS, never wrong ones — and [[matches]]' distinct absorbs them.
-  * The STORE append goes through the shared
-  * [[Streams.SideStore.appendBatchOnce]] guard (round 12), so a
-  * crash-replay no longer grows the store by a copy of the batch.
-  *
-  * Retention (`retainBatches`) bounds the store to a sliding horizon via
-  * the crash-safe [[Streams.rewriteStore]] swap. A format marker stamps
-  * `(k, prefixLen)`: segment boundaries depend on both, so probing a
-  * store built with a different geometry would silently miss true pairs
-  * — a mismatched restart fails fast instead. */
+  * Its probe rows and stored rows differ, so it brings its own pairing:
+  * within the batch, the batch operator itself; across batches, the
+  * batch's probe substrings ([[Dedup.passjoinProbe]]) equi-join the
+  * segment store `(seg_part, i, sub, doc_id, s)` — partitioned by a
+  * 64-way hash of the segment text and pruned to the probes' own parts —
+  * then exact `levenshtein` runs on the distinct candidates only, with
+  * prefixes read from the store rows, so the corpus is never re-read.
+  * The format marker stamps `(k, prefixLen)`: segment boundaries depend
+  * on both. */
 object EditDistStream {
 
   private val SegParts = 64
@@ -62,62 +38,32 @@ object EditDistStream {
             retainBatches: Int = 0, pruneEvery: Int = 0): StreamingQuery = {
     val store = new Streams.SideStore(stateDir, "seg_part",
       formatTag(k, prefixLen), "EditDistStream", retainBatches, pruneEvery)
-    val lineage = Streams.lineageId(
-      docs.sparkSession.sparkContext.hadoopConfiguration, checkpoint)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val keys = Dedup.prefixKeys(batch, prefixLen).localCheckpoint(false)
-        val fs = store.ensureReady(spark)
-        val intra = Dedup.editDistancePairs(
-          keys.select(col("doc_id"), col("s").as("text")), k, prefixLen)
-        val cross = (if (store.exists(fs)) Some(()) else None)
-          .map { _ =>
-            val probe = Dedup.passjoinProbe(keys, k, prefixLen)
-              .withColumn("seg_part",
-                pmod(xxhash64(col("sub")), lit(SegParts)).cast("int"))
-            // bounded collect: ≤ 64 distinct partition values — store
-            // slices outside the probes' own parts cannot match
-            val parts = probe.select("seg_part").distinct()
-              .collect().map(_.getInt(0)).toIndexedSeq
-            val candidates = probe.alias("n").join(
-                store.prunedRead(spark, parts).alias("p"),
-                col("n.i") === col("p.i") && col("n.sub") === col("p.sub") &&
-                  col("n.doc_id") =!= col("p.doc_id"))
-              .select(col("n.doc_id").as("new_id"),
-                col("p.doc_id").as("old_id"), col("p.s").as("s_old"))
-              .distinct()
-            candidates.join(keys.select(col("doc_id").as("new_id"),
-                col("s").as("s_new")), "new_id")
-              .withColumn("dist", levenshtein(col("s_new"), col("s_old")))
-              .filter(col("dist") <= k)
-              .select(least(col("new_id"), col("old_id")).as("doc_a"),
-                greatest(col("new_id"), col("old_id")).as("doc_b"),
-                col("dist"))
-          }
-        cross.fold(intra)(intra.unionByName(_))
+    def segPart(rows: DataFrame) = rows.withColumn("seg_part",
+      pmod(xxhash64(col("sub")), lit(SegParts)).cast("int"))
+    def probe(keys: DataFrame) =
+      segPart(Dedup.passjoinProbe(keys, k, prefixLen))
+    CandidateJoin.start(docs, checkpoint, store, matchesDir,
+        Seq("doc_id", "i"))(
+      Dedup.prefixKeys(_, prefixLen),
+      CandidateJoin.Pairing(
+        intra = keys => Dedup.editDistancePairs(
+          keys.select(col("doc_id"), col("s").as("text")), k, prefixLen),
+        cross = (keys, stored) => probe(keys).alias("n")
+          .join(stored.alias("p"),
+            col("n.i") === col("p.i") && col("n.sub") === col("p.sub") &&
+              col("n.doc_id") =!= col("p.doc_id"))
+          .select(col("n.doc_id").as("new_id"),
+            col("p.doc_id").as("old_id"), col("p.s").as("s_old"))
           .distinct()
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode(SaveMode.Append).parquet(matchesDir)
-        // grow the store AFTER the lookup; carry the prefix so verify
-        // never re-reads the corpus. Lineage-stamped through the shared
-        // crash-replay guard (pre-upgrade store files read __lineage as
-        // null → guard no-ops).
-        store.appendBatchOnce(spark,
-          Dedup.passjoinIndex(keys, k, prefixLen)
-            .join(keys.select(col("doc_id"), col("s")), "doc_id")
-            .withColumn("seg_part",
-              pmod(xxhash64(col("sub")), lit(SegParts)).cast("int"))
-            .withColumn("__lineage", lit(lineage)),
-          lineage, batchId, Seq("doc_id", "i"))
-        store.pruneIfDue(spark, batchId)
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(keys)
-          .foreach(_.unpersist(false))
-        ()
-      }
-      .start()
+          .join(keys.select(col("doc_id").as("new_id"), col("s").as("s_new")),
+            "new_id")
+          .withColumn("dist", levenshtein(col("s_new"), col("s_old")))
+          .filter(col("dist") <= k)
+          .select(least(col("new_id"), col("old_id")).as("doc_a"),
+            greatest(col("new_id"), col("old_id")).as("doc_b"), col("dist")),
+        probe = probe,
+        stored = keys => segPart(Dedup.passjoinIndex(keys, k, prefixLen)
+          .join(keys.select(col("doc_id"), col("s")), "doc_id"))))
   }
 
   /** All matches emitted so far, deduplicated (idempotent-append

@@ -1,49 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{Hashing, VectorExpressions}
 
-/** STREAMING embedding near-duplicate detection — the third at-ingest
-  * dedup modality beside [[NearDupStream]] (SimHash text) and
-  * [[SubstrDedupStream]] (exact substrings): arriving vectors are
-  * LSH-bucketed with the SAME codegen'd sign-plane expression as the
-  * batch operator ([[graft.operators.Similarity.nearDupPairsLsh]]) and
-  * cosine-matched within the batch and against everything ingested so
-  * far — the SemDeDup-style semantic-duplicate guard run when an
-  * embedding lands, not in a nightly all-pairs batch.
+/** STREAMING embedding near-duplicate detection on the [[CandidateJoin]]
+  * skeleton — the SemDeDup-style semantic-duplicate guard run when an
+  * embedding lands: arriving vectors are LSH-bucketed with the SAME
+  * codegen'd sign-plane expression as the batch operator
+  * ([[graft.operators.Similarity.nearDupPairsLsh]]) and cosine-matched
+  * within the batch and against everything ingested so far.
   *
-  * Shape per microbatch (foreachBatch, serialized):
-  *  1. one codegen'd bucket projection over the batch (checkpointed —
-  *     three consumers);
-  *  2. within-batch pairs from the bucket self-join (`vec_a < vec_b`),
-  *     exact cosine on candidates only;
-  *  3. cross-batch pairs against the accumulated store — `(vec_id,
-  *     embedding, bucket)` parquet, PARTITIONED by bucket (≤ 2^numPlanes
-  *     directories) and pruned to the batch's own distinct buckets (a
-  *     bounded ≤ 2^numPlanes collect) before the equi-join, so a batch
-  *     reads only the store slices its vectors can possibly match;
-  *  4. matches append with `__batch_id`; the batch's vectors append to
-  *     the store AFTER the lookup, clustered on the partition key.
-  *
-  * Replay safety of the emitted MATCHES needs no lineage guard — same
-  * argument as [[NearDupStream]], opposite of [[SubstrDedupStream]]: a
-  * batch that crashed after its store append replays against its own
-  * vectors, but the `vec_id` inequality bounds mean those can only
-  * re-produce pairs the intra-batch join already emits — duplicate
-  * ROWS, never wrong ones — and [[matches]]' distinct absorbs them.
-  * The STORE append, though, goes through the shared
-  * [[Streams.SideStore.appendBatchOnce]] guard (round 12), so a
-  * crash-replay no longer grows the store by a copy of the batch.
-  *
-  * Retention (`retainBatches`) bounds the store to a sliding horizon via
-  * the crash-safe [[Streams.rewriteStore]] swap, with the same
-  * checkpoint-scoped batch-id caveat as the other stores. A format
-  * marker stamps the LSH geometry: buckets from different plane counts
-  * (or a different `dim`) share an integer keyspace but mean different
-  * things, so a mismatched restart fails fast. */
+  * The store holds `(vec_id, embedding, bucket)` rows, partitioned by
+  * bucket (≤ 2^numPlanes directories); the cross-batch read is pruned to
+  * the batch's own buckets. The format marker stamps the LSH geometry:
+  * buckets from a different plane count or `dim` share an integer
+  * keyspace but mean different things. */
 object EmbedDupStream {
 
   private def formatTag(numPlanes: Int, dim: Int): String =
@@ -60,59 +34,16 @@ object EmbedDupStream {
     val planes = Hashing.hyperplanes(numPlanes, dim)
     val store = new Streams.SideStore(stateDir, "bucket",
       formatTag(numPlanes, dim), "EmbedDupStream", retainBatches, pruneEvery)
-    val lineage = Streams.lineageId(
-      vecs.sparkSession.sparkContext.hadoopConfiguration, checkpoint)
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val bucketed = batch
-          .select(col("vec_id"), col("embedding"))
-          .withColumn("bucket",
-            VectorExpressions.lshBucket(col("embedding"), planes))
-          .localCheckpoint(false)
-        val fs = store.ensureReady(spark)
-        val a = bucketed.alias("a")
-        val b = bucketed.hint("shuffle_hash").alias("b")
-        val intra = a.join(b,
-            col("a.bucket") === col("b.bucket") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-            VectorExpressions.cosineSim(col("a.embedding"),
-              col("b.embedding")).as("score"))
-        val cross = (if (store.exists(fs)) Some(()) else None)
-          .map { _ =>
-            val buckets = bucketed.select("bucket").distinct()
-              .collect().map(_.getInt(0)).toIndexedSeq
-            bucketed.alias("n").join(
-                store.prunedRead(spark, buckets).alias("p"),
-                col("n.bucket") === col("p.bucket") &&
-                  col("n.vec_id") =!= col("p.vec_id"))
-              .select(
-                least(col("n.vec_id"), col("p.vec_id")).as("vec_a"),
-                greatest(col("n.vec_id"), col("p.vec_id")).as("vec_b"),
-                VectorExpressions.cosineSim(col("n.embedding"),
-                  col("p.embedding")).as("score"))
-          }
-        cross.fold(intra)(intra.unionByName(_))
-          .filter(col("score") > threshold)
-          .select(col("vec_a"), col("vec_b"),
-            round(col("score"), 6).as("score"))
-          .distinct()
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode(SaveMode.Append).parquet(matchesDir)
-        // lineage-stamped append through the shared crash-replay guard
-        // (pre-upgrade store files read __lineage as null → guard no-ops)
-        store.appendBatchOnce(spark,
-          bucketed.withColumn("__lineage", lit(lineage)), lineage, batchId,
-          Seq("vec_id"))
-        store.pruneIfDue(spark, batchId)
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(bucketed)
-          .foreach(_.unpersist(false))
-        ()
-      }
-      .start()
+    CandidateJoin.start(vecs, checkpoint, store, matchesDir, Seq("vec_id"),
+        keep = col("score") > threshold,
+        emit = Seq(col("vec_a"), col("vec_b"),
+          round(col("score"), 6).as("score")))(
+      batch => batch.select(col("vec_id"), col("embedding"))
+        .withColumn("bucket",
+          VectorExpressions.lshBucket(col("embedding"), planes)),
+      CandidateJoin.symmetric(Seq("bucket"), "vec_id", "vec_a", "vec_b")(
+        (l, r) => VectorExpressions.cosineSim(col(s"$l.embedding"),
+          col(s"$r.embedding")).as("score")))
   }
 
   /** All matches emitted so far, deduplicated (idempotent-append

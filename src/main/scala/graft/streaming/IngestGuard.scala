@@ -170,12 +170,10 @@ object IngestGuard {
     * (probing a store partitioned differently than `pmod(xxhash64(key),
     * parts)` expects would silently MISS near-dups — false negatives,
     * the unabsorbable direction). */
-  private[streaming] def checkNdFormat(
-      fs: org.apache.hadoop.fs.FileSystem, nd: NearDup): Unit = {
-    val legacy = s"guard-neardup/v1/k=${nd.k}/bands=${nd.bands}/n=${nd.n}"
-    Streams.checkStoreFormatUpgrade(fs, nd.stateDir, nearDupFormatTag(nd),
-      legacy, nd.bandParts == LegacyBandParts, "IngestGuard.NearDup")
-  }
+  private def checkNdFormat(nd: NearDup): Streams.SideStore.FormatCheck =
+    Streams.SideStore.upgradeFrom(
+      s"guard-neardup/v1/k=${nd.k}/bands=${nd.bands}/n=${nd.n}",
+      nd.bandParts == LegacyBandParts)
 
   private[streaming] val countsSchema =
     org.apache.spark.sql.types.StructType(Seq(
@@ -340,7 +338,7 @@ object IngestGuard {
     // own pruned-read path below
     val fpStore = new Streams.SideStore(stateDir, "fp_part",
       s"guard-fps/v2/parts=$fpParts", "IngestGuard", 0, 0,
-      checkFormat = (_, fs) => checkFpFormat(fs, stateDir, fpParts),
+      checkFormat = (_, fs, _) => checkFpFormat(fs, stateDir, fpParts),
       sortCols = Seq("__fp"))
     // each store's shard cache gets its own LRU byte budget: the driver
     // must never end up holding the whole corpus filter (the 1e11-fps
@@ -354,7 +352,7 @@ object IngestGuard {
     val ndStore: Option[Streams.SideStore] = nearDup.map(nd =>
       new Streams.SideStore(nd.stateDir, "band_part",
         nearDupFormatTag(nd), "IngestGuard.NearDup", 0, 0,
-        checkFormat = (_, fs) => checkNdFormat(fs, nd),
+        checkFormat = checkNdFormat(nd),
         sortCols = Seq("band_key")))
     val ndBloomCache = new BloomShards.Cache(maxBloomCacheBytes)
     val ndSliceCap0 = nearDup.map(nd => math.max(

@@ -1,48 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
 
-/** STREAMING Jaccard-ESTIMATED near-duplicate detection — the SIXTH
-  * at-ingest dedup modality, and the round-12 proof that
-  * [[Streams.SideStore]] made "the next modality" configuration rather
-  * than another hand-rolled store loop: where [[MinHashDupStream]]
-  * emits raw LSH band COLLISIONS (candidates — some are false alarms
-  * at any banding), this stream scores every candidate with the
-  * MinHash signature-agreement estimate (E[est] = J, σ = √(J(1−J)/k),
-  * Broder '97) and emits `(doc_a, doc_b, est_jaccard)` — the streaming
-  * twin of the oracle-checked batch operator
-  * [[Dedup.minhashJaccardEstimate]] (`q_minhash_jaccard_est`), so the
-  * ingest pipeline can gate on similarity STRENGTH (`minEst`), not
-  * mere candidacy.
+/** STREAMING Jaccard-ESTIMATED near-duplicate detection on the
+  * [[CandidateJoin]] skeleton: where [[MinHashDupStream]] emits raw LSH
+  * band collisions, this stream scores every candidate with the MinHash
+  * signature-agreement estimate (E[est] = J, σ = √(J(1−J)/k), Broder '97)
+  * and emits `(doc_a, doc_b, est_jaccard)` at or above `minEst` — the
+  * streaming twin of the oracle-checked [[Dedup.minhashJaccardEstimate]]
+  * (`q_minhash_jaccard_est`).
   *
-  * Shape per microbatch: one signature pass
-  * ([[Dedup.minhashSignatures]] — the same KM double-hashing as every
-  * batch MinHash surface), bands exploded from those signatures with
-  * the signature RIDING each band row, so the estimate is computed
-  * inside the band join itself (codegen'd `zip_with`/`aggregate` over
-  * two k-long arrays — no second join back to a signature table, which
-  * is the one plan-shape difference from the batch twin: at ingest the
-  * signature is already in hand, so carrying 128 B per band row beats
-  * re-joining the corpus). Within-batch pairs from the band self-join;
-  * cross-batch pairs against the accumulated band+signature store —
-  * `band_part`-partitioned (64-way band-key hash), read-pruned to the
-  * batch's own parts, appended after the lookup through the shared
-  * crash-replay guard ([[Streams.SideStore.appendBatchOnce]], exact
-  * repair mode). `(k, bands, n)` format marker fails fast on geometry
-  * mismatch. Replay safety of the emitted matches is the
-  * [[NearDupStream]] argument (least/greatest + doc inequality ⇒
-  * value-idempotent; the reader's distinct absorbs re-emission —
-  * estimates are pure functions of the two texts, so replayed rows are
-  * bit-identical).
-  *
-  * 100 TB shape: rows are (long, int, 32-char key, k longs) — size
-  * independent of document length; joins are hash equi-joins on
-  * (band_id, band_key); the estimate is a 16-element array walk per
-  * candidate, paid only on true band agreement. */
+  * One signature pass per batch ([[Dedup.bandSigRows]]); the signature
+  * rides each band row, so the estimate is computed inside the band join
+  * (codegen'd `zip_with`/`aggregate`) with no second join back to a
+  * signature table. The store holds those band+signature rows,
+  * `band_part`-partitioned like [[MinHashDupStream]]'s, under a
+  * `(k, bands, n, parts)` marker. Estimates are pure functions of the two
+  * texts, so replayed match rows are bit-identical. */
 object JaccardDupStream {
 
   private val LegacyBandParts = 64
@@ -64,73 +42,26 @@ object JaccardDupStream {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     require(minEst >= 0.0 && minEst <= 1.0, "minEst must be in [0, 1]")
     require(bandParts > 0, "bandParts must be positive")
-    // pre-round-14 markers carried no partition count (stores were all
-    // written 64-way) — they adopt in place; any other configured count
-    // fails fast instead of pruning with the wrong arithmetic
-    val legacyTag = s"minhash-jaccard/k=$k/bands=$bands/n=$n"
     val store = new Streams.SideStore(stateDir, "band_part",
       formatTag(k, bands, n, bandParts), "JaccardDupStream",
       retainBatches, pruneEvery,
-      checkFormat = (_, fs) => Streams.checkStoreFormatUpgrade(fs,
-        stateDir, formatTag(k, bands, n, bandParts), legacyTag,
-        bandParts == LegacyBandParts, "JaccardDupStream"))
-    val lineage = Streams.lineageId(
-      docs.sparkSession.sparkContext.hadoopConfiguration, checkpoint)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = store.ensureReady(spark)
-        // one signature pass; bands exploded WITH the signature riding —
-        // the SHARED builder, so the band keys are bit-identical to
-        // every other MinHash surface by construction
-        val rows = Dedup.bandSigRows(batch, k, bands, n)
-          .withColumn("band_part",
-            pmod(xxhash64(col("band_key")), lit(bandParts)).cast("int"))
-          .localCheckpoint(false)
-        val a = rows.alias("a")
-        val b = rows.hint("shuffle_hash").alias("b")
-        val intra = a.join(b,
-            col("a.band_id") === col("b.band_id") &&
-              col("a.band_key") === col("b.band_key") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            Dedup.sigAgreement(k, "a.sig", "b.sig").as("est_jaccard"))
-        val cross = (if (store.exists(fs)) Some(()) else None)
-          .map { _ =>
-            val parts = rows.select("band_part").distinct()
-              .collect().map(_.getInt(0)).toIndexedSeq // bounded ≤64
-            rows.alias("n").join(store.prunedRead(spark, parts).alias("p"),
-                col("n.band_id") === col("p.band_id") &&
-                  col("n.band_key") === col("p.band_key") &&
-                  col("n.doc_id") =!= col("p.doc_id"))
-              .select(least(col("n.doc_id"), col("p.doc_id")).as("doc_a"),
-                greatest(col("n.doc_id"), col("p.doc_id")).as("doc_b"),
-                // zip_with is positionally symmetric, so the estimate is
-                // independent of which side is the newer doc
-                Dedup.sigAgreement(k, "n.sig", "p.sig").as("est_jaccard"))
-          }
-        cross.fold(intra)(intra.unionByName(_))
-          .filter(col("est_jaccard") >= lit(minEst))
-          .distinct()
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode(SaveMode.Append).parquet(matchesDir)
-        store.appendBatchOnce(spark,
-          rows.withColumn("__lineage", lit(lineage)), lineage, batchId,
-          Seq("doc_id", "band_id"))
-        store.pruneIfDue(spark, batchId)
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(rows)
-          .foreach(_.unpersist(false))
-        ()
-      }
-      .start()
+      checkFormat = Streams.SideStore.upgradeFrom(
+        s"minhash-jaccard/k=$k/bands=$bands/n=$n",
+        bandParts == LegacyBandParts))
+    CandidateJoin.start(docs, checkpoint, store, matchesDir,
+        Seq("doc_id", "band_id"), keep = col("est_jaccard") >= lit(minEst))(
+      batch => Dedup.bandSigRows(batch, k, bands, n)
+        .withColumn("band_part",
+          pmod(xxhash64(col("band_key")), lit(bandParts)).cast("int")),
+      // zip_with is positionally symmetric, so the estimate does not
+      // depend on which side is the newer doc
+      CandidateJoin.symmetric(Seq("band_id", "band_key"), "doc_id",
+        "doc_a", "doc_b")((l, r) =>
+        Dedup.sigAgreement(k, s"$l.sig", s"$r.sig").as("est_jaccard")))
   }
 
   /** All scored pairs emitted so far, deduplicated (idempotent-append
-    * contract; estimates are deterministic, so replayed re-emissions are
-    * bit-identical rows). Same shape as
-    * [[Dedup.minhashJaccardEstimate]]. */
+    * contract). Same shape as [[Dedup.minhashJaccardEstimate]]. */
   def matches(spark: org.apache.spark.sql.SparkSession,
               matchesDir: String): DataFrame =
     spark.read.parquet(matchesDir)

@@ -1,66 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
 
-/** STREAMING MinHash+LSH near-duplicate detection — the fifth at-ingest
-  * dedup modality, and the one that bounds set-level JACCARD similarity:
-  * [[NearDupStream]] (SimHash) bounds Hamming distance on a token-hash
-  * projection, [[SubstrDedupStream]] exact substrings,
-  * [[EmbedDupStream]] embedding cosine, [[EditDistStream]] bounded
-  * Levenshtein on prefixes. MinHash banding is the classic shingle-set
-  * resemblance detector (Broder '97; the reference pipeline's curation
-  * layer motivates it the same way the batch operator
-  * [[Dedup.minhashCandidatePairs]] does), and a crawl wants it AT THE
-  * DOOR: token-reordered or lightly-edited reposts agree on an LSH band
-  * long after SimHash's bit budget blurs.
+/** STREAMING MinHash+LSH near-duplicate detection on the
+  * [[CandidateJoin]] skeleton — the modality that bounds set-level
+  * JACCARD resemblance (Broder '97): token-reordered or lightly edited
+  * reposts agree on an LSH band long after SimHash's bit budget blurs.
+  * The batch's band rows are the SAME band keys as the oracle-checked
+  * [[Dedup.minhashCandidatePairs]] (shingle → k min-hashes → `bands` md5
+  * band keys), so the streamed candidates equal the batch operator's.
   *
-  * Shape per microbatch (`foreachBatch`, serialized), on the shared
-  * [[Streams.SideStore]] skeleton:
-  *  1. the batch's band rows come from the SAME oracle-checked batch
-  *     pipeline ([[Dedup.bandRows]]: shingle → k min-hashes → `bands`
-  *     md5 band keys, already localCheckpoint'ed because three consumers
-  *     read it);
-  *  2. within-batch candidates: the band self-join, bit-identical to
-  *     [[Dedup.minhashCandidatePairs]] by construction;
-  *  3. cross-batch candidates: the batch's bands equi-join the
-  *     accumulated band store on `(band_id, band_key)` — the store is
-  *     `band_part`-partitioned (≤[[BandParts]] dirs, a hash of the band
-  *     key) and the read is pruned to the batch's own distinct parts
-  *     (bounded collect), so a batch touches only the store slices its
-  *     bands can possibly match, never the full history;
-  *  4. the batch's bands append AFTER the lookup, clustered on the
-  *     partition key.
-  *
-  * Replay safety of the EMITTED matches needs no lineage guard — the
-  * [[NearDupStream]] argument: a batch that crashed after its store
-  * append replays against its own band rows, but `least/greatest`
-  * normalization plus the `doc_id` inequality mean those joins can only
-  * re-produce pairs the intra-batch join already emits — duplicate ROWS,
-  * never wrong ones — and [[matches]]' distinct absorbs them. The STORE,
-  * though, would grow by one copy of the batch per crash-replay
-  * (round-11 advice): rows are therefore stamped `(lineage, batch_id)`
-  * and appended through the shared guard
-  * ([[Streams.SideStore.appendBatchOnce]]) — a `.__applied` sidecar
-  * skips a completed append's replay with zero store IO, and a crash
-  * inside the append window is repaired by an anti-join that appends
-  * exactly the missing remainder (a PARTIAL job commit must not be
-  * mistaken for a full one — skipping would lose rows forever).
-  * Retention (`retainBatches`) bounds the store to a sliding
-  * horizon via the crash-safe [[Streams.rewriteStore]] swap. A format
-  * marker stamps `(k, bands, n)`: band keys hash `k/bands`-minhash
-  * slices of `n`-shingles, so probing a store built with any other
-  * geometry would silently never match — a mismatched restart fails
-  * fast instead.
-  *
-  * 100 TB shape: everything that moves is (long doc_id, int band_id,
-  * 32-char band_key) rows — `bands` per document, independent of
-  * document size; the joins are hash equi-joins on those keys; nothing
-  * all-pairs ever forms (the quadratic blowup is confined to true
-  * same-band cliques, which is the answer's own size). */
+  * The store holds `(doc_id, band_id, band_key)` rows, `band_part`-
+  * partitioned by a hash of the band key (`bandParts` directories) and
+  * read pruned to the batch's own parts. The format marker stamps
+  * `(k, bands, n, parts)`: probing a store of any other geometry would
+  * silently never match. Everything that moves is (long, int, 32-char
+  * key) rows — `bands` per document, independent of document size. */
 object MinHashDupStream {
 
   private val LegacyBandParts = 64
@@ -72,74 +31,29 @@ object MinHashDupStream {
     * candidate rows to `matchesDir` and maintains the band store at
     * `stateDir`. `docs` must be a streaming DataFrame with
     * (doc_id: long, text: string). `bandParts` pins the store's
-    * partition count at creation (format-marked; pre-round-14 markers
-    * carried no count — those stores were all written 64-way and adopt
-    * as such, any other configured count fails fast): a full-history
-    * deployment (`retainBatches = 0`) inherits the fp store's
-    * can-never-prune shape, so size the slices for the corpus ceiling
-    * rather than living with the old hard 64. */
+    * partition count at creation (format-marked; markers written before
+    * the count was recorded adopt as 64-way, any other configured count
+    * fails fast): a full-history deployment (`retainBatches = 0`) never
+    * prunes, so size the slices for the corpus ceiling. */
   def start(docs: DataFrame, stateDir: String, matchesDir: String,
             checkpoint: String, k: Int = 16, bands: Int = 4, n: Int = 3,
             retainBatches: Int = 0, pruneEvery: Int = 0,
             bandParts: Int = LegacyBandParts): StreamingQuery = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     require(bandParts > 0, "bandParts must be positive")
-    val legacyTag = s"minhash-lsh/k=$k/bands=$bands/n=$n"
     val store = new Streams.SideStore(stateDir, "band_part",
       formatTag(k, bands, n, bandParts), "MinHashDupStream",
       retainBatches, pruneEvery,
-      checkFormat = (_, fs) => Streams.checkStoreFormatUpgrade(fs,
-        stateDir, formatTag(k, bands, n, bandParts), legacyTag,
-        bandParts == LegacyBandParts, "MinHashDupStream"))
-    val lineage = Streams.lineageId(
-      docs.sparkSession.sparkContext.hadoopConfiguration, checkpoint)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = store.ensureReady(spark)
-        val rows = Dedup.bandRows(batch, k, bands, n)
-          .withColumn("band_part",
-            pmod(xxhash64(col("band_key")), lit(bandParts)).cast("int"))
-        val a = rows.alias("a")
-        val b = rows.hint("shuffle_hash").alias("b")
-        val intra = a.join(b,
-            col("a.band_id") === col("b.band_id") &&
-              col("a.band_key") === col("b.band_key") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            col("a.band_id"))
-        val cross = (if (store.exists(fs)) Some(()) else None)
-          .map { _ =>
-            // bounded collect: ≤ BandParts distinct partition values
-            val parts = rows.select("band_part").distinct()
-              .collect().map(_.getInt(0)).toIndexedSeq
-            rows.alias("n").join(store.prunedRead(spark, parts).alias("p"),
-                col("n.band_id") === col("p.band_id") &&
-                  col("n.band_key") === col("p.band_key") &&
-                  col("n.doc_id") =!= col("p.doc_id"))
-              .select(least(col("n.doc_id"), col("p.doc_id")).as("doc_a"),
-                greatest(col("n.doc_id"), col("p.doc_id")).as("doc_b"),
-                col("n.band_id"))
-          }
-        cross.fold(intra)(intra.unionByName(_))
-          .distinct()
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode(SaveMode.Append).parquet(matchesDir)
-        // grow the store AFTER the lookup so a doc never matches itself;
-        // the shared crash-replay guard skips a replayed batch's
-        // re-append — or completes a PARTIAL commit's missing remainder —
-        // via the .__applied sidecar + (lineage, batch) anti-join
-        store.appendBatchOnce(spark,
-          rows.withColumn("__lineage", lit(lineage)), lineage, batchId,
-          Seq("doc_id", "band_id", "band_key"))
-        store.pruneIfDue(spark, batchId)
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(rows)
-          .foreach(_.unpersist(false))
-        ()
-      }
-      .start()
+      checkFormat = Streams.SideStore.upgradeFrom(
+        s"minhash-lsh/k=$k/bands=$bands/n=$n", bandParts == LegacyBandParts))
+    CandidateJoin.start(docs, checkpoint, store, matchesDir,
+        Seq("doc_id", "band_id", "band_key"))(
+      batch => Dedup.bandSigRows(batch, k, bands, n)
+        .select(col("doc_id"), col("band_id"), col("band_key"))
+        .withColumn("band_part",
+          pmod(xxhash64(col("band_key")), lit(bandParts)).cast("int")),
+      CandidateJoin.symmetric(Seq("band_id", "band_key"), "doc_id",
+        "doc_a", "doc_b")((l, _) => col(s"$l.band_id")))
   }
 
   /** All candidate pairs emitted so far, deduplicated (idempotent-append

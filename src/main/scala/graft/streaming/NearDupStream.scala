@@ -1,122 +1,58 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
 
-/** STREAMING near-duplicate detection: as documents arrive, each is checked
-  * against every document seen so far and matches are emitted continuously
-  * — the ingest-time guard a training pipeline runs so near-dups are caught
-  * when a crawl lands, not in a nightly batch over the whole corpus.
+/** STREAMING SimHash near-duplicate detection on the [[CandidateJoin]]
+  * skeleton: each arriving document is checked against every document
+  * seen so far, with the SAME signature and pigeonhole bands as the
+  * oracle-checked [[Dedup.simhashNearDups]] (4 bands per doc), and
+  * `(doc_a, doc_b, hamming)` rows within `maxHamming` are emitted.
   *
-  * Shape: per microbatch, (1) the batch's SimHash signatures are computed
-  * with the SAME oracle-checked batch operator as [[Dedup.simhashNearDups]]
-  * — one signature per doc, 4 pigeonhole byte-bands; (2) within-batch pairs
-  * come from the batch band self-join; (3) cross-batch pairs come from an
-  * equi-join of the batch's bands against the ACCUMULATED signature store —
-  * a parquet table holding (doc_id, simhash, band rows), ~40 bytes/doc;
-  * (4) the batch's bands are appended to the store. Everything runs inside
-  * `foreachBatch`, so append, lookup, and pruning are serialized by the
-  * streaming engine.
-  *
-  * Scale notes: the state store is band-keyed 8-byte rows laid out as a
-  * `band_part`-PARTITIONED parquet table (≤256 partitions — band_byte
-  * itself in the 8-bit form, its high byte in the 16-bit `wide` form),
-  * and the cross-batch lookup filters the store to the batch's own
-  * distinct `band_part` values before the join — static partition
-  * pruning, so a small batch reads only the store slices its bands can
-  * possibly match, never the full history. The join itself is band-on-band equi (never
-  * all-pairs). State retention: with `retainBatches > 0` the store is
-  * periodically REWRITTEN (every `pruneEvery` batches, crash-safe
-  * [[Streams.rewriteStore]] swap) keeping only the last `retainBatches`
-  * batches of band rows — near-dups are then detected within that horizon
-  * (the compacted-changelog retention contract) and the store stays
-  * O(docs-per-horizon) instead of growing with the corpus forever;
-  * `retainBatches = 0` keeps ALL history. A batch retry after a sink
-  * failure re-emits the same `__batch_id` match rows; readers of
-  * `matchesDir` dedupe on (doc_a, doc_b) — both halves of the standard
-  * idempotent-append contract (replay CORRECTNESS needs no batch-id guard
-  * here: the cross-batch join's `doc_id =!=` bound means a replayed
-  * batch's own store rows only produce duplicate PAIRS, which the
-  * reader's distinct absorbs — unlike the gram store, where
-  * [[SubstrDedupStream]] needs its lineage-scoped exclusion; the STORE
-  * append itself is guarded by the shared
-  * [[Streams.SideStore.appendBatchOnce]] since round 12, so replays no
-  * longer bloat it either). Batch ids
-  * are checkpoint-scoped: adopting an existing store under a FRESH
-  * checkpoint keeps its matches and signatures, but a retention rewrite
-  * then compares adopted rows' old ids against the new lineage's — run
-  * adoption without retention, or accept that the first prune ages
-  * adopted rows by id. */
+  * The store holds `(doc_id, simhash, band_id, band_byte)` rows,
+  * `band_part`-partitioned (≤256 directories: band_byte itself in the
+  * 8-bit form, its high byte in the 16-bit `wide` form), and the
+  * cross-batch read is pruned to the batch's own `band_part` values.
+  * Batch ids are checkpoint-scoped: adopting a store under a FRESH
+  * checkpoint keeps its history, but a retention rewrite then ages the
+  * adopted rows by their old ids. */
 object NearDupStream {
 
-  /** Store-format tag: names the signature/band layout so a restart with a
-    * mismatched `wide` flag (64-bit signatures banded into 16-bit keys vs
-    * 32-bit/8-bit) fails fast instead of silently joining incompatible
-    * band keys against the accumulated store. */
+  /** Names the signature/band layout, so a restart with a mismatched
+    * `wide` flag fails fast instead of joining incompatible band keys. */
   private def formatTag(wide: Boolean): String =
     if (wide) "simhash64/band16" else "simhash32/band8"
 
-  /** Validate (or stamp) the signature store's format marker. The marker
-    * lives BESIDE the store (`<stateDir>.__format`) — [[Streams.rewriteStore]]
-    * replaces the live directory wholesale during retention pruning, so a
-    * file inside it would not survive the swap. Three cases:
-    *   - marker present: must equal this query's format, else fail fast
-    *     (resuming `wide = true` against an 8-bit store — or vice versa —
-    *     would join 16-bit band keys against 8-bit ones and silently emit
-    *     garbage matches);
-    *   - no marker but the store exists (pre-marker store): infer the
-    *     layout from the data — a store without the `band_part` partition
-    *     column is the legacy band_byte-partitioned layout (unreadable by
-    *     the pruned-read path: `col("band_part")` would throw
-    *     AnalysisException mid-stream) → fail fast with a migration
-    *     message; a `band_part` store is probed for the wide/narrow
-    *     relation (8-bit: band_part == band_byte; 16-bit:
-    *     band_part == band_byte >> 8) and the marker is stamped once the
-    *     probe passes;
-    *   - fresh store: stamp the marker before the first append. */
+  private def bandPart(wide: Boolean) =
+    if (wide) shiftright(col("band_byte"), 8) else col("band_byte")
+
+  /** The shared marker check, preceded by layout inference for a store
+    * written before markers existed: one without `band_part` is the
+    * legacy band_byte layout (fail fast with a migration hint); one whose
+    * band_part/band_byte relation is the other width fails fast;
+    * otherwise the marker is stamped. */
   private def checkStoreFormat(spark: org.apache.spark.sql.SparkSession,
                                fs: org.apache.hadoop.fs.FileSystem,
                                stateDir: String, wide: Boolean): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(stateDir + ".__format")
-    val live = new org.apache.hadoop.fs.Path(stateDir)
-    val expected = formatTag(wide)
-    def stamp(): Unit = {
-      val out = fs.create(marker, true)
-      try out.write(expected.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val actual =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (actual != expected) throw new IllegalStateException(
-        s"NearDupStream state store at $stateDir was written with format " +
-          s"'$actual' but this query is configured for '$expected' " +
-          s"(wide = $wide). The signature widths and band keys are " +
-          "incompatible; point the query at a fresh stateDir or restart " +
-          "with the store's wide flag.")
-    } else if (fs.exists(live)) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(stateDir + ".__format")) &&
+        fs.exists(new org.apache.hadoop.fs.Path(stateDir))) {
       val prior = spark.read.parquet(stateDir)
       if (!prior.columns.contains("band_part")) throw new IllegalStateException(
-        s"NearDupStream state store at $stateDir uses the legacy " +
-          "band_byte partition layout (no band_part column); the pruned " +
-          "cross-batch read cannot use it. Migrate it once with " +
-          "Streams.rewriteStore(spark, stateDir, Seq(\"band_part\"))" +
-          "(_.withColumn(\"band_part\", col(\"band_byte\"))) — 8-bit " +
-          "stores only — or start a fresh stateDir.")
-      val rel = if (wide) shiftright(col("band_byte"), 8) else col("band_byte")
-      if (!prior.filter(col("band_part") =!= rel).isEmpty)
+        s"NearDupStream state store at $stateDir uses the legacy band_byte " +
+          "layout (no band_part column). Migrate an 8-bit store once with " +
+          "Streams.rewriteStore, adding band_part = band_byte, or start a " +
+          "fresh stateDir.")
+      if (!prior.filter(col("band_part") =!= bandPart(wide)).isEmpty)
         throw new IllegalStateException(
           s"NearDupStream state store at $stateDir does not match the " +
-            s"configured format '$expected' (wide = $wide): its " +
-            "band_part/band_byte relation is the other signature width. " +
-            "Point the query at a fresh stateDir or flip the wide flag.")
-      stamp()
-    } else stamp()
+            s"configured format '${formatTag(wide)}' (wide = $wide): its " +
+            "band_part/band_byte relation is the other signature width.")
+      Streams.stampStoreFormat(fs, stateDir, formatTag(wide))
+    }
+    Streams.checkStoreFormat(fs, stateDir, formatTag(wide), "NearDupStream")
   }
 
   /** Start the detector: emits (doc_a, doc_b, hamming) rows to
@@ -124,108 +60,27 @@ object NearDupStream {
     * `stateDir`. `docs` must be a streaming DataFrame with
     * (doc_id: long, text: string). `retainBatches` bounds the dedup
     * horizon (0 = unbounded); `pruneEvery` sets how often the retention
-    * rewrite runs (default: every `retainBatches` batches — each rewrite
-    * is O(store) so it should amortize over the horizon, not run per
-    * batch). `wide = true` switches to the 64-bit / 16-bit-band signature
-    * ([[Dedup.simhashWideNearDups]]'s scale path — 65,536 buckets per
-    * band instead of 256, the same knee-removal as batch); the store then
-    * partitions on the band key's HIGH byte (`band_byte >> 8`, still ≤256
-    * directories — 65k band_byte partitions would be a small-files
-    * problem) and pruning filters that coarser key, so a pruned read
-    * still touches at most the batch's 256 high-byte slices. */
+    * rewrite runs (default: every `retainBatches` batches). `wide = true`
+    * switches to the 64-bit / 16-bit-band signature
+    * ([[Dedup.simhashWideNearDups]]'s scale path); the store then
+    * partitions on the band key's high byte. */
   def start(docs: DataFrame, stateDir: String, matchesDir: String,
             checkpoint: String, maxHamming: Int = 3,
             retainBatches: Int = 0, pruneEvery: Int = 0,
             wide: Boolean = false): StreamingQuery = {
-    // shared skeleton, with THIS stream's custom format check (pre-marker
-    // stores need layout inference; the marker check alone won't do)
     val store = new Streams.SideStore(stateDir, "band_part",
       formatTag(wide), "NearDupStream", retainBatches, pruneEvery,
-      checkFormat = (spark, fs) => checkStoreFormat(spark, fs, stateDir, wide))
-    val lineage = Streams.lineageId(
-      docs.sparkSession.sparkContext.hadoopConfiguration, checkpoint)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // one signature pipeline per batch, shared by all three uses
-        // below; band_part is the store partition key — identical to
-        // band_byte in the 8-bit form, its high byte in the 16-bit form
-        val bands = (if (wide)
-            Dedup.simhashBandsN(Dedup.simhashWide(batch), 16)
+      checkFormat = (spark, fs, _) =>
+        checkStoreFormat(spark, fs, stateDir, wide))
+    CandidateJoin.start(docs, checkpoint, store, matchesDir,
+        Seq("doc_id", "band_id"), keep = col("hamming") <= maxHamming)(
+      batch => (if (wide) Dedup.simhashBandsN(Dedup.simhashWide(batch), 16)
           else Dedup.simhashBands(Dedup.simhash(batch)))
-          .withColumn("band_part",
-            if (wide) shiftright(col("band_byte"), 8) else col("band_byte"))
-          .localCheckpoint(false)
-        // (2) within-batch pairs
-        val a = bands.alias("a")
-        val b = bands.hint("shuffle_hash").alias("b")
-        val intra = a.join(b,
-            col("a.band_id") === col("b.band_id") &&
-              col("a.band_byte") === col("b.band_byte") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-              .as("hamming"))
-        // (3) cross-batch pairs vs the accumulated store (absent on the
-        // very first batch). Explicit existence check — a blanket
-        // Try/recover would also swallow REAL read failures (corrupt
-        // footer, permissions) as "no prior state" and silently skip
-        // cross-batch detection for the batch. An interrupted retention
-        // swap is restored by ensureReady, same as the upsert store.
-        val stateFs = store.ensureReady(spark)
-        val cross = (if (store.exists(stateFs)) Some(()) else None)
-          .map { _ =>
-            // prune the partitioned store to the batch's own band_part
-            // values: ≤256 distinct parts (a bounded collect), and every
-            // store partition outside that set cannot match — the read
-            // touches only the pruned slices
-            val batchParts = bands.select("band_part").distinct()
-              .collect().map(_.getInt(0)).toIndexedSeq
-            bands.alias("n").join(
-                store.prunedRead(spark, batchParts).alias("p"),
-                col("n.band_id") === col("p.band_id") &&
-                  col("n.band_byte") === col("p.band_byte") &&
-                  col("n.doc_id") =!= col("p.doc_id"))
-              .select(
-                least(col("n.doc_id"), col("p.doc_id")).as("doc_a"),
-                greatest(col("n.doc_id"), col("p.doc_id")).as("doc_b"),
-                bit_count(col("n.simhash").bitwiseXOR(col("p.simhash")))
-                  .as("hamming"))
-          }
-        val matches = cross.fold(intra)(intra.union(_))
-          .distinct()
-          .filter(col("hamming") <= maxHamming)
-          .withColumn("__batch_id", lit(batchId))
-        matches.write.mode(SaveMode.Append).parquet(matchesDir)
-        // (4) grow the store AFTER the lookup so a doc never matches itself.
-        // The clustered append matters: without it every write task
-        // touches every band_part dir — up to tasks×256 ~2 KB files PER
-        // BATCH, and the cross-batch read becomes file-OPEN bound, not
-        // data bound (measured: 124k files for a 225 MB store at 500k
-        // docs, with per-batch latency growing 2× over 20 batches mostly
-        // on listing/footer costs). One extra shuffle of 8-byte hash rows
-        // buys ≤1 file per touched dir per batch. Retention runs AFTER
-        // this batch's append, inside the same foreachBatch —
-        // single-writer, crash-safe swap. Rows carry the checkpoint
-        // lineage so the shared crash-replay guard can skip (or
-        // remainder-complete) a replayed batch's append — pre-upgrade
-        // store files read the column as null and the guard no-ops,
-        // so adoption needs no migration.
-        store.appendBatchOnce(spark,
-          bands.withColumn("__lineage", lit(lineage)), lineage, batchId,
-          Seq("doc_id", "band_id"))
-        store.pruneIfDue(spark, batchId)
-        // free the per-batch checkpoint's cached blocks NOW —
-        // Dataset.unpersist() never reaches a localCheckpoint RDD, and
-        // leaving it to the ContextCleaner accumulates one band-table copy
-        // per microbatch on a long-running stream
-        org.apache.spark.sql.GraftColumnBridge.checkpointRdd(bands)
-          .foreach(_.unpersist(false))
-        ()
-      }
-      .start()
+        .withColumn("band_part", bandPart(wide)),
+      CandidateJoin.symmetric(Seq("band_id", "band_byte"), "doc_id",
+        "doc_a", "doc_b")((l, r) =>
+        bit_count(col(s"$l.simhash").bitwiseXOR(col(s"$r.simhash")))
+          .as("hamming")))
   }
 
   /** All matches emitted so far, deduplicated (idempotent-append

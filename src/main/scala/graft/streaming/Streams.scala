@@ -560,11 +560,16 @@ object Streams {
     } else if (fs.exists(live)) throw new IllegalStateException(
       s"Directory $stateDir exists but carries no $storeKind format " +
         "marker — refusing to treat it as a store.")
-    else {
-      val out = fs.create(marker, true)
-      try out.write(expected.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    else stampStoreFormat(fs, stateDir, expected)
+  }
+
+  /** Write (or overwrite) a store's `<stateDir>.__format` marker. */
+  def stampStoreFormat(fs: org.apache.hadoop.fs.FileSystem,
+                       stateDir: String, tag: String): Unit = {
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(stateDir + ".__format"), true)
+    try out.write(tag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** [[checkStoreFormat]] with a LEGACY-TAG upgrade path: a marker
@@ -578,13 +583,9 @@ object Streams {
                               stateDir: String, expected: String,
                               legacy: String, legacyAdoptable: Boolean,
                               storeKind: String): Unit =
-    if (legacyAdoptable && readStoreFormat(fs, stateDir).contains(legacy)) {
-      val marker = new org.apache.hadoop.fs.Path(stateDir + ".__format")
-      val out = fs.create(marker, true)
-      try out.write(
-        expected.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } else checkStoreFormat(fs, stateDir, expected, storeKind)
+    if (legacyAdoptable && readStoreFormat(fs, stateDir).contains(legacy))
+      stampStoreFormat(fs, stateDir, expected)
+    else checkStoreFormat(fs, stateDir, expected, storeKind)
 
   /** A maintained view's backing store has not received its FIRST commit
     * yet (no directory, no marker) — the one build failure a view
@@ -608,31 +609,28 @@ object Streams {
     }
   }
 
-  /** The shared at-ingest side-store skeleton — ONE implementation of
-    * the contract the five streaming dedup modalities
-    * ([[NearDupStream]], [[SubstrDedupStream]], [[EmbedDupStream]],
-    * [[EditDistStream]], [[MinHashDupStream]]) each proved separately
-    * and used to hand-roll: per microbatch, (1) recover an interrupted
-    * retention swap and (once per query start) check the store's
-    * geometry marker; (2) read the store pruned to the batch's own
-    * partition values (bounded collect upstream — the caller computes
-    * the parts); (3) append the batch's rows AFTER the lookup, clustered
-    * on the partition key; (4) every `pruneEvery` batches, rewrite the
-    * store keeping the last `retainBatches` batches (crash-safe
-    * [[rewriteStore]] swap). The sixth modality is configuration of this
-    * class, not another copy.
+  /** The shared at-ingest side store: per microbatch, (1) recover an
+    * interrupted retention swap and (once per query start) check the
+    * store's geometry marker; (2) read the store pruned to the batch's
+    * own partition values (the caller computes the parts); (3) append the
+    * batch's rows AFTER the lookup, clustered on the partition key;
+    * (4) every `pruneEvery` batches, rewrite the store keeping the last
+    * `retainBatches` batches (crash-safe [[rewriteStore]] swap). The
+    * per-batch loop around it is [[CandidateJoin]] for the pair-emitting
+    * dedup streams; [[SubstrDedupStream]] and [[IngestGuard]] drive it
+    * directly.
     *
-    * `checkFormat` defaults to the shared [[checkStoreFormat]] marker
-    * protocol; [[NearDupStream]] overrides it (its pre-marker stores
-    * need layout inference). `sortCols` orders rows within each written
-    * file (see [[appendPartitioned]]) so probes with pushed point
-    * predicates prune below the partition. Instances are single-writer
-    * per-query objects, like the foreachBatch loops that own them. */
-  final class SideStore(val stateDir: String, partCol: String,
-                        formatTag: String, storeKind: String,
+    * `checkFormat` runs once per query start, before the first read or
+    * append; it defaults to the shared [[checkStoreFormat]] marker
+    * protocol. `sortCols` orders rows within each written file (see
+    * [[appendPartitioned]]) so probes with pushed point predicates prune
+    * below the partition. Instances are single-writer per-query objects,
+    * like the foreachBatch loops that own them. */
+  final class SideStore(val stateDir: String, val partCol: String,
+                        val formatTag: String, val storeKind: String,
                         retainBatches: Int, pruneEvery: Int,
-                        checkFormat: (SparkSession,
-                          org.apache.hadoop.fs.FileSystem) => Unit = null,
+                        checkFormat: SideStore.FormatCheck =
+                          SideStore.markerCheck,
                         sortCols: Seq[String] = Nil) {
     require(retainBatches >= 0 && pruneEvery >= 0,
       "retainBatches/pruneEvery must be >= 0")
@@ -649,8 +647,7 @@ object Streams {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       recoverCompaction(fs, stateDir)
       if (!formatChecked) {
-        if (checkFormat != null) checkFormat(spark, fs)
-        else checkStoreFormat(fs, stateDir, formatTag, storeKind)
+        checkFormat(spark, fs, this)
         formatChecked = true
       }
       fs
@@ -830,6 +827,21 @@ object Streams {
           _.filter(col("__batch_id") > batchId - retainBatches))
         true
       } else false
+  }
+
+  object SideStore {
+    type FormatCheck =
+      (SparkSession, org.apache.hadoop.fs.FileSystem, SideStore) => Unit
+
+    /** The shared [[checkStoreFormat]] marker protocol. */
+    val markerCheck: FormatCheck = (_, fs, st) =>
+      checkStoreFormat(fs, st.stateDir, st.formatTag, st.storeKind)
+
+    /** [[checkStoreFormatUpgrade]]: a `legacy` marker adopts in place
+      * when `adoptable`, for stores whose tag grew a geometry field. */
+    def upgradeFrom(legacy: String, adoptable: Boolean): FormatCheck =
+      (_, fs, st) => checkStoreFormatUpgrade(fs, st.stateDir, st.formatTag,
+        legacy, adoptable, st.storeKind)
   }
 
   /** Exactly-once fold for ADDITIVE view stores (histogram counts, HLL

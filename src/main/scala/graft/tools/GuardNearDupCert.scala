@@ -13,7 +13,7 @@ import graft.streaming.IngestGuard
   * in rounds 8-13; round-14 certified the dedup-lattice composition;
   * round-15 adds the QUOTA fold and the `minEst` signature-agreement
   * threshold, so every decision stage of the guard runs composed) — the
-  * expected-answer-first protocol of [[MinHashDupBench]] and siblings:
+  * expected-answer-first protocol of [[DupStreamBench]]:
   *
   *  1. `expectedOnly=1` computes the ORACLE — a sequential fold over the
   *     same slices using the BATCH operators ([[Dedup.bandSigRows]],
