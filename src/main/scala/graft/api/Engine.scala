@@ -1,10 +1,12 @@
 package graft.api
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat_ws}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Cdc, Relational}
 import graft.sinks.{BulkTransport, EsSink, FileBulkTransport}
@@ -23,7 +25,8 @@ import graft.streaming.Streams
   *
   * @param connectorDataDir root under which a source connector's per-topic
   *        "binlog" directories live (the file-stream analog of the Debezium
-  *        connection; each parquet file appended there is a microbatch)
+  *        connection; parquet files appended there are read in microbatches
+  *        of up to one scan wave, see [[createSourceConnector]])
   * @param esTransport `connection.url` → bulk transport for sink
   *        connectors. No ES server exists in this container, so the default
   *        records `_bulk` payloads to a local spool dir ([[FileBulkTransport]]);
@@ -526,14 +529,31 @@ class Engine(val spark: SparkSession,
     * stream over it. A retention compaction running mid-push re-emits the
     * latest row per key (the compacted snapshot's files are new to the
     * reader) — benign under upsert semantics, the same refinement
-    * contract as ksqlDB's table push over a changelog topic. None for
-    * names that are not upsert tables; AnalysisException if the table has
-    * not received its first batch yet (no store to infer a schema from). */
+    * contract as ksqlDB's table push over a changelog topic. Like every
+    * file-backed topic ([[fileTopic]]) a trigger admits at most one scan
+    * wave of changelog files, so a reader attaching to a long changelog
+    * catches up in bounded batches. None for names that are not upsert
+    * tables; AnalysisException if the table has not received its first
+    * batch yet (no store to infer a schema from). */
   def changelogStream(name: String): Option[DataFrame] =
     upserts.find(_._1.equalsIgnoreCase(name)).map { case (_, (path, _)) =>
-      val schema = spark.read.parquet(path).schema
-      spark.readStream.schema(schema).parquet(path).drop("__batch_id")
+      fileTopic(spark.read.parquet(path).schema, path).drop("__batch_id")
     }
+
+  /** A file-backed topic: a parquet file stream over `dir` that admits up
+    * to one scan wave per trigger — `spark.sql.files.maxPartitionBytes ×
+    * defaultParallelism` bytes, read from the session when the topic is
+    * built. A backlog of small files drains in one microbatch, so the
+    * per-trigger costs (offset log, planning, state-store commit, sink
+    * requests) are paid once per wave rather than once per file; sparse
+    * arrivals still give one file per trigger, and a file larger than
+    * the bound is still admitted (alone). */
+  private def fileTopic(schema: StructType, dir: String): DataFrame = {
+    val wave = spark.sessionState.conf.filesMaxPartitionBytes *
+      spark.sparkContext.defaultParallelism
+    spark.readStream.schema(schema).option("maxBytesPerTrigger", wave)
+      .parquet(dir)
+  }
 
   /** CTAS with ES sink — the reference's sink-connector path. */
   def sinkToEs(name: String, df: DataFrame, index: String,
@@ -664,10 +684,12 @@ class Engine(val spark: SparkSession,
         }
         val withTs = tsField.fold(df)(f => EsSink.withExtractTs(df, f,
           eventTime = Some("kafka_ts").filter(df.columns.contains)))
-        // delete mode needs per-key action ordering; the topic's event
-        // order is the Kafka record timestamp or the CDC envelope's
-        // ts_ms (EsSink.writeBatch reduces to latest-per-key with it)
-        val orderCol = if (onNull.contains("delete"))
+        // a keyed sink needs per-key ordering: one microbatch can hold
+        // several images (or a delete) of a key, spread over partitions
+        // whose `_bulk` requests race. The topic's event order is the
+        // Kafka record timestamp or the CDC envelope's ts_ms
+        // (EsSink.writeBatch reduces to latest-per-key with it)
+        val orderCol = if (keyed)
           Seq("kafka_ts", "ts_ms").find(df.columns.contains) else None
         val qName = sanitize(s"${name}_$topic")
         register(qName)(EsSink.writeStream(withTs, topic.toLowerCase, idCol,
@@ -686,8 +708,11 @@ class Engine(val spark: SparkSession,
         // leaving them registered blocks the corrected retry with
         // "query already exists" and leaks running queries no connector
         // owns (round-8 review finding). Only the queries started HERE.
+        // A cleanup failure rides along on the create's error. Throwable,
+        // not NonFatal: nothing is swallowed, and a fatal error (e.g. a
+        // LinkageError while a sink starts) must release the name too.
         started.foreach { q =>
-          try terminate(q) catch { case _: Exception => () }
+          try terminate(q) catch { case NonFatal(t) => e.addSuppressed(t) }
         }
         connectors.remove(name)
         throw e
@@ -698,9 +723,13 @@ class Engine(val spark: SparkSession,
     * MySQL source (`ksqldb-statements.sql:19-38`). No binlog exists in this
     * container, so the analog is a FILE-STREAM source: for each whitelisted
     * table, the topic `<database.server.name>.<table>` is a streaming scan
-    * of CDC-envelope parquet under `connectorDataDir/<topic>` (each file
-    * appended = one microbatch — the same at-least-once append contract as
-    * a Debezium topic). The declared SMT chain is honored: `ExtractField$Key`
+    * of CDC-envelope parquet under `connectorDataDir/<topic>` — the same
+    * at-least-once append contract as a Debezium topic. A trigger admits
+    * every file that arrived since the last one, up to one scan wave
+    * (`spark.sql.files.maxPartitionBytes × defaultParallelism` bytes, and
+    * always at least one file), so a backlog drains in as few microbatches
+    * as the cluster can scan at once ([[fileTopic]]). The declared SMT
+    * chain is honored: `ExtractField$Key`
     * is the envelope's scalar `key` (T2), and `ExtractNewRecordState`
     * unwraps to after-image rows, dropping tombstones (T1,
     * `Cdc.unwrap` semantics). Set the SMT's
@@ -733,8 +762,7 @@ class Engine(val spark: SparkSession,
         val topic = s"$server.$table"
         val dir = java.nio.file.Paths.get(connectorDataDir, topic)
         java.nio.file.Files.createDirectories(dir)
-        val envelope = spark.readStream.schema(Engine.cdcEnvelopeSchema(spark))
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+        val envelope = fileTopic(Engine.cdcEnvelopeSchema(spark), dir.toString)
         // `offset` (Debezium source.pos — the binlog TOTAL order) rides
         // along: a delete-mode ES sink needs it to tie-break same-ts_ms
         // actions per key, and Connect consumers see partition offsets too

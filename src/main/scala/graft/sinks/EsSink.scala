@@ -163,27 +163,31 @@ object EsSink {
 
   /** Batch form of the sink (also the `foreachBatch` body).
     *
-    * PER-KEY ORDERING under delete mode: Kafka-Connect gets it from topic
-    * partitioning by key — every action for a key flows through one task
-    * in offset order. A Spark microbatch has no such guarantee: a create
-    * and a delete of the same key can land in DIFFERENT partitions, whose
-    * `_bulk` POSTs race, and the wrong winner resurrects (or falsely
-    * removes) the doc forever. With `orderCol` set (the topic's event
-    * order — CDC `ts_ms`, Kafka record timestamp), delete-mode batches
-    * first reduce to latest-action-per-key ([[graft.operators.Relational
-    * .latestByKey]] — one shuffle on the key), after which at most ONE
-    * action per key exists per microbatch and cross-partition order is
-    * moot; microbatches themselves are sequential. Without an order
-    * column the reduction is impossible (Spark rows carry no implicit
-    * order) — callers must guarantee per-key-single-partition batches. */
+    * PER-KEY ORDERING of keyed sinks: Kafka-Connect gets it from topic
+    * partitioning by key — every record for a key flows through one task
+    * in offset order. A Spark microbatch has no such guarantee: two
+    * images of a key, or a create and a delete, can land in DIFFERENT
+    * partitions, whose `_bulk` POSTs race, and the wrong winner leaves a
+    * stale doc (or resurrects / falsely removes it) forever. With `idCol`
+    * and `orderCol` set (the topic's event order — CDC `ts_ms`, Kafka
+    * record timestamp), a batch first reduces to the latest row per key
+    * ([[graft.operators.Relational.latestByKey]] — one shuffle on the
+    * key), after which at most ONE action per key exists per microbatch
+    * and cross-partition order is moot; microbatches themselves are
+    * sequential. In delete mode tombstones take part (a later delete
+    * wins over an earlier image, and vice versa); in the other modes a
+    * tombstone writes nothing, so the reduction runs over the doc rows
+    * and tombstones keep their own rule (ignore: skipped; fail: fail the
+    * batch). Without an order column the reduction is impossible (Spark
+    * rows carry no implicit order) — callers must guarantee
+    * per-key-single-partition batches. */
   def writeBatch(batch: DataFrame, index: String, idCol: Option[String],
                  transport: BulkTransport,
                  tombstoneCol: Option[String] = None,
                  onNull: String = "ignore",
                  orderCol: Option[String] = None): Unit = {
     val effective = (idCol, orderCol) match {
-      case (Some(id), Some(ord))
-          if onNull == "delete" && tombstoneCol.nonEmpty =>
+      case (Some(id), Some(ord)) =>
         // tie-break equal order values with the topic's total order when
         // it exists (CDC envelopes carry the binlog `offset`) — Connect
         // never ties because partition offsets are total; we shouldn't
@@ -193,10 +197,16 @@ object EsSink {
         // null-key rows are outside the reduction: Window.partitionBy
         // groups all nulls together and latest-per-key would silently
         // collapse N malformed auto-id docs into one — they keep their
-        // pre-reduction behavior (each renders/drops per the action rules)
+        // pre-reduction behavior (each renders/drops per the action
+        // rules), as do tombstones outside delete mode
+        val reduced = tombstoneCol match {
+          case Some(tc) if onNull != "delete" =>
+            col(id).isNotNull && col(tc).isNotNull
+          case _ => col(id).isNotNull
+        }
         graft.operators.Relational
-          .latestByKey(batch.filter(col(id).isNotNull), id, ordering: _*)
-          .unionByName(batch.filter(col(id).isNull))
+          .latestByKey(batch.filter(reduced), id, ordering: _*)
+          .unionByName(batch.filter(!reduced))
       case _ => batch
     }
     bulkLines(effective, index, idCol, tombstoneCol, onNull).foreachPartition {

@@ -81,7 +81,11 @@ object Streams {
   }
 
   /** File-based append stream over a fixture directory — the test/local
-    * stand-in for a topic: each new parquet file is a microbatch. */
+    * stand-in for a topic: each new parquet file is a microbatch. The
+    * one-file admission is deliberate: tests use this helper for
+    * deterministic batch boundaries. The engine's own file-backed topics
+    * admit a whole scan wave per trigger instead
+    * (`Engine.createSourceConnector`). */
   def fileEvents(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema(eventSchema)

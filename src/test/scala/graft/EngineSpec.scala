@@ -2,10 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.api.{Engine, ReferencePipeline}
+import graft.operators.{Cdc, Relational}
 import graft.sources.Tables
 
 /** End-to-end topology test: the reference's whole statement file running
@@ -303,6 +307,219 @@ class EngineSpec extends GraftSuite {
     assert(index("1").contains(""""n":2"""),
       s"refinement must overwrite the doc: ${index("1")}")
     assert(index("2").contains(""""n":1"""))
+  }
+
+  // ------------------------------------------------------------------- //
+  // Backlog admission of the connector's file-backed topic: a backlog
+  // that arrived between triggers drains in one scan wave, not one
+  // microbatch per file.
+  // ------------------------------------------------------------------- //
+
+  private val RatingsTopic = "asgard.demo.ratings"
+  private val RatingsTable = "ratings_backlog_15min"
+  private val WindowKeys = Seq("window_start", "full_name")
+  private val Digest = Seq("COUNT(*) AS n", "SUM(CAST(xxhash64(window_start, " +
+    "full_name, ratings_count, ratings) AS DECIMAL(38,0))) AS h")
+
+  /** Source-connector rows in the events shape the relational operators
+    * take. */
+  private def asEvents(topic: DataFrame): DataFrame = topic.select(
+    col("id").as("event_id"), timestamp_millis(col("ts_ms")).as("ts"),
+    col("user_id"), col("event_type"), col("value"), col("props"))
+
+  private def windowed(topic: DataFrame): DataFrame =
+    Relational.ratingsPerCustomerPer15Min(Relational.enriched(
+      Relational.eventsLive(asEvents(topic)), Tables.customer(spark, sf)))
+
+  /** The events fixture as CDC envelopes, one parquet file per
+    * `offset % 3`, all written before any query starts. Returns the
+    * topic directory's parquet files. */
+  private def writeBacklog(dataDir: String): Seq[java.io.File] = {
+    val topicDir = s"$dataDir/$RatingsTopic"
+    val envelope = Cdc.envelope(Tables.events(spark, sf))
+    (0 until 3).foreach { c =>
+      envelope.filter(pmod(col("offset"), lit(3)) === c).coalesce(1)
+        .write.mode("append").parquet(topicDir)
+    }
+    new java.io.File(topicDir).listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet"))
+  }
+
+  private def startSource(engine: Engine): Unit = {
+    engine.createSourceConnector("SOURCE_RATINGS", Map(
+      "connector.class" -> "io.debezium.connector.mysql.MySqlConnector",
+      "database.server.name" -> "asgard",
+      "table.whitelist" -> "demo.ratings",
+      "transforms" -> "unwrap",
+      "transforms.unwrap.type" ->
+        "io.debezium.transforms.ExtractNewRecordState"))
+    ()
+  }
+
+  private def startTable(engine: Engine, tableDir: String): StreamingQuery =
+    engine.createUpsertTableAs(RatingsTable,
+      windowed(engine.topicStream(RatingsTopic).get), WindowKeys, tableDir)
+
+  /** The EP2 shape over the connector's topic: a keyed ES sink (one doc
+    * per event id) and the 15-minute windowed upsert table. Returns every
+    * query it started, the table's last. */
+  private def startRatings(engine: Engine, tableDir: String): Seq[StreamingQuery] = {
+    val before = spark.streams.active.map(_.id).toSet
+    startSource(engine)
+    engine.registerTopic("ratings_keyed", engine.topicStream(RatingsTopic).get
+      .withColumn("key", col("id").cast("string")))
+    engine.createSinkConnector("SINK_ES_KEYED", Map(
+      "connector.class" ->
+        "io.confluent.connect.elasticsearch.ElasticsearchSinkConnector",
+      "topics" -> "ratings_keyed",
+      "connection.url" -> "http://elasticsearch:9200",
+      "key.ignore" -> "false"))
+    val sinks = spark.streams.active.filterNot(q => before(q.id)).toSeq
+    sinks :+ startTable(engine, tableDir)
+  }
+
+  /** (batch id, input rows) of every microbatch that read input. */
+  private def inputBatches(q: StreamingQuery): Seq[(Long, Long)] =
+    q.recentProgress.filter(_.numInputRows > 0)
+      .map(p => p.batchId -> p.numInputRows).toSeq.distinct
+
+  private def tableDigest(engine: Engine): Seq[Row] =
+    engine.pullQuery(s"SELECT ${Digest.mkString(", ")} FROM $RatingsTable")
+      .collect().toSeq
+
+  private def batchDigest(dataDir: String): Seq[Row] =
+    windowed(Cdc.unwrap(spark.read.schema(Engine.cdcEnvelopeSchema(spark))
+      .parquet(s"$dataDir/$RatingsTopic"))).selectExpr(Digest: _*)
+      .collect().toSeq
+
+  /** Event ids the keyed sink indexed, one entry per received doc. */
+  private def keyedIds(): Seq[Long] = {
+    val ids = Seq.newBuilder[Long]
+    OrderedBulkTransport.entries.forEach { e =>
+      ids += e.split(""""_id":"""")(1).takeWhile(_ != '"').toLong
+    }
+    ids.result().sorted
+  }
+
+  private def liveIds(): Seq[Long] = Cdc.envelope(Tables.events(spark, sf))
+    .filter(col("op") =!= "d").select("offset").as[Long].collect()
+    .toSeq.sorted
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("source connector drains a 3-file backlog in one microbatch per " +
+    "query; the bound follows maxPartitionBytes and admits an oversized " +
+    "file alone") {
+    def drainBacklog(): (Seq[java.io.File], Seq[Seq[(Long, Long)]]) = {
+      OrderedBulkTransport.clear()
+      val dataDir = tmpDir("graft-backlog-src")
+      val files = writeBacklog(dataDir)
+      val engine = new Engine(spark, connectorDataDir = dataDir,
+        esTransport = _ => new OrderedBulkTransport)
+      try {
+        val qs = startRatings(engine, tmpDir("graft-backlog-tab"))
+        assert(qs.size === 2)
+        engine.processAllAvailable()
+        assert(keyedIds() === liveIds(),
+          "the keyed sink must index every live doc exactly once")
+        assert(tableDigest(engine) === batchDigest(dataDir))
+        (files, qs.map(inputBatches))
+      } finally engine.terminateAll()
+    }
+
+    val (files, batches) = drainBacklog()
+    assert(files.size === 3)
+    batches.foreach { b =>
+      assert(b.size === 1, s"one scan wave must take the whole backlog: $b")
+    }
+
+    // a session bound below one file's size: every file exceeds the wave
+    // and is still admitted, alone
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    val wave = files.map(_.length).min / 2
+    spark.conf.set(key, math.max(1L, wave / spark.sparkContext.defaultParallelism))
+    val (_, small) = try drainBacklog()
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    small.foreach { b =>
+      assert(b.size === 3, s"each oversized file must be its own batch: $b")
+    }
+  }
+
+  test("a crashed multi-file batch replays the same files in one batch " +
+    "to the same table") {
+    val dataDir = tmpDir("graft-backlog-crash-src")
+    val tableDir = tmpDir("graft-backlog-crash-tab")
+    writeBacklog(dataDir)
+    val first = new Engine(spark, connectorDataDir = dataDir)
+    val (cleanBatches, clean) = try {
+      val table = startRatings(first, tableDir).last
+      first.processAllAvailable()
+      (inputBatches(table), tableDigest(first))
+    } finally first.terminateAll()
+    assert(cleanBatches.size === 1 && cleanBatches.head._1 === 0L,
+      s"the clean run must take the backlog as batch 0: $cleanBatches")
+
+    // the crash: batch 0's offsets are logged, its commit never landed
+    val fs = new Path(tableDir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(s"$tableDir/checkpoint/offsets/0")))
+    assert(fs.delete(new Path(s"$tableDir/checkpoint/commits/0"), false),
+      "batch 0 was not committed by the clean run")
+
+    val restarted = new Engine(spark, connectorDataDir = dataDir)
+    try {
+      startSource(restarted)
+      val q = startTable(restarted, tableDir)
+      restarted.processAllAvailable()
+      assert(inputBatches(q) === cleanBatches,
+        "the replay must re-read the same files as one batch")
+      assert(tableDigest(restarted) === clean)
+      assert(clean === batchDigest(dataDir))
+    } finally restarted.terminateAll()
+  }
+
+  test("a keyed sink over a 2-file backlog that updates one key in both " +
+    "files indexes only the newer image") {
+    OrderedBulkTransport.clear()
+    val engine = new Engine(spark,
+      connectorDataDir = tmpDir("graft-backlog-key-src"),
+      esTransport = _ => new OrderedBulkTransport)
+    try {
+      startSource(engine)
+      val cols = Seq("key", "id", "user_id", "event_type", "value", "ts_ms",
+        "offset")
+      // file 1 holds the older image of keys 7 and 8, file 2 the newer;
+      // key 8's two images share ts_ms, so the binlog offset decides
+      engine.insertInto(RatingsTopic, cols, Seq("7", 1L, 7L, "click", 1.0, 1000L, 1L))
+      engine.insertInto(RatingsTopic, cols, Seq("8", 3L, 8L, "click", 1.0, 3000L, 3L))
+      engine.insertInto(RatingsTopic, cols, Seq("7", 2L, 7L, "click", 5.0, 2000L, 2L))
+      engine.insertInto(RatingsTopic, cols, Seq("8", 4L, 8L, "click", 5.0, 3000L, 4L))
+      val before = spark.streams.active.map(_.id).toSet
+      engine.createSinkConnector("SINK_ES_RATINGS", Map(
+        "connector.class" ->
+          "io.confluent.connect.elasticsearch.ElasticsearchSinkConnector",
+        "topics" -> RatingsTopic,
+        "connection.url" -> "http://elasticsearch:9200",
+        "key.ignore" -> "false"))
+      val sink = spark.streams.active.filterNot(q => before(q.id)).head
+      engine.processAllAvailable()
+      assert(inputBatches(sink).map(_._1) === Seq(0L),
+        "the backlog must reach the sink as one batch")
+      val docs = Seq.newBuilder[(String, String)]
+      OrderedBulkTransport.entries.forEach { e =>
+        docs += e.split(""""_id":"""")(1).takeWhile(_ != '"') ->
+          e.split("\n", 2)(1)
+      }
+      val byId = docs.result().groupMap(_._1)(_._2)
+      assert(byId.keySet === Set("7", "8"))
+      byId.foreach { case (k, d) =>
+        assert(d.size === 1, s"key $k must go out once per batch: $d")
+        assert(d.head.contains(""""value":5.0"""),
+          s"key $k must keep its newer image: $d")
+      }
+    } finally engine.terminateAll()
   }
 }
 

@@ -187,6 +187,26 @@ class EsSinkSpec extends GraftSuite {
     assert(entries.exists(_.contains(""""name":"bob"""")))
   }
 
+  test("keyed batches outside delete mode reduce to the latest doc per " +
+    "key; an ignored tombstone does not hide the doc before it") {
+    val b = Seq(
+      ("1", Some("alice"), 1L), // doc @1 ...
+      ("1", Option.empty[String], 2L), // ... tombstone @2, ignored → alice
+      ("2", Some("bo"), 1L), // older image ...
+      ("2", Some("bob"), 2L)) // ... newer image → bob only
+      .toDF("key", "after", "ts_ms")
+      .withColumn("name", col("after"))
+      .repartition(4)
+    val dir = tmpDir("es-order-ignore-spool")
+    EsSink.writeBatch(b, "t", Some("key"), new FileBulkTransport(dir),
+      Some("after"), "ignore", Some("ts_ms"))
+    val docs = Files.list(Paths.get(dir)).iterator().asScala
+      .flatMap(p => Files.readAllLines(p).asScala)
+      .filterNot(_.startsWith("""{"index""")).toSeq
+    assert(docs.sorted === Seq("""{"key":"1","ts_ms":1,"name":"alice"}""",
+      """{"key":"2","ts_ms":2,"name":"bob"}"""), s"one latest doc per key: $docs")
+  }
+
   test("streaming CDC sink with delete behavior spools delete actions for " +
     "tombstoned keys") {
     implicit val sqlCtx = spark.sqlContext

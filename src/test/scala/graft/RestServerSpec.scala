@@ -227,7 +227,8 @@ class RestServerSpec extends GraftSuite {
       assert(sourceMysql.statusCode() === 200, sourceMysql.body())
 
       // the "binlog": CDC envelope files appended under the connector's
-      // topic directory (each file = one microbatch)
+      // topic directory (files that arrive together drain in one
+      // microbatch, up to one scan wave)
       graft.operators.Cdc.envelope(Tables.events(spark, sf))
         .write.mode("append").parquet(s"$dataDir/asgard.demo.customers")
 
