@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line on stdout AND written bare to
   * `SPARK_GRAFT_BENCH_OUT` (default /tmp/bench.json), so the driver's
@@ -181,12 +180,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench.json")
-    val spark = graft.sources.EngineConf.tuned(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
+    val spark = graft.sources.EngineConf.localSession("graft-bench")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

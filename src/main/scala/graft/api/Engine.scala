@@ -536,8 +536,13 @@ class Engine(val spark: SparkSession,
     * tables; AnalysisException if the table has not received its first
     * batch yet (no store to infer a schema from). */
   def changelogStream(name: String): Option[DataFrame] =
+    changelogFiles(name).map(_.drop("__batch_id"))
+
+  /** [[changelogStream]] with the store's `__batch_id` column: the order
+    * in which the table refined its keys. */
+  private def changelogFiles(name: String): Option[DataFrame] =
     upserts.find(_._1.equalsIgnoreCase(name)).map { case (_, (path, _)) =>
-      fileTopic(spark.read.parquet(path).schema, path).drop("__batch_id")
+      fileTopic(spark.read.parquet(path).schema, path)
     }
 
   /** A file-backed topic: a parquet file stream over `dir` that admits up
@@ -580,7 +585,7 @@ class Engine(val spark: SparkSession,
     * of that name (a MemoryStream view registered directly with Spark). */
   def topicStream(name: String): Option[DataFrame] =
     topics.get(name.toLowerCase)
-      .orElse(tableChangelogTopic(name))
+      .orElse(tableChangelogTopic(name).map(_.drop("__batch_id")))
       .orElse(
         try {
           val t = spark.table(name)
@@ -597,10 +602,11 @@ class Engine(val spark: SparkSession,
     * rendering — added as the `key` column the sink's keyed mode needs.
     * None for tables that have not received their first batch (no store
     * schema to infer yet — create the connector after data flows, as
-    * with a Kafka topic that doesn't exist yet). */
+    * with a Kafka topic that doesn't exist yet). Keeps the store's
+    * `__batch_id`, the refinement order a keyed sink reduces by. */
   private def tableChangelogTopic(name: String): Option[DataFrame] =
     upserts.find(_._1.equalsIgnoreCase(name)).flatMap { case (_, (_, keys)) =>
-      try changelogStream(name).map(_.withColumn("key",
+      try changelogFiles(name).map(_.withColumn("key",
         concat_ws("|+|", keys.map(k => col(k).cast("string")): _*)))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
@@ -665,8 +671,15 @@ class Engine(val spark: SparkSession,
           "key.ignore=false (a doc _id to delete by)")
     }
       val qNames = topicList.map { topic =>
-        val df = topicStream(topic).getOrElse(throw new IllegalArgumentException(
-          s"connector '$name': unknown topic '$topic'"))
+        // a keyed sink over an upsert table reads the table's changelog
+        // with its `__batch_id`, the order of the table's refinements
+        val changelog =
+          if (keyed && !topics.contains(topic.toLowerCase))
+            tableChangelogTopic(topic)
+          else None
+        val df = changelog.orElse(topicStream(topic)).getOrElse(
+          throw new IllegalArgumentException(
+            s"connector '$name': unknown topic '$topic'"))
         val idCol = if (keyed) {
           require(df.columns.contains("key"),
             s"connector '$name': key.ignore=false needs a 'key' column on " +
@@ -687,10 +700,13 @@ class Engine(val spark: SparkSession,
         // a keyed sink needs per-key ordering: one microbatch can hold
         // several images (or a delete) of a key, spread over partitions
         // whose `_bulk` requests race. The topic's event order is the
-        // Kafka record timestamp or the CDC envelope's ts_ms
-        // (EsSink.writeBatch reduces to latest-per-key with it)
-        val orderCol = if (keyed)
-          Seq("kafka_ts", "ts_ms").find(df.columns.contains) else None
+        // Kafka record timestamp or the CDC envelope's ts_ms, and a table
+        // changelog's is its batch id (EsSink.writeBatch reduces to
+        // latest-per-key with it)
+        val orderCol =
+          if (changelog.isDefined) Some("__batch_id")
+          else if (keyed) Seq("kafka_ts", "ts_ms").find(df.columns.contains)
+          else None
         val qName = sanitize(s"${name}_$topic")
         register(qName)(EsSink.writeStream(withTs, topic.toLowerCase, idCol,
           java.nio.file.Files.createTempDirectory(s"graft-ckpt-$qName").toString,

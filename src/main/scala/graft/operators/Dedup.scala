@@ -39,17 +39,6 @@ object Dedup {
       .agg(min(col("doc_id")).as("canonical_id"),
         count(lit(1)).as("n_dups"))
 
-  /** One row per (document, n-gram position) with both 60-bit md5 halves of
-    * the shingle ([[Hashing.hash64]]/[[Hashing.hash64Hi]] — one md5, CSE'd).
-    *
-    * Explode-first on purpose: generating shingles as an array via
-    * `transform(sequence(...), i -> toks[i] || ...)` looks natural but is a
-    * performance trap — higher-order lambdas are interpreted, and
-    * CollapseProject + filter pushdown inline `split(lower(text))` into
-    * every element access, re-tokenizing the document O(positions) times.
-    * Here tokenization is materialized once per document below the
-    * `Generate`, and every downstream expression (concat, md5, conv) is a
-    * codegen'd scalar — the whole stage stays in WholeStageCodegen. */
   /** Scan-parallelism floor for CPU-heavy per-document stages (tokenize +
     * md5-per-shingle): repartition by the downstream aggregation key ONLY
     * when the scan yields fewer partitions than the cluster's default
@@ -82,9 +71,10 @@ object Dedup {
     // and get the floor as usual.
     if (df.isStreaming) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (!scanParallelismBelow(df, p)) df
+    val scanBytes = fileScanBytes(df)
+    if (!scanParallelismBelow(df, p, scanBytes)) df
     else {
-      val parts = fileScanBytes(df)
+      val parts = scanBytes
         .map(b => math.min(p.toLong,
           math.max(1L, (b + bytesPerTask - 1) / bytesPerTask)).toInt)
         .getOrElse(p)
@@ -92,24 +82,6 @@ object Dedup {
     }
   }
 
-  /** Would `df`'s scan give fewer than `p` partitions? — the spreadByKey /
-    * ngramJaccardPairs trigger, WITHOUT physically planning the subtree.
-    *
-    * The old probe (`df.rdd.getNumPartitions`) converted the plan to an
-    * RDD, paying full physical planning per call (~30-40 ms on this host,
-    * re-paid on every timed bench trial since each run rebuilds its
-    * DataFrame). For file-source-backed plans the same decision falls out
-    * of the FileIndex's total byte size (listing is session-cached, ~0 ms):
-    * replicate Spark's own split sizing — `maxSplitBytes =
-    * min(maxPartitionBytes, max(openCostInBytes, bytes/p))` — and compare
-    * the implied partition count against `p`. The estimate ignores
-    * per-file open-cost packing, which UNDERCOUNTS partitions for
-    * many-tiny-file layouts; that errs toward repartitioning, the safe
-    * direction for the CPU-dense explode stages this gates (and at real
-    * scale bytes/maxSplitBytes >> p, so the floor never fires — exactly
-    * the old behavior). Non-file leaves (in-memory microbatch frames,
-    * checkpointed RDDs) keep the precise RDD probe: their stats carry no
-    * usable size and their physical planning is cheap. */
   /** Total FileIndex bytes under `df` when it is a plain scan + narrow ops
     * (Project/Filter) over a file source; None otherwise. Fast-path only
     * for shapes that cannot CHANGE the partitioning — anything else
@@ -132,8 +104,29 @@ object Dedup {
     walk(df.queryExecution.logical)
   }
 
-  private[graft] def scanParallelismBelow(df: DataFrame, p: Int): Boolean = {
-    fileScanBytes(df) match {
+  /** Would `df`'s scan give fewer than `p` partitions? — the spreadByKey /
+    * ngramJaccardPairs trigger, WITHOUT physically planning the subtree.
+    *
+    * The old probe (`df.rdd.getNumPartitions`) converted the plan to an
+    * RDD, paying full physical planning per call (~30-40 ms on this host,
+    * re-paid on every timed bench trial since each run rebuilds its
+    * DataFrame). For file-source-backed plans the same decision falls out
+    * of the FileIndex's total byte size (listing is session-cached, ~0 ms):
+    * replicate Spark's own split sizing — `maxSplitBytes =
+    * min(maxPartitionBytes, max(openCostInBytes, bytes/p))` — and compare
+    * the implied partition count against `p`. The estimate ignores
+    * per-file open-cost packing, which UNDERCOUNTS partitions for
+    * many-tiny-file layouts; that errs toward repartitioning, the safe
+    * direction for the CPU-dense explode stages this gates (and at real
+    * scale bytes/maxSplitBytes >> p, so the floor never fires — exactly
+    * the old behavior). Non-file leaves (in-memory microbatch frames,
+    * checkpointed RDDs) keep the precise RDD probe: their stats carry no
+    * usable size and their physical planning is cheap. `scanBytes` is
+    * [[fileScanBytes]] of `df`, taken by the caller so that a caller who
+    * also sizes from it walks the plan once. */
+  private[graft] def scanParallelismBelow(df: DataFrame, p: Int,
+                                          scanBytes: Option[Long]): Boolean = {
+    scanBytes match {
       case Some(bytes) =>
         val conf = df.sparkSession.sessionState.conf
         val maxSplit = math.min(conf.filesMaxPartitionBytes,
@@ -144,6 +137,17 @@ object Dedup {
     }
   }
 
+  /** One row per (document, n-gram position) with both 60-bit md5 halves of
+    * the shingle ([[Hashing.hash64]]/[[Hashing.hash64Hi]] — one md5, CSE'd).
+    *
+    * Explode-first on purpose: generating shingles as an array via
+    * `transform(sequence(...), i -> toks[i] || ...)` looks natural but is a
+    * performance trap — higher-order lambdas are interpreted, and
+    * CollapseProject + filter pushdown inline `split(lower(text))` into
+    * every element access, re-tokenizing the document O(positions) times.
+    * Here tokenization is materialized once per document below the
+    * `Generate`, and every downstream expression (concat, md5, conv) is a
+    * codegen'd scalar — the whole stage stays in WholeStageCodegen. */
   def shingleRows(docs: DataFrame, n: Int = 3): DataFrame =
     // gram_hashes computes every gram's (h1, h2) in one incremental-digest
     // pass per document (r19) — the old shape exploded a position sequence
@@ -327,13 +331,6 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("e"), lit(false)).as("exact_dup"))
   }
 
-  /** SimHash near-duplicate pairs within a Hamming-distance budget.
-    * Pigeonhole banding: two 32-bit signatures within Hamming distance 3
-    * must agree on at least one of 4 bytes, so candidates come from an
-    * equi-join on (band_id, band_byte) — never an N² scan — and the exact
-    * `bit_count(xor)` check runs only on candidates. Same
-    * candidates-then-verify shape as MinHash banding, but over a per-row
-    * signature with no shingle explosion. */
   /** Pigeonhole byte-bands of a simhash signature table: 4 rows per doc,
     * one per signature byte. Two signatures within Hamming distance 3
     * agree on at least one band. */
@@ -396,7 +393,15 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** 32-bit signature / 8-bit-band near-dup pairs. The 256 buckets per
+  /** SimHash near-duplicate pairs within a Hamming-distance budget.
+    * Pigeonhole banding: two 32-bit signatures within Hamming distance 3
+    * must agree on at least one of 4 bytes, so candidates come from an
+    * equi-join on (band_id, band_byte) — never an N² scan — and the exact
+    * `bit_count(xor)` check runs only on candidates. Same
+    * candidates-then-verify shape as MinHash banding, but over a per-row
+    * signature with no shingle explosion.
+    *
+    * 32-bit signature / 8-bit-band near-dup pairs. The 256 buckets per
     * band give ~N²/256 random-collision candidate pairs — fine at demo
     * scale, a quadratic knee beyond ~10⁶ docs. **Prefer
     * [[simhashWideNearDups]] (64-bit / 16-bit bands, 65,536 buckets per
@@ -634,12 +639,6 @@ object Dedup {
         SketchExpressions.simhashSig(col("text"), wide = false).as("simhash"))
       .filter(col("simhash").isNotNull)
 
-  /** The composed corpus-cleaning pipeline a pretraining dataset runs:
-    * quality gate → PII redaction → exact-dup removal → near-dup
-    * canonicalization → keep only canonical survivors. Each stage is one of
-    * the operators above; the composition stays a single Catalyst plan
-    * (filters push into the scan, the only shuffles are the two dedup
-    * stages' hash-partitioned candidate/canonical steps). */
   /** Exact-dedup survivor ids: fingerprint → min(doc_id) as a GROUP-BY
     * aggregate, so the shuffle carries (16-byte fp, 8-byte id) rows only.
     * This replaced a `min(doc_id).over(Window.partitionBy(fp))` form whose
@@ -655,6 +654,12 @@ object Dedup {
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
 
+  /** The composed corpus-cleaning pipeline a pretraining dataset runs:
+    * quality gate → PII redaction → exact-dup removal → near-dup
+    * canonicalization → keep only canonical survivors. Each stage is one of
+    * the operators above; the composition stays a single Catalyst plan
+    * (filters push into the scan, the only shuffles are the two dedup
+    * stages' hash-partitioned candidate/canonical steps). */
   def cleanCorpus(docs: DataFrame, minTokens: Int = 5,
                   maxPunctRatio: Double = 0.3): DataFrame = {
     // Quality gate as a pure filter: withQualityCols keeps the input
@@ -906,7 +911,7 @@ object Dedup {
     // here), the rows already arrive doc_id-partitioned and adding the
     // explicit repartition would just shuffle them a second time.
     val spreadFired = !docs.isStreaming && scanParallelismBelow(docs,
-      docs.sparkSession.sparkContext.defaultParallelism)
+      docs.sparkSession.sparkContext.defaultParallelism, fileScanBytes(docs))
     val base = shingleRows(docs, n).select(col("doc_id"), col("h1").as("s"))
     val e = (if (spreadFired) base else base.repartition(col("doc_id")))
       .distinct()

@@ -180,7 +180,9 @@ object EsSink {
     * and tombstones keep their own rule (ignore: skipped; fail: fail the
     * batch). Without an order column the reduction is impossible (Spark
     * rows carry no implicit order) — callers must guarantee
-    * per-key-single-partition batches. */
+    * per-key-single-partition batches. An order column named
+    * `__batch_id` (an upsert table changelog's refinement order) is
+    * engine metadata and stays out of the rendered docs. */
   def writeBatch(batch: DataFrame, index: String, idCol: Option[String],
                  transport: BulkTransport,
                  tombstoneCol: Option[String] = None,
@@ -209,7 +211,10 @@ object EsSink {
           .unionByName(batch.filter(!reduced))
       case _ => batch
     }
-    bulkLines(effective, index, idCol, tombstoneCol, onNull).foreachPartition {
+    val docs =
+      if (orderCol.contains("__batch_id")) effective.drop("__batch_id")
+      else effective
+    bulkLines(docs, index, idCol, tombstoneCol, onNull).foreachPartition {
       (lines: Iterator[String]) => transport.send(lines)
     }
   }

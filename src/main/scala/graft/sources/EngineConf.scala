@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    counts (>200) the sort writer is the standard path anyway; forcing
   *    it everywhere makes local runs match production behavior and
   *    removes measured ~2.5 ms/map-task of tiny-file churn (a 32-map-task
-  *    micro-exchange dropped 223 ms → 137 ms median, ShuffleCostProbe).
+  *    micro-exchange dropped 223 ms → 137 ms median; `OPTIMIZATION_r20.md`).
   *
   *  `spark.sql.files.openCostInBytes` was evaluated and deliberately left
   *  at Spark's default: the fixtures are single-row-group parquet files,
@@ -28,4 +28,18 @@ object EngineConf {
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.shuffle.sort.bypassMergeThreshold",
       sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
+
+  /** Cores of a local dev session: `SPARK_GRAFT_CPUS`, default 32. */
+  def localCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The session every dev main (Bench, the tools) builds on:
+    * `local[localCpus]`, one shuffle partition per core, UTC, no UI, and
+    * [[tuned]]. Callers add only their own extras. */
+  def localSession(app: String): SparkSession.Builder =
+    tuned(SparkSession.builder()
+      .master(s"local[$localCpus]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", localCpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
 }

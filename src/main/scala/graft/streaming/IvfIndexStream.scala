@@ -510,6 +510,42 @@ object IvfIndexStream {
       tomb.fold(df)(t => df.join(t, Seq("vec_id"), "left_anti")))
   }
 
+  /** [[reindexInto]]'s SEED rule, shared with its certification
+    * oracle: a hash-stratified deterministic sample over the `vec_id`s
+    * of a `(vec_id, embedding)` frame — `nlist` buckets by
+    * `xxhash64(vec_id)`, one representative each (the row minimizing an
+    * independent second hash), so the seed set spans the WHOLE ingested
+    * history. The oldest-prefix rule [[start]] uses at birth would seed
+    * every centroid from the PRE-drift distribution — exactly wrong for
+    * a drift rebuild, whose point is giving the post-drift mass its
+    * share of cells. One map-side-combined aggregate of ≤ `nlist` rows;
+    * deterministic for a given frame. Hash chance can leave buckets
+    * empty on a small corpus — topped up from the oldest unpicked
+    * rows. Returns up to `nlist` vectors (fewer only if the frame has
+    * fewer rows). */
+  def stratifiedSeed(vecs: DataFrame,
+                     nlist: Int): Array[Array[Double]] = {
+    val strat = vecs
+      .groupBy(pmod(xxhash64(col("vec_id")), lit(nlist)).as("__b"))
+      .agg(min_by(col("embedding"),
+          xxhash64(col("vec_id"), lit(1))).as("embedding"),
+        min_by(col("vec_id"),
+          xxhash64(col("vec_id"), lit(1))).as("vec_id"))
+      .orderBy(col("__b"))
+      .collect()
+    val seed = strat.map(r =>
+      r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray)
+    if (seed.length >= nlist) seed
+    else {
+      val picked = strat.map(_.getAs[Long]("vec_id")).toIndexedSeq
+      seed ++ vecs
+        .filter(!col("vec_id").isin(picked: _*))
+        .orderBy(col("vec_id")).limit(nlist - seed.length)
+        .select(col("embedding")).collect()
+        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    }
+  }
+
   /** OFFLINE rebuild-and-swap for a drifted index — the remedy the
     * design note above promises, as code: retrains centroids FROM THE
     * EXISTING store with a deterministic hash-stratified seed over the
@@ -551,42 +587,6 @@ object IvfIndexStream {
     * silently drop them — let the stream finish birthing first.
     * Returns the new centroids (also persisted; the return is a
     * convenience for parity checks and occupancy reports). */
-  /** [[reindexInto]]'s SEED rule, shared with its certification
-    * oracle: a hash-stratified deterministic sample over the `vec_id`s
-    * of a `(vec_id, embedding)` frame — `nlist` buckets by
-    * `xxhash64(vec_id)`, one representative each (the row minimizing an
-    * independent second hash), so the seed set spans the WHOLE ingested
-    * history. The oldest-prefix rule [[start]] uses at birth would seed
-    * every centroid from the PRE-drift distribution — exactly wrong for
-    * a drift rebuild, whose point is giving the post-drift mass its
-    * share of cells. One map-side-combined aggregate of ≤ `nlist` rows;
-    * deterministic for a given frame. Hash chance can leave buckets
-    * empty on a small corpus — topped up from the oldest unpicked
-    * rows. Returns up to `nlist` vectors (fewer only if the frame has
-    * fewer rows). */
-  def stratifiedSeed(vecs: DataFrame,
-                     nlist: Int): Array[Array[Double]] = {
-    val strat = vecs
-      .groupBy(pmod(xxhash64(col("vec_id")), lit(nlist)).as("__b"))
-      .agg(min_by(col("embedding"),
-          xxhash64(col("vec_id"), lit(1))).as("embedding"),
-        min_by(col("vec_id"),
-          xxhash64(col("vec_id"), lit(1))).as("vec_id"))
-      .orderBy(col("__b"))
-      .collect()
-    val seed = strat.map(r =>
-      r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray)
-    if (seed.length >= nlist) seed
-    else {
-      val picked = strat.map(_.getAs[Long]("vec_id")).toIndexedSeq
-      seed ++ vecs
-        .filter(!col("vec_id").isin(picked: _*))
-        .orderBy(col("vec_id")).limit(nlist - seed.length)
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    }
-  }
-
   def reindexInto(spark: SparkSession, stateDir: String, newDir: String,
                   nlist: Int, trainIters: Int = 8,
                   carryTombstones: Boolean = true): Array[Array[Double]] = {

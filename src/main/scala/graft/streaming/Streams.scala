@@ -342,15 +342,6 @@ object Streams {
     rewriteStore(spark, path)(
       Relational.latestByKeys(_, keys, col("__batch_id")))
 
-  /** Crash-safe in-place rewrite of a parquet store: `rewrite` produces
-    * the replacement contents, written beside the live store and swapped
-    * in by two renames (live → `.old`, rewritten → live) so no crash
-    * point loses data — [[recoverCompaction]] restores `.old` if death
-    * lands between the renames. The generalized core of
-    * [[compactUpsertLog]], also used for state-retention pruning
-    * ([[NearDupStream]]). `partitionCols` lays the replacement out as a
-    * partitioned table (readers prune on those columns). Single-writer
-    * (call from inside `foreachBatch` or equivalent). */
   /** Checkpoint-lineage id for foreachBatch side stores: batch ids are
     * CHECKPOINT-scoped, so any store metadata keyed by batch id (replay
     * guards, applied-batch stamps) must also carry which checkpoint
@@ -1082,6 +1073,15 @@ object Streams {
     ()
   }
 
+  /** Crash-safe in-place rewrite of a parquet store: `rewrite` produces
+    * the replacement contents, written beside the live store and swapped
+    * in by two renames (live → `.old`, rewritten → live) so no crash
+    * point loses data — [[recoverCompaction]] restores `.old` if death
+    * lands between the renames. The generalized core of
+    * [[compactUpsertLog]], also used for state-retention pruning
+    * ([[NearDupStream]]). `partitionCols` lays the replacement out as a
+    * partitioned table (readers prune on those columns). Single-writer
+    * (call from inside `foreachBatch` or equivalent). */
   def rewriteStore(spark: SparkSession, path: String,
                    partitionCols: Seq[String] = Nil,
                    sortCols: Seq[String] = Nil)

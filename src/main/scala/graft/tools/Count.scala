@@ -1,19 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Row-count probe for any registered query at any fixture dir — the
-  * companion to [[graft.Explain]] for scale-up runs where the QUESTION is
+  * companion to [[Profile]] for scale-up runs where the QUESTION is
   * output size (is growth output-bound or plan-bound?), e.g.
   * `runMain graft.tools.Count q_editdist_pairs /tmp/graft_scale100`. */
 object Count {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Count <query>[,<query>...] [sfDir]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.sources.EngineConf.localSession("graft-count")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = args.lift(1).getOrElse("/root/testdata/sf0.1")
     for (name <- args(0).split(",")) {

@@ -90,15 +90,11 @@ object DupStreamBench {
     require(!check ||
       (run.retain == 0 && run.minEst == 0.0 && m.batchTwin.isDefined),
       "the batch-twin check needs full history, no threshold and a twin")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.EngineConf.tuned(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // the progress ledger IS the measurement: the default keeps 100
-        // entries, and a longer run would drop its earliest batches
-        .config("spark.sql.streaming.numRecentProgressUpdates", "1000"))
+    val cpus = graft.sources.EngineConf.localCpus
+    val spark = graft.sources.EngineConf.localSession("graft-dupbench")
+      // the progress ledger IS the measurement: the default keeps 100
+      // entries, and a longer run would drop its earliest batches
+      .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -223,13 +223,8 @@ object GuardIvfPipelineCert {
       .map(_(2).toLong).filter(_ > 0)
     val minEst = Option(args).filter(_.length > 3)
       .map(_(3).toDouble).filter(_ > 0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-guardivf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = graft.sources.EngineConf.localCpus
+    val spark = graft.sources.EngineConf.localSession("graft-guardivf")
       .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -126,7 +126,7 @@ object IvfIndexBench {
     * once and a RE-EMITTED deleted id stays erased. */
   private def deleteCert(spark: SparkSession, emb: DataFrame,
                          nVecs: Long, expectedOnly: Boolean,
-                         cpus: String): Unit = {
+                         cpus: Int): Unit = {
     val corpus = emb.unionByName(
         emb.withColumn("vec_id", col("vec_id") + DriftIdOffset))
       .select(col("vec_id"), col("embedding"))
@@ -233,7 +233,7 @@ object IvfIndexBench {
     * `reindex` — see the object scaladoc). */
   private def reindexCert(spark: SparkSession, emb: DataFrame,
                           nVecs: Long, expectedOnly: Boolean,
-                          cpus: String): Unit = {
+                          cpus: Int): Unit = {
     val corpus = emb.unionByName(drift(emb))
       .select(col("vec_id"), col("embedding"))
     if (expectedOnly) {
@@ -331,13 +331,8 @@ object IvfIndexBench {
       "usage: IvfIndexBench <embDir> [1|reindex-expected|reindex]")
     val mode = if (args.length > 1) args(1) else "run"
     val expectedOnly = mode == "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ivfbench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = graft.sources.EngineConf.localCpus
+    val spark = graft.sources.EngineConf.localSession("graft-ivfbench")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = spark.read.parquet(args(0))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -42,13 +42,8 @@ object NdRepairBench {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: NdRepairBench <docsDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ndrepair")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = graft.sources.EngineConf.localCpus
+    val spark = graft.sources.EngineConf.localSession("graft-ndrepair")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val parts = 64

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -58,12 +58,7 @@ object ScaleUp {
             s"valid names: ${knownTables.toSeq.sorted.mkString(", ")}")
         requested
       } else _ => true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.sources.EngineConf.localSession("graft-scaleup")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

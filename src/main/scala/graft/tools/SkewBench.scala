@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Skew
@@ -37,14 +37,9 @@ object SkewBench {
     val rows = if (args.length > 0) args(0).toLong else 5000000L
     val dimRows = if (args.length > 1) args(1).toLong else 200000L
     val hotFrac = if (args.length > 2) args(2).toDouble else 0.5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-skew-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = graft.sources.EngineConf.localCpus
+    val spark = graft.sources.EngineConf.localSession("graft-skew-bench")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -100,14 +100,9 @@ object StreamBench {
     val batches = if (args.length > 1) args(1).toInt else 8
     val warmup = 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.sources.EngineConf.localCpus
     val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATESTORE", "default")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-streambench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.sources.EngineConf.localSession("graft-streambench")
       // the progress ledger IS the measurement: default cap is 100 entries,
       // a >100-batch run would silently drop its earliest batches from the
       // reported curve and totals (round-12 self-review)
@@ -126,7 +121,7 @@ object StreamBench {
     def events(): DataFrame =
       spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rowsPerBatch)
-        .option("numPartitions", cpus.toInt)
+        .option("numPartitions", cpus)
         .load()
         .select(
           col("value").as("event_id"),

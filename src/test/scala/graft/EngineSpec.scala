@@ -521,6 +521,51 @@ class EngineSpec extends GraftSuite {
       }
     } finally engine.terminateAll()
   }
+
+  test("a keyed sink over a table changelog backlog that refines keys " +
+    "indexes each key once, with its newest row and no __batch_id") {
+    implicit val sqlCtx = spark.sqlContext
+    OrderedBulkTransport.clear()
+    val in = MemoryStream[(Long, Long)]
+    val engine = new Engine(spark,
+      esTransport = _ => new OrderedBulkTransport)
+    try {
+      engine.createUpsertTableAs("refined_tab",
+        in.toDF().toDF("k", "v").groupBy("k").agg(count(lit(1)).as("n")),
+        Seq("k"), tmpDir("graft-tab-refine"))
+      // two table batches: the changelog holds (1→1, 2→1, 3→1), then the
+      // refinements (1→3, 2→2)
+      in.addData((1L, 0L), (2L, 0L), (3L, 0L))
+      engine.processAllAvailable()
+      in.addData((1L, 0L), (1L, 0L), (2L, 0L))
+      engine.processAllAvailable()
+      val before = spark.streams.active.map(_.id).toSet
+      engine.createSinkConnector("SINK_ES_REFINED", Map(
+        "connector.class" ->
+          "io.confluent.connect.elasticsearch.ElasticsearchSinkConnector",
+        "topics" -> "refined_tab",
+        "connection.url" -> "http://elasticsearch:9200",
+        "key.ignore" -> "false"))
+      val sink = spark.streams.active.filterNot(q => before(q.id)).head
+      engine.processAllAvailable()
+      assert(inputBatches(sink).map(_._1) === Seq(0L),
+        "the changelog backlog must reach the sink as one batch")
+      val docs = Seq.newBuilder[(String, String)]
+      OrderedBulkTransport.entries.forEach { e =>
+        docs += e.split(""""_id":"""")(1).takeWhile(_ != '"') ->
+          e.split("\n", 2)(1)
+      }
+      val byId = docs.result().groupMap(_._1)(_._2)
+      val newest = Map("1" -> 3, "2" -> 2, "3" -> 1)
+      assert(byId.keySet === newest.keySet)
+      byId.foreach { case (k, d) =>
+        assert(d.size === 1, s"key $k must go out once: $d")
+        assert(d.head.contains(s""""n":${newest(k)}"""),
+          s"key $k must keep its newest row: $d")
+        assert(!d.head.contains("__batch_id"), s"doc carries __batch_id: $d")
+      }
+    } finally engine.terminateAll()
+  }
 }
 
 /** Test transport recording bulk entries in arrival order in a JVM-shared
