@@ -3,8 +3,8 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Engine-level Spark tuning shared by every main (Bench, Verify, dev
-  * tools): scale-adaptive settings with env overrides, never constants
-  * tuned to one host shape.
+  * tools, the benchmark harness) and the test session: scale-adaptive
+  * settings with env overrides, never constants tuned to one host shape.
   *
   *  - `spark.shuffle.sort.bypassMergeThreshold` (default here 0, env
   *    `SPARK_GRAFT_BYPASS_THRESHOLD`): with the default 200, every
@@ -23,11 +23,35 @@ import org.apache.spark.sql.SparkSession
   *  CPU-dense stages is instead handled by the operators' explicit
   *  parallelism floor (Dedup.spreadByKey / scanParallelismBelow), which
   *  no-ops at warehouse scale.
+  *
+  *  - `spark.sql.codegen.cache.maxEntries` ([[CodegenCacheEntries]]):
+  *    the JVM-wide LRU cache of Janino-compiled generated classes. Spark's
+  *    default of 100 is smaller than the engine's working set, so a
+  *    query mix that cycles through more shapes than that recompiles
+  *    every class on every pass (about 15 ms a class). Measured at
+  *    sf0.001: one pass of the benchmark's 19-query `analytics_sweep`
+  *    needs about 225 classes, and the whole 166-query registry about
+  *    1,625; at the default, a warm registry pass recompiled 2,105
+  *    classes and took 77–95 s, against 44 s with the cache sized. The
+  *    entry count depends on query shapes, not on data volume. It stays
+  *    bounded (not unlimited) because some plans compile a fresh class
+  *    on every build (ROADMAP direction 2), which would grow an
+  *    unbounded cache without end in a long-running `Engine`. The
+  *    setting is static: Spark reads it once per JVM, when the first
+  *    class is generated, so only the builder of the first session
+  *    that runs a query in the JVM can set it. An application that
+  *    embeds `Engine` in its own session puts it on that builder
+  *    (OPERATIONS.md §3).
   */
 object EngineConf {
+  /** Generated classes kept compiled per JVM: at least twice the whole
+    * registry's measured working set. */
+  val CodegenCacheEntries = 4096
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.shuffle.sort.bypassMergeThreshold",
       sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
 
   /** Cores of a local dev session: `SPARK_GRAFT_CPUS`, default 32. */
   def localCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

@@ -6,6 +6,7 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.{GraftListenerBridge, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Command
@@ -27,7 +28,12 @@ import graft.sources.EngineConf
   * }}}
   * A run is Bench's: build the query, then write it to the noop sink; one
   * cold run, then `reps` timed ones. `stages` prints the build time, the
-  * jobs launched while building and the last rep's jobs and stages.
+  * jobs launched while building, the classes Janino compiled during the
+  * cold run and during the last rep (`compiles=<cold>/<last>`) and the
+  * last rep's jobs and stages. The compile count is Spark's JVM-wide
+  * `CodegenMetrics` counter: unlike the jobs, it is not filtered by the
+  * `graft.profile` job tag, so code another thread generates meanwhile
+  * is counted too.
   * `metrics` prints the last rep's executed plan with its SQL metrics,
   * taken from the noop write's own command event. `plan` writes each
   * query's `explain("formatted")`, built but not run, to
@@ -40,15 +46,19 @@ object Profile {
                          shuffleRead: Long, shuffleWrite: Long, spill: Long,
                          input: Long)
 
-  /** `tasksEnded` counts the task-end events of the last rep's jobs. */
+  /** `tasksEnded` counts the task-end events of the last rep's jobs;
+    * `coldCompiles` and `lastCompiles` the classes compiled during the
+    * cold run and the last rep. */
   final case class StageReport(query: String, coldS: Double,
                                times: Seq[Double], buildMs: Double,
-                               buildJobs: Int, jobs: Seq[Job],
+                               buildJobs: Int, coldCompiles: Long,
+                               lastCompiles: Long, jobs: Seq[Job],
                                stages: Seq[Stage], tasksEnded: Int) {
     def show: String = {
       val head = f"\n=== $query cold=$coldS%.3f times=" +
         times.map(t => f"$t%.3f").mkString(",") +
-        f" build=$buildMs%.1f ms build_jobs=$buildJobs jobs/run=${jobs.size}"
+        f" build=$buildMs%.1f ms build_jobs=$buildJobs" +
+        s" compiles=$coldCompiles/$lastCompiles jobs/run=${jobs.size}"
       (head +: jobs.flatMap { j =>
         f"  job ${j.jobId}%4d wall=${j.wallMs}%5d ms" +:
           stages.filter(_.jobId == j.jobId).map(s =>
@@ -80,7 +90,8 @@ object Profile {
       val last = runs.last
       rec.synchronized {
         StageReport(name, cold.seconds, runs.map(_.seconds), last.buildMs,
-          last.buildJobs, rec.jobs.filter(_.jobId > last.jobMark).toSeq,
+          last.buildJobs, cold.compiles, last.compiles,
+          rec.jobs.filter(_.jobId > last.jobMark).toSeq,
           rec.stages.filter(_.jobId > last.jobMark).toSeq,
           rec.tasksByJob.collect { case (j, n) if j > last.jobMark => n }.sum)
       }
@@ -155,15 +166,17 @@ object Profile {
 
   /** One run: `jobMark` is the last job id before it, `buildJobs` the jobs
     * its build launched, `eventMark` the query-execution events before its
-    * write, `seconds` build plus write. */
+    * write, `seconds` build plus write, `compiles` the classes compiled
+    * in the JVM meanwhile. */
   private final case class Run(df: DataFrame, jobMark: Int, buildMs: Double,
                                buildJobs: Int, eventMark: Int,
-                               seconds: Double)
+                               seconds: Double, compiles: Long)
 
   /** Build `name`, then write it to the noop sink when `write`. */
   private def run(rec: Recorder, spark: SparkSession, sfDir: String,
                   name: String, write: Boolean = true): Run = {
     val jobMark = rec.watermark()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val df = SparkEntry.queries(name)(spark, sfDir)
     val buildNs = System.nanoTime() - t0
@@ -173,7 +186,8 @@ object Profile {
     val t1 = System.nanoTime()
     if (write) df.write.format("noop").mode("overwrite").save()
     Run(df, jobMark, buildNs / 1e6, buildJobs, eventMark,
-      (buildNs + System.nanoTime() - t1) / 1e9)
+      (buildNs + System.nanoTime() - t1) / 1e9,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)
   }
 
   /** The cold run and `reps` timed runs of `name`, drained. */
