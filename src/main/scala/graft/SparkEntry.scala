@@ -656,7 +656,8 @@ object SparkEntry {
     "q_approx_distinct_users" -> ((s, d) =>
       Tables.events(s, d)
         .groupBy(col("event_type"))
-        .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"))),
+        .agg(graft.functions.HllView.approxDistinct(col("user_id"))
+          .as("approx_users"))),
     // sketch twin of q_quality_cutoff: approx_percentile cutoff, same plan
     "q_quality_cutoff_approx" -> ((s, d) =>
       TextAnalysis.qualityCutoffApprox(Tables.documents(s, d))),

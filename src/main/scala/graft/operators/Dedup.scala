@@ -61,32 +61,39 @@ object Dedup {
     * quarter-corpus sides spread 0.6 MB across 32 tasks). Callers pass a
     * value matched to their kernel's CPU density; the count is always
     * capped at defaultParallelism, so at 8 cores the floor still yields
-    * 8-way spreads and at warehouse scale the floor never fires at all. */
+    * 8-way spreads and at warehouse scale the floor never fires at all.
+    * A count not above the scan's own partition count returns `df`
+    * itself: a small input sized to one task would otherwise pay a
+    * `repartition(1)` shuffle stage that spreads nothing. */
   private[graft] def spreadByKey(df: DataFrame, key: String,
-                                 bytesPerTask: Long = 256L << 10): DataFrame = {
+                                 bytesPerTask: Long = 256L << 10): DataFrame =
+    spreadParts(df, bytesPerTask).fold(df)(df.repartition(_, col(key)))
+
+  /** The partition count [[spreadByKey]] repartitions `df` to, or None
+    * when it returns `df` unchanged. */
+  private[graft] def spreadParts(df: DataFrame,
+                                 bytesPerTask: Long): Option[Int] =
     // Streaming inputs skip the floor: `.rdd` is illegal on a streaming
     // DataFrame, and a microbatch's scan parallelism comes from its source
     // partitions (Kafka topic partitions at prod scale). Batch callers
     // inside foreachBatch (e.g. NearDupStream) arrive here as batch frames
     // and get the floor as usual.
-    if (df.isStreaming) return df
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val scanBytes = fileScanBytes(df)
-    if (!scanParallelismBelow(df, p, scanBytes)) df
+    if (df.isStreaming) None
     else {
+      val p = df.sparkSession.sparkContext.defaultParallelism
+      val scanBytes = fileScanBytes(df)
       val parts = scanBytes
         .map(b => math.min(p.toLong,
           math.max(1L, (b + bytesPerTask - 1) / bytesPerTask)).toInt)
         .getOrElse(p)
-      df.repartition(parts, col(key))
+      Some(parts).filter(_ > scanPartitions(df, p, scanBytes))
     }
-  }
 
   /** Total FileIndex bytes under `df` when it is a plain scan + narrow ops
     * (Project/Filter) over a file source; None otherwise. Fast-path only
     * for shapes that cannot CHANGE the partitioning — anything else
     * (repartition, join, agg, in-memory leaf) keeps the precise RDD probe
-    * in [[scanParallelismBelow]], preserving the referential no-op
+    * in [[scanPartitions]], preserving the referential no-op
     * contract for already-repartitioned inputs (PlanSpec). */
   private[graft] def fileScanBytes(df: DataFrame): Option[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan, Project, SubqueryAlias}
@@ -104,17 +111,17 @@ object Dedup {
     walk(df.queryExecution.logical)
   }
 
-  /** Would `df`'s scan give fewer than `p` partitions? — the spreadByKey /
-    * ngramJaccardPairs trigger, WITHOUT physically planning the subtree.
+  /** The partition count `df`'s scan gives at parallelism `p` — the
+    * spreadByKey trigger, WITHOUT physically planning the subtree.
     *
     * The old probe (`df.rdd.getNumPartitions`) converted the plan to an
     * RDD, paying full physical planning per call (~30-40 ms on this host,
     * re-paid on every timed bench trial since each run rebuilds its
-    * DataFrame). For file-source-backed plans the same decision falls out
+    * DataFrame). For file-source-backed plans the same count falls out
     * of the FileIndex's total byte size (listing is session-cached, ~0 ms):
     * replicate Spark's own split sizing — `maxSplitBytes =
-    * min(maxPartitionBytes, max(openCostInBytes, bytes/p))` — and compare
-    * the implied partition count against `p`. The estimate ignores
+    * min(maxPartitionBytes, max(openCostInBytes, bytes/p))` — and take
+    * the implied partition count. The estimate ignores
     * per-file open-cost packing, which UNDERCOUNTS partitions for
     * many-tiny-file layouts; that errs toward repartitioning, the safe
     * direction for the CPU-dense explode stages this gates (and at real
@@ -124,18 +131,19 @@ object Dedup {
     * usable size and their physical planning is cheap. `scanBytes` is
     * [[fileScanBytes]] of `df`, taken by the caller so that a caller who
     * also sizes from it walks the plan once. */
-  private[graft] def scanParallelismBelow(df: DataFrame, p: Int,
-                                          scanBytes: Option[Long]): Boolean = {
+  private def scanPartitions(df: DataFrame, p: Int,
+                             scanBytes: Option[Long]): Long =
     scanBytes match {
       case Some(bytes) =>
         val conf = df.sparkSession.sessionState.conf
         val maxSplit = math.min(conf.filesMaxPartitionBytes,
           math.max(conf.filesOpenCostInBytes, bytes / math.max(p, 1)))
-        val parts = math.max(1L, (bytes + maxSplit - 1) / math.max(maxSplit, 1))
-        parts < p
-      case None => df.rdd.getNumPartitions < p
+        math.max(1L, (bytes + maxSplit - 1) / math.max(maxSplit, 1))
+      case None => df.rdd.getNumPartitions.toLong
     }
-  }
+
+  /** [[spreadByKey]]'s `bytesPerTask` for the n-gram explode stages. */
+  private val GramBytesPerTask = 32L << 10
 
   /** One row per (document, n-gram position) with both 60-bit md5 halves of
     * the shingle ([[Hashing.hash64]]/[[Hashing.hash64Hi]] — one md5, CSE'd).
@@ -156,7 +164,7 @@ object Dedup {
     // and all hash values are unchanged (DedupSpec pins kernel parity).
     spreadByKey(docs
       .select(col("doc_id"), expr(TextAnalysis.tokensExpr).as("toks"))
-      .filter(size(col("toks")) >= n), "doc_id", bytesPerTask = 32L << 10)
+      .filter(size(col("toks")) >= n), "doc_id", GramBytesPerTask)
       .select(col("doc_id"),
         explode(SketchExpressions.gramHashes(col("toks"), n)).as("g"))
       .select(col("doc_id"), col("g.h1").as("h1"), col("g.h2").as("h2"))
@@ -907,11 +915,10 @@ object Dedup {
     // repartition by doc_id up front: hashpartitioning(doc_id) satisfies
     // the clustered distribution of BOTH the (doc_id, s) distinct and the
     // sz window — one exchange where the naive plan takes two. When
-    // shingleRows' scan-parallelism floor fired (same condition re-tested
-    // here), the rows already arrive doc_id-partitioned and adding the
+    // shingleRows' scan-parallelism floor fired (the same spreadParts
+    // decision), the rows already arrive doc_id-partitioned and adding the
     // explicit repartition would just shuffle them a second time.
-    val spreadFired = !docs.isStreaming && scanParallelismBelow(docs,
-      docs.sparkSession.sparkContext.defaultParallelism, fileScanBytes(docs))
+    val spreadFired = spreadParts(docs, GramBytesPerTask).isDefined
     val base = shingleRows(docs, n).select(col("doc_id"), col("h1").as("s"))
     val e = (if (spreadFired) base else base.repartition(col("doc_id")))
       .distinct()
@@ -955,7 +962,7 @@ object Dedup {
     // kept — substring dedup needs WHERE the duplicate sits
     spreadByKey(docs
       .select(col("doc_id"), expr(TextAnalysis.tokensExpr).as("toks"))
-      .filter(size(col("toks")) >= k), "doc_id", bytesPerTask = 32L << 10)
+      .filter(size(col("toks")) >= k), "doc_id", GramBytesPerTask)
       .select(col("doc_id"),
         explode(SketchExpressions.gramHashes(col("toks"), k)).as("g"))
       .select(col("doc_id"), col("g.i").as("i"),

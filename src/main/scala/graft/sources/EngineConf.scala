@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   *  parallelism — lowering open cost only added empty splits (measured
   *  q_top_brands 0.84 → 1.05 s at 256 KiB). Scan-side parallelism for
   *  CPU-dense stages is instead handled by the operators' explicit
-  *  parallelism floor (Dedup.spreadByKey / scanParallelismBelow), which
-  *  no-ops at warehouse scale.
+  *  parallelism floor (Dedup.spreadByKey), which no-ops at warehouse
+  *  scale.
   *
   *  - `spark.sql.codegen.cache.maxEntries` ([[CodegenCacheEntries]]):
   *    the JVM-wide LRU cache of Janino-compiled generated classes. Spark's
@@ -34,14 +34,16 @@ import org.apache.spark.sql.SparkSession
   *    1,625; at the default, a warm registry pass recompiled 2,105
   *    classes and took 77–95 s, against 44 s with the cache sized. The
   *    entry count depends on query shapes, not on data volume. It stays
-  *    bounded (not unlimited) because some plans compile a fresh class
-  *    on every build (ROADMAP direction 2), which would grow an
-  *    unbounded cache without end in a long-running `Engine`. The
-  *    setting is static: Spark reads it once per JVM, when the first
-  *    class is generated, so only the builder of the first session
-  *    that runs a query in the JVM can set it. An application that
-  *    embeds `Engine` in its own session puts it on that builder
-  *    (OPERATIONS.md §3).
+  *    bounded (not unlimited) because any plan whose generated source
+  *    carries a per-build value compiles a fresh class on every build,
+  *    which would grow an unbounded cache without end in a long-running
+  *    `Engine`. Streams stamp batch ids through `Streams.stampBatch` for
+  *    that reason; a few registry queries still compile per warm build
+  *    (ROADMAP direction 2). The setting is static: Spark reads it once
+  *    per JVM, when the first class is generated, so only the builder of
+  *    the first session that runs a query in the JVM can set it. An
+  *    application that embeds `Engine` in its own session puts it on
+  *    that builder (OPERATIONS.md §3).
   */
 object EngineConf {
   /** Generated classes kept compiled per JVM: at least twice the whole

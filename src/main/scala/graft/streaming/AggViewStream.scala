@@ -103,11 +103,10 @@ object AggViewStream {
         col("sum_value"), col("nnz"))
       // pin the decimal width: repeated merges would otherwise creep the
       // precision up one digit per batch (28,6 holds ±10^22 — plenty)
-      val next = Cdc.maintainAggView(base, delta)
+      val next = Streams.stampBatch(Cdc.maintainAggView(base, delta)
         .select(col("event_type"), col("cnt"),
           col("sum_value").cast("decimal(28,6)").as("sum_value"),
-          col("nnz"))
-        .withColumn("__batch_id", lit(batchId))
+          col("nnz")), batchId)
         .withColumn("__lineage", lit(lineage))
       Streams.replaceStore(spark, viewDir, next)
     } finally { current.unpersist(); () }

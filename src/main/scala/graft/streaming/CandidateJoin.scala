@@ -84,9 +84,8 @@ object CandidateJoin {
             intra.unionByName(
               pairing.cross(keyed, store.prunedRead(spark, parts)))
           }
-        pairs.filter(keep).select(emit: _*).distinct()
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode(SaveMode.Append).parquet(matchesDir)
+        Streams.stampBatch(pairs.filter(keep).select(emit: _*).distinct(),
+          batchId).write.mode(SaveMode.Append).parquet(matchesDir)
         store.appendBatchOnce(spark,
           pairing.stored(keyed).withColumn("__lineage", lit(lineage)),
           lineage, batchId, storeKeys)

@@ -712,13 +712,10 @@ object IngestGuard {
               "FROM GUARD <name> over REST — to let the replay land, " +
               "then re-run the retirement once the batch commits.")
         }
-        judged.filter(col("reason").isNotNull)
-          .select(col("doc_id"), col("reason"))
-          .withColumn("__batch_id", lit(batchId))
+        Streams.stampBatch(judged.filter(col("reason").isNotNull)
+          .select(col("doc_id"), col("reason")), batchId)
           .write.mode(SaveMode.Append).parquet(rejectsDir)
-        accepted
-          .select(inputCols.map(col): _*)
-          .withColumn("__batch_id", lit(batchId))
+        Streams.stampBatch(accepted.select(inputCols.map(col): _*), batchId)
           .write.mode(SaveMode.Append).parquet(acceptedDir)
         // grow the store AFTER the lookup, accepted fingerprints only —
         // through the shared crash-replay guard, so a replayed batch

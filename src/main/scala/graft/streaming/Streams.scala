@@ -315,14 +315,25 @@ object Streams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("__batch_id", lit(batchId))
-          .write.mode("append").parquet(path)
+        stampBatch(batch, batchId).write.mode("append").parquet(path)
         if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1))
           compactUpsertLog(batch.sparkSession, path, keys)
         ()
       }
       .start()
   }
+
+  /** `df` with a `__batch_id` column holding `batchId`: the write-side
+    * stamp of every `foreachBatch` store. Spark writes an integral literal
+    * into the generated Java source (`42L`), so a `lit(batchId)` stamp
+    * compiles new classes in every micro-batch, and constant folding turns
+    * a cast of a literal back into a literal. A zero-argument
+    * deterministic udf reaches generated code as a reference object, so
+    * every batch runs the same compiled class. Read-side
+    * `=== lit(batchId)` filters keep their literal: parquet pushdown
+    * needs it. */
+  def stampBatch(df: DataFrame, batchId: Long): DataFrame =
+    df.withColumn("__batch_id", udf(() => batchId).apply())
 
   /** Rewrite an upsert changelog to its latest-per-key rows (keeping
     * `__batch_id` so later appends still win on read). The compacted
@@ -662,8 +673,7 @@ object Streams {
       * `__batch_id`; skips empty frames — the [[appendPartitioned]]
       * contract). */
     def appendBatch(df: DataFrame, batchId: Long): Unit =
-      appendPartitioned(df.withColumn("__batch_id", lit(batchId)),
-        stateDir, partCol, sortCols)
+      appendPartitioned(stampBatch(df, batchId), stateDir, partCol, sortCols)
 
     /** [[appendBatch]] with the crash-replay append guard, for stores
       * whose rows carry a `__lineage` stamp (`df` must include it): a

@@ -139,8 +139,7 @@ object SubstrDedupStream {
               .select(col("doc_id"), col("i")))
           }
         val dupPos = cross.fold(intra)(intra.unionByName(_)).distinct()
-        Dedup.mergeSpans(dupPos, k)
-          .withColumn("__batch_id", lit(batchId))
+        Streams.stampBatch(Dedup.mergeSpans(dupPos, k), batchId)
           .write.mode(SaveMode.Append).parquet(spansDir)
         // grow the store AFTER the lookup so a gram never matches itself;
         // distinct hashes only — positions never persist. The shared

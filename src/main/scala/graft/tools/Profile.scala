@@ -29,8 +29,8 @@ import graft.sources.EngineConf
   * A run is Bench's: build the query, then write it to the noop sink; one
   * cold run, then `reps` timed ones. `stages` prints the build time, the
   * jobs launched while building, the classes Janino compiled during the
-  * cold run and during the last rep (`compiles=<cold>/<last>`) and the
-  * last rep's jobs and stages. The compile count is Spark's JVM-wide
+  * cold run and during each timed rep (`compiles=<cold>/<r1>,<r2>,…`) and
+  * the last rep's jobs and stages. The compile count is Spark's JVM-wide
   * `CodegenMetrics` counter: unlike the jobs, it is not filtered by the
   * `graft.profile` job tag, so code another thread generates meanwhile
   * is counted too.
@@ -47,18 +47,19 @@ object Profile {
                          input: Long)
 
   /** `tasksEnded` counts the task-end events of the last rep's jobs;
-    * `coldCompiles` and `lastCompiles` the classes compiled during the
-    * cold run and the last rep. */
+    * `coldCompiles` and `repCompiles` the classes compiled during the
+    * cold run and during each timed rep. */
   final case class StageReport(query: String, coldS: Double,
                                times: Seq[Double], buildMs: Double,
                                buildJobs: Int, coldCompiles: Long,
-                               lastCompiles: Long, jobs: Seq[Job],
+                               repCompiles: Seq[Long], jobs: Seq[Job],
                                stages: Seq[Stage], tasksEnded: Int) {
     def show: String = {
       val head = f"\n=== $query cold=$coldS%.3f times=" +
         times.map(t => f"$t%.3f").mkString(",") +
         f" build=$buildMs%.1f ms build_jobs=$buildJobs" +
-        s" compiles=$coldCompiles/$lastCompiles jobs/run=${jobs.size}"
+        s" compiles=$coldCompiles/${repCompiles.mkString(",")}" +
+        s" jobs/run=${jobs.size}"
       (head +: jobs.flatMap { j =>
         f"  job ${j.jobId}%4d wall=${j.wallMs}%5d ms" +:
           stages.filter(_.jobId == j.jobId).map(s =>
@@ -90,7 +91,7 @@ object Profile {
       val last = runs.last
       rec.synchronized {
         StageReport(name, cold.seconds, runs.map(_.seconds), last.buildMs,
-          last.buildJobs, cold.compiles, last.compiles,
+          last.buildJobs, cold.compiles, runs.map(_.compiles),
           rec.jobs.filter(_.jobId > last.jobMark).toSeq,
           rec.stages.filter(_.jobId > last.jobMark).toSeq,
           rec.tasksByJob.collect { case (j, n) if j > last.jobMark => n }.sum)

@@ -61,6 +61,24 @@ class ApproxBoundsSpec extends GraftSuite {
     }
   }
 
+  test("q_approx_distinct_users' estimator holds the same 5% bound at " +
+      "100k distinct ids a group") {
+    // the fixture's 150 users per event type sit below the sketch's coupon
+    // threshold, where it counts exactly: this runs the registry's own
+    // expression where the HLL estimator answers
+    val perGroup = 100000L
+    val rows = spark.range(0, 3 * perGroup)
+      .groupBy((col("id") % 3).as("g"))
+      .agg(graft.functions.HllView.approxDistinct(col("id")).as("approx"))
+      .collect()
+    assert(rows.length === 3)
+    rows.foreach { r =>
+      val a = r.getAs[Long]("approx").toDouble
+      assert(math.abs(a - perGroup) / perGroup <= 0.05,
+        s"group ${r.getAs[Long]("g")}: approx $a vs exact $perGroup")
+    }
+  }
+
   test("q_quality_cutoff_approx: kept set within 10% of the exact " +
       "cutoff's, and every kept doc clears the approx cutoff") {
     // COVERAGE.md quality-cutoff row (VersioningSpec: approx within 10%

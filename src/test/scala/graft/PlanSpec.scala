@@ -257,6 +257,24 @@ class PlanSpec extends GraftSuite {
       s"window + rollup must share the user_id exchange, got $exchanges")
   }
 
+  test("approximate distinct users aggregate one DataSketches buffer, " +
+    "not HLL++ registers") {
+    // HLL++ at rsd 0.01 keeps 1,639 buffer fields, which the non-codegen
+    // hash aggregate turns into a freshly generated projection per task
+    val physical = SparkEntry.queries("q_approx_distinct_users")(spark, sf)
+      .queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.inputPlan
+      case p => p
+    }
+    val aggregates = physical.flatMap(_.expressions).flatMap(_.collect {
+      case f: org.apache.spark.sql.catalyst.expressions.aggregate
+          .AggregateFunction => f.getClass.getSimpleName
+    })
+    assert(aggregates.contains("HllSketchAgg"), aggregates)
+    assert(!aggregates.contains("HyperLogLogPlusPlus"), aggregates)
+  }
+
   test("scan-parallelism floor no-ops when the scan is already parallel") {
     val docs = graft.sources.Tables.documents(spark, sf).select("doc_id", "text")
     val wide = docs.repartition(spark.sparkContext.defaultParallelism + 1)
@@ -280,6 +298,8 @@ class PlanSpec extends GraftSuite {
     val one = graft.operators.Dedup.spreadByKey(docs, "doc_id", big)
     assert(one.rdd.getNumPartitions == 1,
       "huge bytesPerTask must yield a single partition")
+    // one partition is the scan's own count: no repartition(1) shuffle
+    assert(one eq docs)
     val dense = graft.operators.Dedup.spreadByKey(docs, "doc_id", 1L)
     assert(dense.rdd.getNumPartitions == p,
       "tiny bytesPerTask must cap at defaultParallelism")

@@ -39,6 +39,9 @@ class ProfileSpec extends GraftSuite {
   test("the last rep's stage task counts add up to its task-end events") {
     warmed
     val r = Profile.stages(spark, sf, Seq(Eager), reps = 2).head
+    assert(r.repCompiles.size === 2, r.show)
+    assert(r.show.contains(
+      s" compiles=${r.coldCompiles}/${r.repCompiles.mkString(",")} "), r.show)
     assert(r.stages.nonEmpty, r.show)
     assert(r.stages.map(_.tasks).sum === r.tasksEnded, r.show)
     assert(r.stages.map(_.jobId).toSet.subsetOf(r.jobs.map(_.jobId).toSet),
