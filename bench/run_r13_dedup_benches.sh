@@ -16,16 +16,16 @@ cd /root/repo
 sbt -batch "runMain graft.tools.Count q_minhash_pairs,q_minhash_jaccard_est /tmp/scale100_docs" 2>&1 | grep "COUNT"
 
 # MinHash 100x: full history + batch cross-check, then retention
-sbt -batch "runMain graft.tools.DupStreamBench minhash /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "DUPSTREAMBENCH"
-sbt -batch "runMain graft.tools.DupStreamBench minhash /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.Cert dup-minhash /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.Cert dup-minhash /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "DUPSTREAMBENCH"
 
 # Jaccard 100x: full history + cross-check, then retention
-sbt -batch "runMain graft.tools.DupStreamBench jaccard /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "DUPSTREAMBENCH"
-sbt -batch "runMain graft.tools.DupStreamBench jaccard /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.Cert dup-jaccard /tmp/scale100_docs/documents.parquet 0 0 5 1" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.Cert dup-jaccard /tmp/scale100_docs/documents.parquet 4 2 5 0" 2>&1 | grep "DUPSTREAMBENCH"
 
 # Task 7: post-lineage-stamp datapoints on final HEAD, 10x replicas
 # (full-history config — the stores' shipped format now includes the
 # constant __lineage column; EditDist already re-ran in r12)
-sbt -batch "runMain graft.tools.DupStreamBench neardup /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "DUPSTREAMBENCH"
-sbt -batch "runMain graft.tools.DupStreamBench substr /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "DUPSTREAMBENCH"
-sbt -batch "runMain graft.tools.DupStreamBench embed /tmp/scale10_emb/embeddings.parquet 0 0 1" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.Cert dup-neardup /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.Cert dup-substr /tmp/scale10_docs/documents.parquet 0 0 5" 2>&1 | grep "DUPSTREAMBENCH"
+sbt -batch "runMain graft.tools.Cert dup-embed /tmp/scale10_emb/embeddings.parquet 0 0 1" 2>&1 | grep "DUPSTREAMBENCH"

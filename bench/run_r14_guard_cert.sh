@@ -17,7 +17,7 @@ if [ ! -d /tmp/scale100_docs/documents.parquet ]; then
 fi
 
 # expected counts up front (independent sequential batch oracle)
-sbt -batch "runMain graft.tools.GuardNearDupCert /tmp/scale100_docs/documents.parquet 1" 2>&1 | grep "GUARDCERT_EXPECTED"
+sbt -batch "runMain graft.tools.Cert guard-expected /tmp/scale100_docs/documents.parquet" 2>&1 | grep "GUARDCERT_EXPECTED"
 
 # the composed stream + exact cross-check
-sbt -batch "runMain graft.tools.GuardNearDupCert /tmp/scale100_docs/documents.parquet" 2>&1 | grep "GUARDCERT "
+sbt -batch "runMain graft.tools.Cert guard /tmp/scale100_docs/documents.parquet" 2>&1 | grep "GUARDCERT "

@@ -15,5 +15,5 @@ if [ ! -d /tmp/scale100_docs/embeddings.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/scale100_docs 100 embeddings" 2>&1 | tail -2
 fi
 
-sbt -batch "runMain graft.tools.IvfIndexBench /tmp/scale100_docs/embeddings.parquet 1" 2>&1 | grep "IVFINDEX_EXPECTED"
-sbt -batch "runMain graft.tools.IvfIndexBench /tmp/scale100_docs/embeddings.parquet" 2>&1 | grep "IVFINDEX "
+sbt -batch "runMain graft.tools.Cert ivf-expected /tmp/scale100_docs/embeddings.parquet" 2>&1 | grep "IVFINDEX_EXPECTED"
+sbt -batch "runMain graft.tools.Cert ivf /tmp/scale100_docs/embeddings.parquet" 2>&1 | grep "IVFINDEX "

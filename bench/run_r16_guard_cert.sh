@@ -19,5 +19,5 @@ if [ ! -d /tmp/scale100_docs/documents.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/scale100_docs 100 documents" 2>&1 | tail -2
 fi
 
-sbt -batch "runMain graft.tools.GuardNearDupCert /tmp/scale100_docs/documents.parquet 1 5000 0.5" 2>&1 | grep "GUARDCERT_EXPECTED"
-sbt -batch "runMain graft.tools.GuardNearDupCert /tmp/scale100_docs/documents.parquet 0 5000 0.5" 2>&1 | grep "GUARDCERT "
+sbt -batch "runMain graft.tools.Cert guard-expected /tmp/scale100_docs/documents.parquet 5000 0.5" 2>&1 | grep "GUARDCERT_EXPECTED"
+sbt -batch "runMain graft.tools.Cert guard /tmp/scale100_docs/documents.parquet 5000 0.5" 2>&1 | grep "GUARDCERT "

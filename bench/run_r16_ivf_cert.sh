@@ -20,5 +20,5 @@ if [ ! -d /tmp/scale100_docs/embeddings.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/scale100_docs 100 embeddings" 2>&1 | tail -2
 fi
 
-sbt -batch "runMain graft.tools.IvfIndexBench /tmp/scale100_docs/embeddings.parquet reindex-expected" 2>&1 | grep "IVFREINDEX_EXPECTED"
-sbt -batch "runMain graft.tools.IvfIndexBench /tmp/scale100_docs/embeddings.parquet reindex" 2>&1 | grep "IVFREINDEX "
+sbt -batch "runMain graft.tools.Cert ivf-reindex-expected /tmp/scale100_docs/embeddings.parquet" 2>&1 | grep "IVFREINDEX_EXPECTED"
+sbt -batch "runMain graft.tools.Cert ivf-reindex /tmp/scale100_docs/embeddings.parquet" 2>&1 | grep "IVFREINDEX "

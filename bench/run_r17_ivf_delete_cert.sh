@@ -22,5 +22,5 @@ if [ ! -d /tmp/scale100_docs/embeddings.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/scale100_docs 100 embeddings" 2>&1 | tail -2
 fi
 
-sbt -batch "runMain graft.tools.IvfIndexBench /tmp/scale100_docs/embeddings.parquet delete-expected" 2>&1 | grep "IVFDELETE_EXPECTED"
-sbt -batch "runMain graft.tools.IvfIndexBench /tmp/scale100_docs/embeddings.parquet delete" 2>&1 | grep "IVFDELETE "
+sbt -batch "runMain graft.tools.Cert ivf-delete-expected /tmp/scale100_docs/embeddings.parquet" 2>&1 | grep "IVFDELETE_EXPECTED"
+sbt -batch "runMain graft.tools.Cert ivf-delete /tmp/scale100_docs/embeddings.parquet" 2>&1 | grep "IVFDELETE "

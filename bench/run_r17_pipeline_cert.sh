@@ -10,7 +10,7 @@
 # quotaCap=500, minEst=0.5 — the r15 composed-guard configuration.
 #
 # Expected-answer-first: the guard half of the oracle is
-# GuardNearDupCert.oracle (the SAME oracle, never a second derivation);
+# Cert's guard oracle (the SAME oracle, never a second derivation);
 # the index half trains centroids by the stream's own birth rule over
 # the oracle's accepted-slice-0 and prints the annIvfWith hash over the
 # full accepted corpus BEFORE any stream runs. The run gates on all
@@ -27,6 +27,6 @@ if [ ! -d /tmp/scale10_docs/documents.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/scale10_docs 10 documents" 2>&1 | tail -2
 fi
 
-sbt -batch "runMain graft.tools.GuardIvfPipelineCert /tmp/scale10_docs/documents.parquet expected 500 0.5" 2>&1 | grep "GUARDIVF_EXPECTED"
-sbt -batch "runMain graft.tools.GuardIvfPipelineCert /tmp/scale10_docs/documents.parquet run 500 0.5" 2>&1 | grep "GUARDIVF "
-sbt -batch "runMain graft.tools.GuardIvfPipelineCert /tmp/scale10_docs/documents.parquet crash 500 0.5" 2>&1 | grep "GUARDIVF "
+sbt -batch "runMain graft.tools.Cert guard-ivf-expected /tmp/scale10_docs/documents.parquet 500 0.5" 2>&1 | grep "GUARDIVF_EXPECTED"
+sbt -batch "runMain graft.tools.Cert guard-ivf /tmp/scale10_docs/documents.parquet 500 0.5" 2>&1 | grep "GUARDIVF "
+sbt -batch "runMain graft.tools.Cert guard-ivf-crash /tmp/scale10_docs/documents.parquet 500 0.5" 2>&1 | grep "GUARDIVF "

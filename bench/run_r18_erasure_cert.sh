@@ -36,12 +36,12 @@ if [ ! -d /tmp/scale10_docs/documents.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/scale10_docs 10 documents" 2>&1 | tail -2
 fi
 
-sbt -batch "runMain graft.tools.GuardIvfPipelineCert /tmp/scale10_docs/documents.parquet erase-expected" 2>&1 | grep "GUARDIVF_ERASE_EXPECTED"
-sbt -batch "runMain graft.tools.GuardIvfPipelineCert /tmp/scale10_docs/documents.parquet erase" 2>&1 | grep "GUARDIVF_ERASE "
+sbt -batch "runMain graft.tools.Cert guard-ivf-erase-expected /tmp/scale10_docs/documents.parquet" 2>&1 | grep "GUARDIVF_ERASE_EXPECTED"
+sbt -batch "runMain graft.tools.Cert guard-ivf-erase /tmp/scale10_docs/documents.parquet" 2>&1 | grep "GUARDIVF_ERASE "
 
 # Optional 100x (500k docs, ~35 min): regenerate with
 #   runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/scale100_docs 100 documents
-# then run the same two modes against /tmp/scale100_docs/documents.parquet.
+# then run the same two targets against /tmp/scale100_docs/documents.parquet.
 # Round-18 recorded run: expected hash 2cac087e6978c3c9 reproduced
 # bit-exactly, all gates true, 168,388 accepted, retire 49.4 s /
 # compact 2.5 s.

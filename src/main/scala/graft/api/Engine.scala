@@ -347,6 +347,15 @@ class Engine(val spark: SparkSession,
       ()
     }
 
+  // every maintenance statement's bracket: mark the stores (and owner)
+  // busy, run the rewrite, clear the marks whatever happens
+  private def underMaintenance[T](op: String, dirs: Seq[String],
+                                  owner: Option[String],
+                                  checkOwner: Boolean)(body: => T): T = {
+    beginMaintenance(op, dirs, owner, checkOwner)
+    try body finally endMaintenance(dirs, owner)
+  }
+
   // An `owner` name absent from the LIVE registry is only safe when the
   // engine has SEEN that name (TERMINATE removes the entry — the normal
   // pre-maintenance state); a name it never saw is a typo or a
@@ -374,17 +383,13 @@ class Engine(val spark: SparkSession,
     * retirement was applied (already-retired and never-accepted ids
     * resolve to nothing). */
   def retireDocs(name: String, ids: Seq[Long]): Long = {
-    val (acceptedDir, stateDir, ndStateDir, owner) =
-      guardStores.getOrElse(name, throw new IllegalArgumentException(
-        s"unknown guard store '$name' — registerGuardStore it first"))
-    val dirs = stateDir +: ndStateDir.toSeq
-    beginMaintenance(s"RETIRE DOCS FROM GUARD $name", dirs, owner,
-      checkOwner = true)
-    try {
+    val (acceptedDir, stateDir, ndStateDir, owner) = guardTarget(name)
+    underMaintenance(s"RETIRE DOCS FROM GUARD $name",
+      stateDir +: ndStateDir.toSeq, owner, checkOwner = true) {
       import spark.implicits._
       graft.streaming.IngestGuard.retireDocs(spark, ids.toDF("doc_id"),
         acceptedDir, stateDir, ndStateDir)
-    } finally endMaintenance(dirs, owner)
+    }
   }
 
   /** `UNRETIRE DOCS (ids) FROM GUARD <name>` — the retirement ledger's
@@ -402,17 +407,13 @@ class Engine(val spark: SparkSession,
     * lands, or the erasure is undone — and never unretire an id a NEW
     * document reused (the library scaladoc pins both). */
   def unretireDocs(name: String, ids: Seq[Long]): Long = {
-    val (_, stateDir, ndStateDir, owner) =
-      guardStores.getOrElse(name, throw new IllegalArgumentException(
-        s"unknown guard store '$name' — registerGuardStore it first"))
-    val dirs = stateDir +: ndStateDir.toSeq
-    beginMaintenance(s"UNRETIRE DOCS FROM GUARD $name", dirs, owner,
-      checkOwner = true)
-    try {
+    val (_, stateDir, ndStateDir, owner) = guardTarget(name)
+    underMaintenance(s"UNRETIRE DOCS FROM GUARD $name",
+      stateDir +: ndStateDir.toSeq, owner, checkOwner = true) {
       import spark.implicits._
       graft.streaming.IngestGuard.unretireDocs(spark, stateDir,
         ids.toDF("doc_id"))
-    } finally endMaintenance(dirs, owner)
+    }
   }
 
   /** `COMPACT GUARD <name>` — rewrite the guard's fingerprint store
@@ -427,18 +428,19 @@ class Engine(val spark: SparkSession,
     * rewrites ARE a second writer, so the owning query must be
     * terminated first: same enforcement as [[compactIvfIndex]]. */
   def compactGuardStore(name: String): Unit = {
-    val (_, stateDir, ndStateDir, owner) =
-      guardStores.getOrElse(name, throw new IllegalArgumentException(
-        s"unknown guard store '$name' — registerGuardStore it first"))
-    val dirs = stateDir +: ndStateDir.toSeq
-    beginMaintenance(s"COMPACT GUARD $name", dirs, owner,
-      checkOwner = true)
-    try {
+    val (_, stateDir, ndStateDir, owner) = guardTarget(name)
+    underMaintenance(s"COMPACT GUARD $name", stateDir +: ndStateDir.toSeq,
+      owner, checkOwner = true) {
       graft.streaming.IngestGuard.compactFpStore(spark, stateDir)
       ndStateDir.foreach(
         graft.streaming.IngestGuard.compactNdStore(spark, _))
-    } finally endMaintenance(dirs, owner)
+    }
   }
+
+  private def guardTarget(name: String)
+      : (String, String, Option[String], Option[String]) =
+    guardStores.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown guard store '$name' — registerGuardStore it first"))
 
   private def ivfTarget(name: String): (String, Option[String]) =
     ivfIndexes.getOrElse(name, throw new IllegalArgumentException(
@@ -457,13 +459,12 @@ class Engine(val spark: SparkSession,
     // no owner refusal (safe beside the live ingest stream) — but
     // still single-writer vs other maintenance statements, and the
     // busy mark must not block the owner's restart: owner = None here
-    beginMaintenance(s"DELETE VECTORS FROM INDEX $name", Seq(stateDir),
-      None, checkOwner = false)
-    try {
+    underMaintenance(s"DELETE VECTORS FROM INDEX $name", Seq(stateDir),
+      None, checkOwner = false) {
       graft.streaming.IvfIndexStream.deleteIds(spark, stateDir, ids)
       graft.streaming.IvfIndexStream.readTombstones(spark, stateDir)
         .fold(0L)(_.count())
-    } finally endMaintenance(Seq(stateDir), None)
+    }
   }
 
   /** `COMPACT INDEX <name>` — one file per cell and the physical purge
@@ -472,10 +473,10 @@ class Engine(val spark: SparkSession,
     * terminated first — enforced, not documented. */
   def compactIvfIndex(name: String): Unit = {
     val (stateDir, owner) = ivfTarget(name)
-    beginMaintenance(s"COMPACT INDEX $name", Seq(stateDir), owner,
-      checkOwner = true)
-    try graft.streaming.IvfIndexStream.compactIndex(spark, stateDir)
-    finally endMaintenance(Seq(stateDir), owner)
+    underMaintenance(s"COMPACT INDEX $name", Seq(stateDir), owner,
+      checkOwner = true) {
+      graft.streaming.IvfIndexStream.compactIndex(spark, stateDir)
+    }
   }
 
   /** Re-register the compacted view of every upsert table and every

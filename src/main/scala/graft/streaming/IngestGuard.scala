@@ -222,11 +222,7 @@ object IngestGuard {
           "not look like a legacy guard fingerprint store (expected only " +
           "fp_part=N partition directories) — refusing to adopt it")
       // pin the adopted geometry so the NEXT restart checks it
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(stateDir + ".__format"), true)
-      try out.write(
-        expected.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      Streams.stampStoreFormat(fs, stateDir, expected)
     } else Streams.checkStoreFormat(fs, stateDir, expected, "IngestGuard")
   }
 

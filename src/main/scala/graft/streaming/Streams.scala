@@ -551,22 +551,20 @@ object Streams {
   def checkStoreFormat(fs: org.apache.hadoop.fs.FileSystem,
                        stateDir: String, expected: String,
                        storeKind: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(stateDir + ".__format")
-    val live = new org.apache.hadoop.fs.Path(stateDir)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val actual =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (actual != expected) throw new IllegalStateException(
-        s"$storeKind store at $stateDir was written as '$actual' but this " +
-          s"query is configured for '$expected'. The formats are " +
-          "incompatible; point the query at a fresh stateDir or restart " +
-          "with the store's geometry.")
-    } else if (fs.exists(live)) throw new IllegalStateException(
-      s"Directory $stateDir exists but carries no $storeKind format " +
-        "marker — refusing to treat it as a store.")
-    else stampStoreFormat(fs, stateDir, expected)
+    readStoreFormat(fs, stateDir) match {
+      case Some(actual) => if (actual != expected)
+        throw new IllegalStateException(
+          s"$storeKind store at $stateDir was written as '$actual' but " +
+            s"this query is configured for '$expected'. The formats are " +
+            "incompatible; point the query at a fresh stateDir or " +
+            "restart with the store's geometry.")
+      case None =>
+        if (fs.exists(new org.apache.hadoop.fs.Path(stateDir)))
+          throw new IllegalStateException(
+            s"Directory $stateDir exists but carries no $storeKind " +
+              "format marker — refusing to treat it as a store.")
+        stampStoreFormat(fs, stateDir, expected)
+    }
   }
 
   /** Write (or overwrite) a store's `<stateDir>.__format` marker. */
