@@ -248,40 +248,19 @@ object BloomShards {
   }
 
   // Sidecar writes go through a small dedicated pool: a full-touch
-  // batch refreshes hundreds of base files, and metadata ops through
-  // the Hadoop local FS measured ~10-35 ms EACH on this container
-  // (FileContext.rename the worst — ~32 ms; plain FileSystem.rename
-  // ~8 ms; 16-way parallel ~0.5 s for 256 files where sequential
-  // FileContext took ~10 s). Daemon threads; IO failures propagate to
-  // the awaiting batch and fail it, like any other store write.
+  // batch refreshes hundreds of base files. Through the Hadoop local
+  // FS each metadata op measured ~10-35 ms (FileContext.rename the
+  // worst — ~32 ms; plain FileSystem.rename ~8 ms; 16-way parallel
+  // ~0.5 s for 256 files where sequential FileContext took ~10 s);
+  // [[LocalCheckpointFileManager.replace]] does them as system calls.
+  // Daemon threads; IO failures propagate to the awaiting batch and fail
+  // it, like any other store write.
   private lazy val writePool = java.util.concurrent.Executors
     .newFixedThreadPool(16, (r: Runnable) => {
       val t = new Thread(r, "bloom-sidecar-io")
       t.setDaemon(true)
       t
     })
-
-  /** Replace `target` with freshly-written contents: tmp, delete,
-    * rename (rename alone has no overwrite form on the FileSystem API,
-    * and FileContext's is measured far slower). NOT atomic — a crash
-    * between the delete and the rename leaves NO file — but that is the
-    * SAFE direction for every sidecar file: a missing base sends the
-    * part down the count+rebuild-from-store path, and a missing delta
-    * only ever belongs to a batch whose checkpoint never committed (the
-    * replay rewrites it). A torn tmp is never renamed in, and
-    * [[readBase]]/[[readDelta]] tolerate torn targets anyway. */
-  private def atomicWrite(fs: org.apache.hadoop.fs.FileSystem,
-                          target: org.apache.hadoop.fs.Path)
-                         (write: java.io.DataOutputStream => Unit): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      target.getParent, target.getName + ".tmp")
-    val out = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(fs.create(tmp, true)))
-    try write(out) finally out.close()
-    fs.delete(target, false)
-    require(fs.rename(tmp, target),
-      s"sidecar write failed: could not rename $tmp over $target")
-  }
 
   /** One base file: the part's current filter + what it covers. */
   private final case class BaseFile(lineage: String, coversThrough: Long,
@@ -294,7 +273,8 @@ object BloomShards {
     // callers ensure the dir exists ONCE per batch — a per-part
     // exists+mkdirs pair is two FS ops × hundreds of refreshed parts
     val dir = new org.apache.hadoop.fs.Path(baseDir(stateDir))
-    atomicWrite(fs, new org.apache.hadoop.fs.Path(dir, s"p$part")) { out =>
+    LocalCheckpointFileManager.replace(
+      new org.apache.hadoop.fs.Path(dir, s"p$part"), fs.getConf) { out =>
       out.writeInt(BaseMagic)
       out.writeUTF(lineage)
       out.writeLong(coversThrough)
@@ -428,7 +408,8 @@ object BloomShards {
       : Unit = {
     val dir = new org.apache.hadoop.fs.Path(deltaDir(stateDir))
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    atomicWrite(fs, new org.apache.hadoop.fs.Path(dir, name)) { out =>
+    LocalCheckpointFileManager.replace(
+      new org.apache.hadoop.fs.Path(dir, name), fs.getConf) { out =>
       out.writeInt(DeltaMagic)
       out.writeUTF(lineage)
       out.writeInt(sections.length)
@@ -807,14 +788,11 @@ object BloomShards {
     * Crash-safety and memory, in that order of importance:
     *
     *  - The merged file gets a FRESH name (`dm<batchId>`, suffixed past
-    *    any existing file): [[atomicWrite]] deletes its target before
-    *    renaming the tmp in, so a replayed truncation writing over a
-    *    LEFTOVER merge (crash after its rename, before the old deletes
-    *    finished) could otherwise delete the only copy of sections that
-    *    survive solely in that leftover — a Bloom false negative if the
-    *    crash recurred between the delete and the rename. With a
-    *    never-colliding name the old merge is deleted only AFTER the new
-    *    one is renamed in, like every other source file.
+    *    any existing file), so a replayed truncation never writes over
+    *    a LEFTOVER merge (crash after its publish, before the old
+    *    deletes finished) that it is still reading as a source. The old
+    *    merge is deleted only AFTER the new one is published, like
+    *    every other source file.
     *  - Sections are STREAMED one at a time (two header passes: count,
     *    then copy), so driver memory is bounded by the largest single
     *    section — one batch's per-part hashes — not the uncovered
@@ -873,21 +851,21 @@ object BloomShards {
     val mergedName = Iterator.from(0)
       .map(i => if (i == 0) s"dm$batchId" else s"dm$batchId-$i")
       .find(!names.contains(_)).get
-    atomicWrite(fs, new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(deltaDir(stateDir)), mergedName)) {
-      out =>
-        out.writeInt(DeltaMagic)
-        out.writeUTF(lineage)
-        out.writeInt(math.toIntExact(nLive))
-        val copied = scan { (p, b, n, payload) =>
-          out.writeInt(p)
-          out.writeLong(b)
-          out.writeInt(n)
-          out.write(payload)
-        }
-        // single-writer: the log cannot change between the passes
-        require(copied == nLive,
-          s"delta truncation drift: counted $nLive, copied $copied")
+    LocalCheckpointFileManager.replace(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(deltaDir(stateDir)), mergedName),
+      fs.getConf) { out =>
+      out.writeInt(DeltaMagic)
+      out.writeUTF(lineage)
+      out.writeInt(math.toIntExact(nLive))
+      val copied = scan { (p, b, n, payload) =>
+        out.writeInt(p)
+        out.writeLong(b)
+        out.writeInt(n)
+        out.write(payload)
+      }
+      // single-writer: the log cannot change between the passes
+      require(copied == nLive,
+        s"delta truncation drift: counted $nLive, copied $copied")
     }
     files.foreach(st => fs.delete(st.getPath, false))
   }

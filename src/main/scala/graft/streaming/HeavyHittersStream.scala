@@ -73,25 +73,18 @@ object HeavyHittersStream {
 
   private[graft] def writeState(fs: org.apache.hadoop.fs.FileSystem,
                          stateDir: String, s: State): Unit = {
-    val target = statePath(stateDir)
-    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".__hh.tmp")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try {
-      out.writeUTF(s.lineage); out.writeLong(s.appliedBatch)
-      out.writeInt(s.d); out.writeInt(s.w)
-      s.sketch.foreach(out.writeLong)
-      out.writeInt(s.candidates.length)
-      s.candidates.foreach(out.writeUTF)
-    } finally out.close()
-    // Overwriting rename, NOT delete-then-rename: a crash between those
+    // An atomic replace, NOT delete-then-rename: a crash between those
     // two steps would leave no state file at all and the next batch would
-    // silently reset the sketch and candidate set. FileContext.rename with
-    // Options.Rename.OVERWRITE swaps in one metadata operation, so the
-    // target always holds either the old state or the new one.
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, fs.getConf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(target),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // silently reset the sketch and candidate set. The target always
+    // holds either the old state or the new one.
+    LocalCheckpointFileManager.replace(statePath(stateDir), fs.getConf) {
+      out =>
+        out.writeUTF(s.lineage); out.writeLong(s.appliedBatch)
+        out.writeInt(s.d); out.writeInt(s.w)
+        s.sketch.foreach(out.writeLong)
+        out.writeInt(s.candidates.length)
+        s.candidates.foreach(out.writeUTF)
+    }
   }
 
   private def estimate(sk: Array[Long], d: Int, w: Int, key: String): Long = {

@@ -81,24 +81,15 @@ object IvfIndexStream {
 
   private def writeCentroids(fs: org.apache.hadoop.fs.FileSystem,
                              stateDir: String,
-                             cents: Array[Array[Double]]): Unit = {
-    val target = centroidsPath(stateDir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      target.getParent, target.getName + ".tmp")
-    val out = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(fs.create(tmp, true)))
-    try {
+                             cents: Array[Array[Double]]): Unit =
+    // written ONCE at creation, before any store row exists
+    LocalCheckpointFileManager.replace(centroidsPath(stateDir),
+      fs.getConf) { out =>
       out.writeInt(CentroidMagic)
       out.writeInt(cents.length)
       out.writeInt(cents.head.length)
       cents.foreach(_.foreach(out.writeDouble))
-    } finally out.close()
-    // written ONCE at creation, before any store row exists — so this
-    // plain rename's failure window can only strand an empty store,
-    // which simply retrains
-    require(fs.rename(tmp, target),
-      s"could not persist IVF centroids for $stateDir")
-  }
+    }
 
   /** The index's pinned centroids (None = absent or torn — the caller
     * decides whether that means "fresh, train" or "fail fast"). */

@@ -379,24 +379,18 @@ object Streams {
   }
 
   /** Crash-safe Bloom sidecar swap for foreachBatch side stores
-    * ([[SubstrDedupStream]], [[IngestGuard]]): write tmp, then an
-    * OVERWRITING FileContext rename — one metadata operation, so the
-    * sidecar always holds either the old filter or the new one (and even
-    * if a crash lands before the rename, [[readOrRebuildBloomSidecar]]
-    * rebuilds from the store: one scan, never missed members). */
+    * ([[SubstrDedupStream]], [[IngestGuard]]): an atomic replace
+    * ([[LocalCheckpointFileManager.replace]]), so the sidecar always
+    * holds either the old filter or the new one (and even if a crash
+    * lands before the swap, [[readOrRebuildBloomSidecar]] rebuilds from
+    * the store: one scan, never missed members). */
   def writeBloomSidecar(fs: org.apache.hadoop.fs.FileSystem,
                         stateDir: String,
                         bloom: org.apache.spark.util.sketch.BloomFilter)
-      : Unit = {
-    val target = new org.apache.hadoop.fs.Path(stateDir + ".__bloom")
-    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".__bloom.tmp")
-    val out = fs.create(tmp, true)
-    try bloom.writeTo(out) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, fs.getConf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(target),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      : Unit =
+    LocalCheckpointFileManager.replace(
+      new org.apache.hadoop.fs.Path(stateDir + ".__bloom"), fs.getConf)(
+      bloom.writeTo(_))
 
   /** `stat.bloomFilter` that tolerates an EMPTY input: Spark 4's builder
     * aggregate only allocates its bit buffer on the first update row, so

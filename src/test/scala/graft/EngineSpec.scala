@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.api.{Engine, ReferencePipeline}
 import graft.operators.{Cdc, Relational}
 import graft.sources.Tables
+import graft.streaming.LocalCheckpointFileManager
 
 /** End-to-end topology test: the reference's whole statement file running
   * as named persistent queries, then pull-queried — SURVEY §3 EP2+EP3. */
@@ -408,6 +409,15 @@ class EngineSpec extends GraftSuite {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Hidden files under a checkpoint: Hadoop's `.<name>.crc` checksums,
+    * which only Spark's default manager writes, and `.tmp` leftovers. */
+  private def hiddenFiles(checkpoint: String): List[String] = {
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(checkpoint))
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(all.iterator)
+      .asScala.map(_.getFileName.toString).filter(_.startsWith(".")).toList
+    finally all.close()
+  }
+
   test("source connector drains a 3-file backlog in one microbatch per " +
     "query; the bound follows maxPartitionBytes and admits an oversized " +
     "file alone") {
@@ -460,6 +470,8 @@ class EngineSpec extends GraftSuite {
     } finally first.terminateAll()
     assert(cleanBatches.size === 1 && cleanBatches.head._1 === 0L,
       s"the clean run must take the backlog as batch 0: $cleanBatches")
+    assert(hiddenFiles(s"$tableDir/checkpoint") === Nil,
+      "the engine's checkpoint manager writes no checksum and no leftover")
 
     // the crash: batch 0's offsets are logged, its commit never landed
     val fs = new Path(tableDir).getFileSystem(
@@ -478,6 +490,49 @@ class EngineSpec extends GraftSuite {
       assert(tableDigest(restarted) === clean)
       assert(clean === batchDigest(dataDir))
     } finally restarted.terminateAll()
+  }
+
+  test("a crashed checkpoint written under Spark's default manager " +
+    "resumes under the engine's, past leftover temp files") {
+    val dataDir = tmpDir("graft-backlog-mgr-src")
+    val tableDir = tmpDir("graft-backlog-mgr-tab")
+    val checkpoint = s"$tableDir/checkpoint"
+    writeBacklog(dataDir)
+    val key = LocalCheckpointFileManager.ConfKey
+    val engineManager = spark.conf.get(key)
+    spark.conf.unset(key)
+    val first = new Engine(spark, connectorDataDir = dataDir)
+    val clean = try {
+      startRatings(first, tableDir)
+      first.processAllAvailable()
+      tableDigest(first)
+    } finally {
+      first.terminateAll()
+      spark.conf.set(key, engineManager)
+    }
+    def file(name: String) = new java.io.File(s"$checkpoint/$name")
+    assert(file("offsets/.0.crc").exists,
+      "the first run must write through Spark's default manager")
+
+    // the crash: batch 0's commit never landed, and a writer died while
+    // writing batch 1's offset and commit entries
+    assert(file("commits/0").delete() && file("commits/.0.crc").delete())
+    val leftovers = Seq("offsets", "commits").map(d =>
+      file(s"$d/.1.${java.util.UUID.randomUUID}.tmp"))
+    leftovers.foreach(f => java.nio.file.Files.writeString(f.toPath, "torn"))
+
+    val restarted = new Engine(spark, connectorDataDir = dataDir)
+    try {
+      startSource(restarted)
+      val q = startTable(restarted, tableDir)
+      restarted.processAllAvailable()
+      assert(inputBatches(q).map(_._1) === Seq(0L),
+        "the replay must re-run batch 0 and find no batch 1")
+      assert(tableDigest(restarted) === clean)
+      assert(clean === batchDigest(dataDir))
+    } finally restarted.terminateAll()
+    assert(file("commits/0").exists && !file("commits/.0.crc").exists,
+      "the replayed commit must be written by the engine's manager")
   }
 
   test("a keyed sink over a 2-file backlog that updates one key in both " +
