@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.functions.{Hashing, SketchExpressions}
 import graft.operators.TextAnalysis
+import MinHashDupStream.DefaultBandParts
 
 /** The composed crawl-ingest guard: every arriving document passes, in
   * order, (1) the quality gate, (2) eval-set decontamination, (3) exact
@@ -40,7 +41,8 @@ import graft.operators.TextAnalysis
   * one reason per doc. Store discipline is the proven
   * [[SubstrDedupStream]] contract: clustered after-lookup appends,
   * (lineage, batch-id)-scoped replay guard via [[Streams.lineageId]]
-  * (null-safe — adopted stores keep their history), idempotent-append
+  * (a store adopted under a fresh checkpoint keeps its history),
+  * idempotent-append
   * ledgers ([[accepted]]/[[rejects]] dedupe on replay re-emission).
   *
   * With [[Views]] enabled the guard ALSO maintains the at-ingest
@@ -122,19 +124,19 @@ object IngestGuard {
     *
     * Scale geometry (round-14 — the fp store's round-13 playbook applied
     * to this store, which like it can never retention-prune): `bandParts`
-    * sets the band store's partition count AT CREATION (format-marked;
-    * pre-round-14 stores were all written 64-way and adopt as such);
-    * appends are sorted on `band_key` within each file; the probe is
-    * gated by per-partition Bloom sidecars over `xxhash64(band_key)`
-    * ([[BloomShards]] — the same cache/delta/rebuild machinery as the fp
-    * store), and with at most `maxKeyPushdown` distinct bloom-positive
+    * sets the band store's partition count AT CREATION (format-marked:
+    * a store written under another count, or with no marker or a
+    * pre-v2 one, fails fast); appends are sorted on `band_key` within
+    * each file; the probe is gated by per-partition Bloom sidecars over
+    * `xxhash64(band_key)` ([[BloomShards]] — the same cache/delta/rebuild
+    * machinery as the fp store), and with at most `maxKeyPushdown` distinct bloom-positive
     * band keys the candidates are pushed into the store scan as string
     * point predicates, so the sorted files' row-group stats bound the
     * read by the CANDIDATES' row groups, not the partitions. Past the
     * cap the partition-pruned join takes over, unhinted for AQE. */
   final case class NearDup(stateDir: String, k: Int = 16, bands: Int = 4,
                            n: Int = 3, minEst: Option[Double] = None,
-                           bandParts: Int = LegacyBandParts,
+                           bandParts: Int = DefaultBandParts,
                            maxKeyPushdown: Int = 64) {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     require(bandParts > 0, "bandParts must be positive")
@@ -143,8 +145,6 @@ object IngestGuard {
       "minEst must be in [0, 1]"))
   }
 
-  private val LegacyBandParts = 64
-
   /** Band+signature rows of `docs` (doc_id, text) — the
     * [[JaccardDupStream]] row shape (signature riding each band row so
     * the estimate is computed inside the band join, no second join back
@@ -152,7 +152,7 @@ object IngestGuard {
     * states from the same builder the guard probes with. */
   private[graft] def nearDupRows(docs: DataFrame, k: Int, bands: Int,
                                  n: Int,
-                                 parts: Int = LegacyBandParts): DataFrame =
+                                 parts: Int = DefaultBandParts): DataFrame =
     graft.operators.Dedup.bandSigRows(docs, k, bands, n)
       .withColumn("band_part",
         pmod(xxhash64(col("band_key")), lit(parts)).cast("int"))
@@ -160,20 +160,6 @@ object IngestGuard {
   private def nearDupFormatTag(nd: NearDup): String =
     s"guard-neardup/v2/k=${nd.k}/bands=${nd.bands}/n=${nd.n}" +
       s"/parts=${nd.bandParts}"
-
-  /** The band store's marker check with v1 ADOPTION: pre-round-14
-    * markers pin `(k, bands, n)` but not the partition count — those
-    * stores were all written [[LegacyBandParts]]-way, so a matching v1
-    * marker upgrades in place to the v2 tag iff the configured
-    * `bandParts` is the legacy count; any other configuration falls
-    * through to the strict check and fails fast naming both tags
-    * (probing a store partitioned differently than `pmod(xxhash64(key),
-    * parts)` expects would silently MISS near-dups — false negatives,
-    * the unabsorbable direction). */
-  private def checkNdFormat(nd: NearDup): Streams.SideStore.FormatCheck =
-    Streams.SideStore.upgradeFrom(
-      s"guard-neardup/v1/k=${nd.k}/bands=${nd.bands}/n=${nd.n}",
-      nd.bandParts == LegacyBandParts)
 
   private[streaming] val countsSchema =
     org.apache.spark.sql.types.StructType(Seq(
@@ -184,49 +170,7 @@ object IngestGuard {
       org.apache.spark.sql.types.StructField("sum_tokens",
         org.apache.spark.sql.types.LongType)))
 
-  /** The fp store's format marker: the partition count IS the store's
-    * geometry (the probe's partition pruning, the Bloom shard index, and
-    * the layout key all derive from it), so it is pinned at store
-    * creation and a restart configured differently fails fast. A store
-    * directory with contents but NO marker is a legacy (pre-round-13)
-    * guard store: those were all written 256-way, so they adopt as
-    * `parts=256` — under any other configured count adoption is refused
-    * rather than silently probing the wrong slices. */
-  private[streaming] def checkFpFormat(
-      fs: org.apache.hadoop.fs.FileSystem, stateDir: String,
-      fpParts: Int): Unit = {
-    val expected = s"guard-fps/v2/parts=$fpParts"
-    if (Streams.readStoreFormat(fs, stateDir).isEmpty &&
-        fs.exists(new org.apache.hadoop.fs.Path(stateDir))) {
-      require(fpParts == LegacyFpParts,
-        s"fingerprint store at $stateDir predates the geometry marker " +
-          s"and was written $LegacyFpParts-way; configured fpParts=" +
-          s"$fpParts cannot adopt it — restart with " +
-          s"fpParts=$LegacyFpParts or point at a fresh stateDir")
-      // adoption writes a marker ONTO the directory, so first prove it
-      // actually looks like a legacy guard store (fp_part=N partition
-      // dirs, nothing else data-shaped) — pointing at a wrong path must
-      // refuse, not silently claim foreign data as the fp store
-      // (round-13 advice)
-      val entries = fs.listStatus(
-        new org.apache.hadoop.fs.Path(stateDir)).toIndexedSeq
-        .map(s => (s.getPath.getName, s.isDirectory))
-        .filterNot { case (n, _) => n.startsWith("_") || n.startsWith(".") }
-      val looksLegacy = entries.nonEmpty && entries.forall { case (n, d) =>
-        d && n.startsWith("fp_part=") &&
-          n.stripPrefix("fp_part=").toIntOption.exists(p =>
-            p >= 0 && p < LegacyFpParts)
-      }
-      require(looksLegacy,
-        s"directory $stateDir has contents but no format marker and does " +
-          "not look like a legacy guard fingerprint store (expected only " +
-          "fp_part=N partition directories) — refusing to adopt it")
-      // pin the adopted geometry so the NEXT restart checks it
-      Streams.stampStoreFormat(fs, stateDir, expected)
-    } else Streams.checkStoreFormat(fs, stateDir, expected, "IngestGuard")
-  }
-
-  private val LegacyFpParts = 256
+  private val DefaultFpParts = 256
 
   /** Start the guard. `evalHashes` is the eval set's sorted distinct
     * shingle-hash array (build with
@@ -235,7 +179,11 @@ object IngestGuard {
     * streaming DataFrame with at least (doc_id: long, text: string).
     *
     * Scale geometry (round-13): `fpParts` sets the fingerprint store's
-    * partition count AT CREATION (format-marked; size it so one
+    * partition count AT CREATION (format-marked: the partition count is
+    * the store's geometry — the probe's partition pruning, the Bloom
+    * shard index and the layout key all derive from it — so a restart
+    * under another count, or over a store with no marker, fails fast;
+    * size it so one
     * partition's rows fit a comfortable pruned read at the deployment's
     * corpus ceiling — corpus/fpParts rows each). Appends are sorted on
     * `__fp` within each file, so the probe's candidate fingerprints —
@@ -303,7 +251,7 @@ object IngestGuard {
             minTokens: Int = 5, maxPunctRatio: Double = 0.2,
             n: Int = 3, expectedDocs: Long = 1L << 22,
             fpp: Double = 0.01, views: Option[Views] = None,
-            fpParts: Int = LegacyFpParts,
+            fpParts: Int = DefaultFpParts,
             maxFpPushdown: Int = 64,
             nearDup: Option[NearDup] = None,
             maxBloomLoadBytes: Long = 2L << 30,
@@ -327,14 +275,12 @@ object IngestGuard {
       nearDup.map(_.maxKeyPushdown).getOrElse(0))
     if (sess.conf.get(inThreshold, "10").toInt < pushCap)
       sess.conf.set(inThreshold, pushCap.toString)
-    // the fp store through the shared skeleton: geometry-marked (legacy
-    // stores adopt, see [[checkFpFormat]]), appends sorted on __fp so
-    // in-partition row-group stats serve the probe's pushed candidates;
-    // used for the crash-replay-guarded append — the probe keeps its
-    // own pruned-read path below
+    // the fp store through the shared skeleton: geometry-marked, appends
+    // sorted on __fp so in-partition row-group stats serve the probe's
+    // pushed candidates; used for the crash-replay-guarded append — the
+    // probe keeps its own pruned-read path below
     val fpStore = new Streams.SideStore(stateDir, "fp_part",
       s"guard-fps/v2/parts=$fpParts", "IngestGuard", 0, 0,
-      checkFormat = (_, fs, _) => checkFpFormat(fs, stateDir, fpParts),
       sortCols = Seq("__fp"))
     // each store's shard cache gets its own LRU byte budget: the driver
     // must never end up holding the whole corpus filter (the 1e11-fps
@@ -342,13 +288,12 @@ object IngestGuard {
     // reload from the log on next touch
     val fpBloomCache = new BloomShards.Cache(maxBloomCacheBytes)
     // the optional near-dup band store — same skeleton, same geometry
-    // discipline as the fp store's (marker-pinned parts with legacy
-    // adoption, band_key-sorted files for pushed-candidate row-group
-    // pruning, per-part Bloom sidecars); accepted docs' bands only
+    // discipline as the fp store's (marker-pinned parts,
+    // band_key-sorted files for pushed-candidate row-group pruning,
+    // per-part Bloom sidecars); accepted docs' bands only
     val ndStore: Option[Streams.SideStore] = nearDup.map(nd =>
       new Streams.SideStore(nd.stateDir, "band_part",
         nearDupFormatTag(nd), "IngestGuard.NearDup", 0, 0,
-        checkFormat = checkNdFormat(nd),
         sortCols = Seq("band_key")))
     val ndBloomCache = new BloomShards.Cache(maxBloomCacheBytes)
     val ndSliceCap0 = nearDup.map(nd => math.max(
@@ -437,23 +382,10 @@ object IngestGuard {
             .distinct().collect().map(_.getInt(0)) // bounded ≤ fpParts
         val withRn = scored.withColumn("__rn", rn)
         // the confirm read's history view: rows this (lineage, batch)
-        // wrote before a crash are not history. Plain schema inference
-        // SAMPLES one footer; on a MIXED store (adopted pre-lineage
-        // files + stamped appends) a legacy sample would hide
-        // __lineage — skipping the exclusion then would count own-crash
-        // rows as history and wrongly reject a replayed batch — so a
-        // lineage-less sample retries with mergeSchema (paid only by
-        // legacy-looking stores, never the steady state); a store with
-        // genuinely NO stamped file has no own rows to exclude.
-        def storeHistory(): DataFrame = {
-          val plain = spark.read.parquet(stateDir)
-          val st =
-            if (plain.columns.contains("__lineage")) plain
-            else spark.read.option("mergeSchema", "true").parquet(stateDir)
-          if (!st.columns.contains("__lineage")) st
-          else st.filter(!(col("__lineage") <=> lit(lineage) &&
+        // wrote before a crash are not history
+        def storeHistory(): DataFrame = spark.read.parquet(stateDir)
+          .filter(!(col("__lineage") <=> lit(lineage) &&
             col("__batch_id") === lit(batchId)))
-        }
         val probed =
           if (posParts.isEmpty) withRn.withColumn("__seen", lit(false))
           else {

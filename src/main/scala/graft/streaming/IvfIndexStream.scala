@@ -161,18 +161,9 @@ object IvfIndexStream {
                                  stateDir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(tombstonesFile(stateDir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // status read tolerant of the dir→file migration heal racing us
-    // (exists-then-getFileStatus is two calls): absent mid-heal reads
-    // as "not small" and falls through to the lazy path, which
-    // readIdSidecar self-heals
-    def smallFile(): Boolean =
-      (try Option(fs.getFileStatus(p))
-       catch { case _: java.io.FileNotFoundException => None })
-        .exists(st => !st.isDirectory &&
-          st.getLen <= TombstoneSnapshotBytes)
     def attempt(retries: Int): Option[DataFrame] =
       try readTombstones(spark, stateDir).map { t =>
-        if (!smallFile()) t
+        if (fs.getFileStatus(p).getLen > TombstoneSnapshotBytes) t
         else {
           import spark.implicits._
           t.collect().map(_.getLong(0)).toIndexedSeq.toDF("vec_id")

@@ -23,8 +23,6 @@ import graft.operators.Dedup
   * texts, so replayed match rows are bit-identical. */
 object JaccardDupStream {
 
-  private val LegacyBandParts = 64
-
   private def formatTag(k: Int, bands: Int, n: Int, parts: Int): String =
     s"minhash-jaccard/v2/k=$k/bands=$bands/n=$n/parts=$parts"
 
@@ -38,16 +36,14 @@ object JaccardDupStream {
             checkpoint: String, k: Int = 16, bands: Int = 4, n: Int = 3,
             minEst: Double = 0.0,
             retainBatches: Int = 0, pruneEvery: Int = 0,
-            bandParts: Int = LegacyBandParts): StreamingQuery = {
+            bandParts: Int = MinHashDupStream.DefaultBandParts)
+      : StreamingQuery = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     require(minEst >= 0.0 && minEst <= 1.0, "minEst must be in [0, 1]")
     require(bandParts > 0, "bandParts must be positive")
     val store = new Streams.SideStore(stateDir, "band_part",
       formatTag(k, bands, n, bandParts), "JaccardDupStream",
-      retainBatches, pruneEvery,
-      checkFormat = Streams.SideStore.upgradeFrom(
-        s"minhash-jaccard/k=$k/bands=$bands/n=$n",
-        bandParts == LegacyBandParts))
+      retainBatches, pruneEvery)
     CandidateJoin.start(docs, checkpoint, store, matchesDir,
         Seq("doc_id", "band_id"), keep = col("est_jaccard") >= lit(minEst))(
       batch => Dedup.bandSigRows(batch, k, bands, n)

@@ -22,7 +22,9 @@ import graft.operators.Dedup
   * key) rows — `bands` per document, independent of document size. */
 object MinHashDupStream {
 
-  private val LegacyBandParts = 64
+  /** The band stores' default partition count, shared by
+    * [[JaccardDupStream]] and [[IngestGuard.NearDup]]. */
+  private[streaming] val DefaultBandParts = 64
 
   private def formatTag(k: Int, bands: Int, n: Int, parts: Int): String =
     s"minhash-lsh/v2/k=$k/bands=$bands/n=$n/parts=$parts"
@@ -31,21 +33,18 @@ object MinHashDupStream {
     * candidate rows to `matchesDir` and maintains the band store at
     * `stateDir`. `docs` must be a streaming DataFrame with
     * (doc_id: long, text: string). `bandParts` pins the store's
-    * partition count at creation (format-marked; markers written before
-    * the count was recorded adopt as 64-way, any other configured count
-    * fails fast): a full-history deployment (`retainBatches = 0`) never
+    * partition count at creation (format-marked: a store with another
+    * count, no marker or a pre-v2 marker fails fast): a full-history deployment (`retainBatches = 0`) never
     * prunes, so size the slices for the corpus ceiling. */
   def start(docs: DataFrame, stateDir: String, matchesDir: String,
             checkpoint: String, k: Int = 16, bands: Int = 4, n: Int = 3,
             retainBatches: Int = 0, pruneEvery: Int = 0,
-            bandParts: Int = LegacyBandParts): StreamingQuery = {
+            bandParts: Int = DefaultBandParts): StreamingQuery = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     require(bandParts > 0, "bandParts must be positive")
     val store = new Streams.SideStore(stateDir, "band_part",
       formatTag(k, bands, n, bandParts), "MinHashDupStream",
-      retainBatches, pruneEvery,
-      checkFormat = Streams.SideStore.upgradeFrom(
-        s"minhash-lsh/k=$k/bands=$bands/n=$n", bandParts == LegacyBandParts))
+      retainBatches, pruneEvery)
     CandidateJoin.start(docs, checkpoint, store, matchesDir,
         Seq("doc_id", "band_id", "band_key"))(
       batch => Dedup.bandSigRows(batch, k, bands, n)

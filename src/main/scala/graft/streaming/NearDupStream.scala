@@ -16,9 +16,11 @@ import graft.operators.Dedup
   * `band_part`-partitioned (≤256 directories: band_byte itself in the
   * 8-bit form, its high byte in the 16-bit `wide` form), and the
   * cross-batch read is pruned to the batch's own `band_part` values.
-  * Batch ids are checkpoint-scoped: adopting a store under a FRESH
-  * checkpoint keeps its history, but a retention rewrite then ages the
-  * adopted rows by their old ids. */
+  * The store's `<stateDir>.__format` marker names the signature width;
+  * a directory with no marker, or one written for the other width,
+  * fails fast. Batch ids are checkpoint-scoped: adopting a store under
+  * a FRESH checkpoint keeps its history, but a retention rewrite then
+  * ages the adopted rows by their old ids. */
 object NearDupStream {
 
   /** Names the signature/band layout, so a restart with a mismatched
@@ -28,32 +30,6 @@ object NearDupStream {
 
   private def bandPart(wide: Boolean) =
     if (wide) shiftright(col("band_byte"), 8) else col("band_byte")
-
-  /** The shared marker check, preceded by layout inference for a store
-    * written before markers existed: one without `band_part` is the
-    * legacy band_byte layout (fail fast with a migration hint); one whose
-    * band_part/band_byte relation is the other width fails fast;
-    * otherwise the marker is stamped. */
-  private def checkStoreFormat(spark: org.apache.spark.sql.SparkSession,
-                               fs: org.apache.hadoop.fs.FileSystem,
-                               stateDir: String, wide: Boolean): Unit = {
-    if (!fs.exists(new org.apache.hadoop.fs.Path(stateDir + ".__format")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(stateDir))) {
-      val prior = spark.read.parquet(stateDir)
-      if (!prior.columns.contains("band_part")) throw new IllegalStateException(
-        s"NearDupStream state store at $stateDir uses the legacy band_byte " +
-          "layout (no band_part column). Migrate an 8-bit store once with " +
-          "Streams.rewriteStore, adding band_part = band_byte, or start a " +
-          "fresh stateDir.")
-      if (!prior.filter(col("band_part") =!= bandPart(wide)).isEmpty)
-        throw new IllegalStateException(
-          s"NearDupStream state store at $stateDir does not match the " +
-            s"configured format '${formatTag(wide)}' (wide = $wide): its " +
-            "band_part/band_byte relation is the other signature width.")
-      Streams.stampStoreFormat(fs, stateDir, formatTag(wide))
-    }
-    Streams.checkStoreFormat(fs, stateDir, formatTag(wide), "NearDupStream")
-  }
 
   /** Start the detector: emits (doc_a, doc_b, hamming) rows to
     * `matchesDir` (parquet, append) and maintains the signature store at
@@ -69,9 +45,7 @@ object NearDupStream {
             retainBatches: Int = 0, pruneEvery: Int = 0,
             wide: Boolean = false): StreamingQuery = {
     val store = new Streams.SideStore(stateDir, "band_part",
-      formatTag(wide), "NearDupStream", retainBatches, pruneEvery,
-      checkFormat = (spark, fs, _) =>
-        checkStoreFormat(spark, fs, stateDir, wide))
+      formatTag(wide), "NearDupStream", retainBatches, pruneEvery)
     CandidateJoin.start(docs, checkpoint, store, matchesDir,
         Seq("doc_id", "band_id"), keep = col("hamming") <= maxHamming)(
       batch => (if (wide) Dedup.simhashBandsN(Dedup.simhashWide(batch), 16)

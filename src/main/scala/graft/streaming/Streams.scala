@@ -359,24 +359,49 @@ object Streams {
     * lineage wrote it — a store adopted under a fresh checkpoint restarts
     * at batch 0 and would otherwise collide with genuine history. The id
     * lives inside the checkpoint directory (stable across restarts, new
-    * for fresh checkpoints); created on first use. Used by
+    * for fresh checkpoints); created on first use by an atomic
+    * no-clobber write, so a crash mid-write leaves no file rather than
+    * an empty one. A blank id is refused: its fold-store commits would
+    * parse as no lineage, and a replayed batch would re-apply. Used by
     * [[SubstrDedupStream]] and [[HeavyHittersStream]]. */
   def lineageId(conf: org.apache.hadoop.conf.Configuration,
                 checkpoint: String): String = {
     val p = new org.apache.hadoop.fs.Path(checkpoint, "__graft_lineage")
     val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    } else {
-      val id = java.util.UUID.randomUUID().toString
-      val out = fs.create(p, false)
-      try out.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      id
+    readMarker(fs, p) match {
+      case Some(id) if id.nonEmpty => id
+      case Some(_) => throw new IllegalStateException(
+        s"checkpoint lineage file $p is empty; restore it or point the " +
+          "query at a fresh checkpoint")
+      case None =>
+        val id = java.util.UUID.randomUUID().toString
+        val out = new LocalCheckpointFileManager(p, conf)
+          .createAtomic(p, overwriteIfPossible = false)
+        try {
+          out.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          out.close()
+        } catch { case e: Throwable => out.cancel(); throw e }
+        id
     }
   }
+
+  /** A small marker file's trimmed UTF-8 text, or None when absent. */
+  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
+                         p: org.apache.hadoop.fs.Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
+      finally in.close()
+    }
+
+  /** Write `text` to `p`, replacing any earlier marker atomically
+    * ([[LocalCheckpointFileManager.replace]]). */
+  private def publishMarker(p: org.apache.hadoop.fs.Path, text: String,
+                            conf: org.apache.hadoop.conf.Configuration)
+      : Unit =
+    LocalCheckpointFileManager.replace(p, conf)(
+      _.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
   /** Crash-safe Bloom sidecar swap for foreachBatch side stores
     * ([[SubstrDedupStream]], [[IngestGuard]]): an atomic replace
@@ -466,19 +491,11 @@ object Streams {
   }
 
   /** Read a single-file ids sidecar ([[replaceIdSidecar]] layout) as a
-    * one-column frame, or None when absent. Tolerates the transitional
-    * DIRECTORY layout an earlier writer used (parquet reads either) and
-    * heals its torn two-rename swap first — [[replaceIdSidecar]]
-    * migrates the directory to the file form on its next write. */
+    * one-column frame, or None when absent. */
   def readIdSidecar(spark: SparkSession, path: String,
                     idCol: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompaction(fs, path) // no-op for the file form (never has .__old)
-    // heal a directory→file migration that crashed between the dir
-    // delete and the final rename: the staged file IS the full new set
-    val migrated = new org.apache.hadoop.fs.Path(path + ".__migrated")
-    if (!fs.exists(p) && fs.exists(migrated)) { fs.rename(migrated, p); () }
     if (!fs.exists(p)) None
     else Some(spark.read.parquet(path).select(col(idCol)))
   }
@@ -490,10 +507,8 @@ object Streams {
     * has a live→old window in which a concurrent reader's crash
     * recovery can resurrect the OLD set and fail the writer — for an
     * erasure ledger that silently drops a deletion, the one forbidden
-    * outcome). A directory already at `path` (the transitional layout)
-    * is deleted after the new file is staged beside it and renamed in.
-    * Crash windows: before the rename — old set intact, re-run; scratch
-    * leftovers are overwritten by the next write. */
+    * outcome). Crash windows: before the rename — old set intact,
+    * re-run; scratch leftovers are overwritten by the next write. */
   def replaceIdSidecar(spark: SparkSession, path: String,
                        ids: DataFrame): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
@@ -506,31 +521,8 @@ object Streams {
         !q.getName.startsWith("."))
     require(part.length == 1,
       s"id sidecar write produced ${part.length} files, expected 1")
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, fs.getConf)
-    if (fs.exists(target) && fs.getFileStatus(target).isDirectory) {
-      // transitional directory layout: a dir cannot be atomically
-      // replaced by a file, so the new set (already the union of
-      // old + new — the caller read the dir) lands at a MIGRATED
-      // marker first; a crash after the dir delete but before the
-      // final rename is healed by [[readIdSidecar]] from that marker,
-      // so no window ever reads as "no ids"
-      val migrated = new org.apache.hadoop.fs.Path(path + ".__migrated")
-      fc.rename(fs.makeQualified(part.head), fs.makeQualified(migrated),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      require(fs.delete(target, true),
-        s"could not replace directory-form id sidecar $path")
-      // a concurrent readIdSidecar that observes the window between the
-      // directory delete and this rename HEALS the migration itself
-      // (renames .__migrated into place) — then this rename fails even
-      // though the sidecar state is exactly right; accept that outcome
-      // instead of throwing a spurious maintenance failure
-      if (!fs.rename(migrated, target))
-        require(fs.exists(target) &&
-          !fs.getFileStatus(target).isDirectory && !fs.exists(migrated),
-          s"could not land migrated id sidecar $path")
-    } else
-      fc.rename(fs.makeQualified(part.head), fs.makeQualified(target),
+    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+      .rename(fs.makeQualified(part.head), fs.makeQualified(target),
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     fs.delete(scratch, true)
     ()
@@ -557,33 +549,10 @@ object Streams {
           throw new IllegalStateException(
             s"Directory $stateDir exists but carries no $storeKind " +
               "format marker — refusing to treat it as a store.")
-        stampStoreFormat(fs, stateDir, expected)
+        publishMarker(new org.apache.hadoop.fs.Path(stateDir + ".__format"),
+          expected, fs.getConf)
     }
   }
-
-  /** Write (or overwrite) a store's `<stateDir>.__format` marker. */
-  def stampStoreFormat(fs: org.apache.hadoop.fs.FileSystem,
-                       stateDir: String, tag: String): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(stateDir + ".__format"), true)
-    try out.write(tag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** [[checkStoreFormat]] with a LEGACY-TAG upgrade path: a marker
-    * matching `legacy` is rewritten in place to `expected` when
-    * `legacyAdoptable` (the caller's configuration equals what the
-    * legacy tag implied); otherwise the strict check runs and a legacy
-    * marker fails fast naming both tags. Used by stores whose tag
-    * GREW a geometry field (e.g. the band stores' partition count):
-    * adoption must be explicit, never a silent reinterpretation. */
-  def checkStoreFormatUpgrade(fs: org.apache.hadoop.fs.FileSystem,
-                              stateDir: String, expected: String,
-                              legacy: String, legacyAdoptable: Boolean,
-                              storeKind: String): Unit =
-    if (legacyAdoptable && readStoreFormat(fs, stateDir).contains(legacy))
-      stampStoreFormat(fs, stateDir, expected)
-    else checkStoreFormat(fs, stateDir, expected, storeKind)
 
   /** A maintained view's backing store has not received its FIRST commit
     * yet (no directory, no marker) — the one build failure a view
@@ -597,15 +566,8 @@ object Streams {
 
   /** Read a store's format marker, if present. */
   def readStoreFormat(fs: org.apache.hadoop.fs.FileSystem,
-                      stateDir: String): Option[String] = {
-    val marker = new org.apache.hadoop.fs.Path(stateDir + ".__format")
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
+                      stateDir: String): Option[String] =
+    readMarker(fs, new org.apache.hadoop.fs.Path(stateDir + ".__format"))
 
   /** The shared at-ingest side store: per microbatch, (1) recover an
     * interrupted retention swap and (once per query start) check the
@@ -618,17 +580,15 @@ object Streams {
     * dedup streams; [[SubstrDedupStream]] and [[IngestGuard]] drive it
     * directly.
     *
-    * `checkFormat` runs once per query start, before the first read or
-    * append; it defaults to the shared [[checkStoreFormat]] marker
-    * protocol. `sortCols` orders rows within each written file (see
-    * [[appendPartitioned]]) so probes with pushed point predicates prune
-    * below the partition. Instances are single-writer per-query objects,
-    * like the foreachBatch loops that own them. */
+    * The format check is the shared [[checkStoreFormat]] marker
+    * protocol with `formatTag`, run once per query start before the
+    * first read or append. `sortCols` orders rows within each written
+    * file (see [[appendPartitioned]]) so probes with pushed point
+    * predicates prune below the partition. Instances are single-writer
+    * per-query objects, like the foreachBatch loops that own them. */
   final class SideStore(val stateDir: String, val partCol: String,
                         val formatTag: String, val storeKind: String,
                         retainBatches: Int, pruneEvery: Int,
-                        checkFormat: SideStore.FormatCheck =
-                          SideStore.markerCheck,
                         sortCols: Seq[String] = Nil) {
     require(retainBatches >= 0 && pruneEvery >= 0,
       "retainBatches/pruneEvery must be >= 0")
@@ -645,7 +605,7 @@ object Streams {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       recoverCompaction(fs, stateDir)
       if (!formatChecked) {
-        checkFormat(spark, fs, this)
+        checkStoreFormat(fs, stateDir, formatTag, storeKind)
         formatChecked = true
       }
       fs
@@ -663,12 +623,8 @@ object Streams {
 
     /** Clustered after-lookup append of the batch's rows (stamped with
       * `__batch_id`; skips empty frames — the [[appendPartitioned]]
-      * contract). */
-    def appendBatch(df: DataFrame, batchId: Long): Unit =
-      appendPartitioned(stampBatch(df, batchId), stateDir, partCol, sortCols)
-
-    /** [[appendBatch]] with the crash-replay append guard, for stores
-      * whose rows carry a `__lineage` stamp (`df` must include it): a
+      * contract) with the crash-replay append guard. Rows carry a
+      * `__lineage` stamp (`df` must include it): a
       * batch replayed after a crash that followed the store append must
       * not append a second copy (store bloat per replay — the round-11
       * advice), and a crash that landed MID job-commit (the v1
@@ -677,13 +633,13 @@ object Streams {
       * forever, which is strictly worse than the bloat (round-12
       * self-review). Two layers:
       *  - a tiny `.__applied` sidecar records the last (lineage, batch)
-      *    whose append COMPLETED (written after the append, overwriting
-      *    rename) — on restart, a matching sidecar skips everything
+      *    whose append COMPLETED (replaced atomically after the
+      *    append) — on restart, a matching sidecar skips everything
       *    with certainty and zero store IO;
       *  - when it does not (a normal restart's first batch, a crash in
-      *    the append-to-sidecar window, a pre-sidecar or adopted
-      *    store — indistinguishable from the sidecar alone), the
-      *    behavior is the `repair` mode's:
+      *    the append-to-sidecar window, or a store adopted under a
+      *    fresh checkpoint — indistinguishable from the sidecar alone),
+      *    the behavior is the `repair` mode's:
       *    `repair = true` (default — for stores whose foreachBatch
       *    already reads the store every batch, so one more pruned read
       *    on a restart's first batch costs nothing): the batch's rows
@@ -695,13 +651,11 @@ object Streams {
       *    SKIP the store entirely — [[IngestGuard]]'s bloom-all-negative
       *    contract): plain append, no store read — a crash inside the
       *    one-batch append-to-sidecar window costs one duplicate copy
-      *    (the pre-guard behavior, which the caller's lookup path must
-      *    already absorb), everything else is exact.
+      *    (which the caller's lookup path must absorb), everything else
+      *    is exact.
       * Only the FIRST batch after a (re)start can be a replay (the
       * engine serializes batches within a run). Rows deterministically
-      * recomputed from the batch make the anti-join sound. Pre-guard
-      * stores (no `__lineage` column) take the plain append — the old
-      * behavior, one duplicate copy at worst. */
+      * recomputed from the batch make the anti-join sound. */
     def appendBatchOnce(spark: SparkSession, df: DataFrame,
                         lineage: String, batchId: Long,
                         keyCols: Seq[String],
@@ -715,12 +669,7 @@ object Streams {
       // stamp layout is "<lineage> <id>"; lineage ids never contain a
       // space (UUIDs), but parse from the LAST one anyway
       def readStamp(p: org.apache.hadoop.fs.Path): Option[(String, Long)] =
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val s =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
+        readMarker(fs, p).flatMap { s =>
           val cut = s.lastIndexOf(' ')
           if (cut <= 0) None
           else s.substring(cut + 1).toLongOption
@@ -740,71 +689,38 @@ object Streams {
       // read was once-per-restart O(touched partitions' key columns) on
       // a compacted store). Only a crash inside the intent-to-applied
       // window — a genuinely possibly-partial append — still pays the
-      // anti-join; absent or foreign-lineage intent (pre-intent or
-      // adopted stores) falls back to the read, the safe direction.
+      // anti-join; absent or foreign-lineage intent (a store adopted
+      // under a fresh checkpoint) falls back to the read, the safe
+      // direction.
       val neverStarted = replayCandidate && repair &&
         readStamp(intentMarker).exists { case (l, id) =>
           l == lineage && id < batchId }
       val toAppend =
         if (!replayCandidate || !repair || neverStarted) df
         else repairRemainder(spark, df, lineage, batchId, keyCols)
-      // non-atomic overwrite (delete + rename, ~4x cheaper than
-      // FileContext on this FS): a crash between the two leaves NO
-      // intent file, which only ever costs the next replay a repair
-      // read — never a wrong skip
-      writeMarker(fs, intentMarker, stamp)
-      fs.delete(intentMarker, false)
-      require(fs.rename(
-        new org.apache.hadoop.fs.Path(stateDir + ".__intent.tmp"),
-        intentMarker), s"could not move intent marker for $stateDir")
-      appendBatch(toAppend, batchId)
-      writeMarker(fs, marker, stamp)
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, fs.getConf)
-      fc.rename(fs.makeQualified(
-          new org.apache.hadoop.fs.Path(stateDir + ".__applied.tmp")),
-        fs.makeQualified(marker),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      ()
-    }
-
-    // write "<stamp>" to <target>.tmp (the caller renames it in — the
-    // applied marker atomically via FileContext, the intent marker via
-    // the cheaper delete+rename whose crash window is absorbable)
-    private def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
-                            target: org.apache.hadoop.fs.Path,
-                            stamp: String): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(
-        target.getParent, target.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      publishMarker(intentMarker, stamp, fs.getConf)
+      appendPartitioned(stampBatch(toAppend, batchId), stateDir, partCol,
+        sortCols)
+      publishMarker(marker, stamp, fs.getConf)
     }
 
     /** The repair path's anti-join: the batch's rows minus whatever this
-      * (lineage, batch) already committed. mergeSchema on the reference
-      * read — an adopted/mixed store may have pre-__lineage files, and
-      * plain schema inference SAMPLES one file: sampling an old file
-      * would hide the column and silently disarm the guard (round-12
-      * advice); merged, old rows read it as null and the `<=>` excludes
-      * them. The reference read is pruned to the batch's own partCol
-      * values (bounded by the store's part geometry — the replayed rows
-      * are deterministic, so the prior copy can only live in those
-      * partitions): a restart's first batch must not pay an O(store)
-      * scan, the same unbounded-probe shape the pruned stores exist to
-      * avoid. Package-private so HardeningSpec can assert the pruning
-      * from the plan's own scan metrics. */
+      * (lineage, batch) already committed. The reference read is pruned
+      * to the batch's own partCol values (bounded by the store's part
+      * geometry — the replayed rows are deterministic, so the prior copy
+      * can only live in those partitions): a restart's first batch must
+      * not pay an O(store) scan, the same unbounded-probe shape the
+      * pruned stores exist to avoid. Package-private so HardeningSpec can
+      * assert the pruning from the plan's own scan metrics. */
     private[graft] def repairRemainder(spark: SparkSession,
                                            df: DataFrame, lineage: String,
                                            batchId: Long,
                                            keyCols: Seq[String]): DataFrame = {
       val parts = df.select(col(partCol)).distinct()
         .collect().map(_.get(0)).toIndexedSeq
-      val prior = spark.read.option("mergeSchema", "true")
-        .parquet(stateDir)
-      if (!prior.columns.contains("__lineage") || parts.isEmpty) df
+      if (parts.isEmpty) df
       else df.join(
-        prior.filter(col(partCol).isin(parts: _*))
+        prunedRead(spark, parts)
           .filter(col("__lineage") <=> lit(lineage) &&
             col("__batch_id") === lit(batchId))
           .select(keyCols.map(col): _*),
@@ -824,21 +740,6 @@ object Streams {
           _.filter(col("__batch_id") > batchId - retainBatches))
         true
       } else false
-  }
-
-  object SideStore {
-    type FormatCheck =
-      (SparkSession, org.apache.hadoop.fs.FileSystem, SideStore) => Unit
-
-    /** The shared [[checkStoreFormat]] marker protocol. */
-    val markerCheck: FormatCheck = (_, fs, st) =>
-      checkStoreFormat(fs, st.stateDir, st.formatTag, st.storeKind)
-
-    /** [[checkStoreFormatUpgrade]]: a `legacy` marker adopts in place
-      * when `adoptable`, for stores whose tag grew a geometry field. */
-    def upgradeFrom(legacy: String, adoptable: Boolean): FormatCheck =
-      (_, fs, st) => checkStoreFormatUpgrade(fs, st.stateDir, st.formatTag,
-        legacy, adoptable, st.storeKind)
   }
 
   /** Exactly-once fold for ADDITIVE view stores (histogram counts, HLL
@@ -1097,9 +998,9 @@ object Streams {
     // created it) — nothing to rewrite, and spark.read.parquet on the
     // missing path would throw PATH_NOT_FOUND
     if (!fs.exists(live)) return
-    // mergeSchema: a retention rewrite of a mixed-schema store (e.g. a
-    // pre-__lineage store adopted and then appended to with the stamp)
-    // must not let SAMPLED schema inference pick an old file and
+    // mergeSchema: a retention rewrite of a mixed-schema store (files
+    // written with and without a column) must not let SAMPLED schema
+    // inference pick an old file and
     // permanently strip the newer columns from every row that had them
     // (round-12 advice) — merged, old rows carry null and nothing is lost
     val rewritten = rewrite(

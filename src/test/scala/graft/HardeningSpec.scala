@@ -337,26 +337,24 @@ class HardeningSpec extends GraftSuite {
       "intent == batch must repair the partial append exactly")
   }
 
-  test("SideStore.appendBatchOnce repair: mixed-schema stores keep the " +
-      "lineage column and the reference read is partition-pruned") {
-    // round-12 advice, both mediums: (1) plain schema inference SAMPLES
-    // one file, so a store adopted from pre-__lineage days could hide
-    // the column from the repair anti-join (silent no-op) — the repair
-    // read must mergeSchema; (2) the repair read must prune to the
-    // batch's own partCol values, not scan the whole store (the same
-    // unbounded-probe shape the pruned stores exist to avoid).
+  test("SideStore.appendBatchOnce repair: the reference read is " +
+      "partition-pruned") {
+    // round-12 advice: the repair read must prune to the batch's own
+    // partCol values, not scan the whole store (the same unbounded-probe
+    // shape the pruned stores exist to avoid).
     import spark.implicits._
     import graft.streaming.Streams
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-appendonce-mixed").toString + "/store"
+      .createTempDirectory("graft-appendonce-prune").toString + "/store"
     val store = new Streams.SideStore(dir, "p", "fmt/v1", "Spec", 0, 0)
     store.ensureReady(spark) // marker first; the forged files follow
-    // an adopted pre-guard file: NO __lineage column, in a partition the
-    // batch below never touches — and big enough that an unpruned repair
-    // read would show up in the scan's decoded-row metric
+    // another lineage's rows, in a partition the batch below never
+    // touches — big enough that an unpruned repair read would show up
+    // in the scan's decoded-row metric
     Streams.appendPartitioned(
       spark.range(0L, 500000L).select(col("id").as("k"))
-        .withColumn("p", lit(99)).withColumn("__batch_id", lit(0L)),
+        .withColumn("p", lit(99)).withColumn("__lineage", lit("other"))
+        .withColumn("__batch_id", lit(0L)),
       dir, "p")
     // the crashed first attempt: HALF the batch's rows committed WITH
     // the lineage stamp, no applied sidecar
@@ -365,9 +363,9 @@ class HardeningSpec extends GraftSuite {
     Streams.appendPartitioned(
       rows.filter(col("k") <= 50).withColumn("__batch_id", lit(7L)),
       dir, "p")
-    // pruning half, asserted from the repair read's own plan: the
-    // remainder computation decodes only the batch's partitions' rows,
-    // never the 500k-row foreign partition
+    // asserted from the repair read's own plan: the remainder
+    // computation decodes only the batch's partitions' rows, never the
+    // 500k-row foreign partition
     val store2 = new Streams.SideStore(dir, "p", "fmt/v1", "Spec", 0, 0)
     store2.ensureReady(spark)
     val remainder = store2.repairRemainder(spark, rows, "lin", 7L, Seq("k"))
@@ -380,20 +378,25 @@ class HardeningSpec extends GraftSuite {
     assert(decoded > 0 && decoded <= 100,
       s"repair decoded $decoded store rows — the reference read is not " +
         "partition-pruned (the foreign partition alone holds 500000)")
-    // mergeSchema half, end-to-end through the public API: the anti-join
-    // saw the stamped rows — the partial commit is completed to exactly
-    // the full batch, no duplicates, and the adopted rows survive
-    val store3 = new Streams.SideStore(dir, "p", "fmt/v1", "Spec", 0, 0)
-    store3.ensureReady(spark)
-    store3.appendBatchOnce(spark, rows, "lin", 7L, Seq("k"))
-    val mine = spark.read.option("mergeSchema", "true").parquet(dir)
-      .filter(col("__lineage") <=> lit("lin"))
-    assert(mine.count() === 100,
-      "partial commit must complete exactly despite the mixed schema")
-    assert(mine.select("k").distinct().count() === 100,
-      "no stamped row may duplicate")
-    assert(spark.read.parquet(dir).count() === 500100,
-      "adopted pre-lineage rows must survive the repair")
+  }
+
+  test("lineageId refuses an empty lineage file") {
+    // an empty id would pass every lineage check, and fold-store commits
+    // stamped with it (`batch=-<id>`) are skipped by appliedBatchMax,
+    // so a replayed batch would re-apply its additive contribution
+    import graft.streaming.Streams
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-lineage")
+    java.nio.file.Files.createFile(ckpt.resolve("__graft_lineage"))
+    val e = intercept[IllegalStateException] {
+      Streams.lineageId(conf, ckpt.toString)
+    }
+    assert(e.getMessage.contains("__graft_lineage") &&
+      e.getMessage.contains("empty"), e.getMessage)
+    // a fresh checkpoint gets an id once, and keeps it
+    val fresh = ckpt.resolve("fresh").toString
+    val id = Streams.lineageId(conf, fresh)
+    assert(id.nonEmpty && id === Streams.lineageId(conf, fresh))
   }
 
   test("rewriteStore on a mixed-schema store keeps columns sampling " +

@@ -1005,6 +1005,10 @@ class StreamingSpec extends GraftSuite {
     Seq((fp, (fp % 256).toInt, 0L, lineage))
       .toDF("__fp", "fp_part", "__batch_id", "__lineage")
       .write.partitionBy("fp_part").parquet(s"$base/state")
+    // the failed attempt's start had stamped the store's format marker
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$base/state.__format"),
+      "guard-fps/v2/parts=256")
     val in = MemoryStream[(Long, String)]
     val q = graft.streaming.IngestGuard.start(
       in.toDF().toDF("doc_id", "text"), Array.empty[Long],
@@ -1402,8 +1406,8 @@ class StreamingSpec extends GraftSuite {
     } finally q.stop()
   }
 
-  test("ingest guard fp geometry is pinned: a mismatched restart fails " +
-      "fast; unmarked stores adopt only as legacy 256-way") {
+  test("ingest guard fp geometry is pinned: a mismatched restart or an " +
+      "unmarked store fails fast") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -1435,25 +1439,31 @@ class StreamingSpec extends GraftSuite {
       assert(e.getMessage.contains("parts=4"),
         s"mismatch must name the store's pinned geometry: ${e.getMessage}")
     } finally q2.stop()
-    // an unmarked store with contents is legacy (written 256-way before
-    // the marker existed): adoption under any other count is refused
-    val legacyDir = s"$base/legacy"
+    // a store directory with contents but no marker is refused under
+    // any configured count, the default 256 included: nothing adopts it
+    val unmarkedDir = s"$base/unmarked"
     Seq((123L, 123, 0L, "old-lin"))
       .toDF("__fp", "fp_part", "__batch_id", "__lineage")
-      .write.partitionBy("fp_part").parquet(legacyDir)
-    val in3 = MemoryStream[(Long, String)]
-    val q3 = graft.streaming.IngestGuard.start(
-      in3.toDF().toDF("doc_id", "text"), Array.empty[Long],
-      legacyDir, s"$base/accepted3", s"$base/rejects3",
-      s"$base/checkpoint3", minTokens = 3, fpParts = 8)
-    try {
-      in3.addData(3L -> "a third clean document about lecture notes")
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q3.processAllAvailable()
-      }
-      assert(e.getMessage.contains("predates the geometry marker"),
-        s"legacy adoption under fpParts=8 must be refused: ${e.getMessage}")
-    } finally q3.stop()
+      .write.partitionBy("fp_part").parquet(unmarkedDir)
+    Seq(256, 8).foreach { parts =>
+      val in3 = MemoryStream[(Long, String)]
+      val q3 = graft.streaming.IngestGuard.start(
+        in3.toDF().toDF("doc_id", "text"), Array.empty[Long],
+        unmarkedDir, s"$base/accepted$parts", s"$base/rejects$parts",
+        s"$base/checkpoint$parts", minTokens = 3, fpParts = parts)
+      try {
+        in3.addData(3L -> "a third clean document about lecture notes")
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q3.processAllAvailable()
+        }
+        assert(e.getMessage.contains("carries no IngestGuard format marker"),
+          s"an unmarked store must be refused (fpParts=$parts): " +
+            e.getMessage)
+      } finally q3.stop()
+    }
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$unmarkedDir.__format")),
+      "a refused store must not be stamped")
   }
 
   test("ingest guard Bloom shards: a fresh-checkpoint adoption ignores " +
@@ -2069,7 +2079,7 @@ class StreamingSpec extends GraftSuite {
       .write.partitionBy("band_part").parquet(s"$base/bands")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$base/bands.__format"),
-      "guard-neardup/v1/k=16/bands=4/n=3")
+      "guard-neardup/v2/k=16/bands=4/n=3/parts=64")
     val in = MemoryStream[(Long, String)]
     val q = IngestGuard.start(in.toDF().toDF("doc_id", "text"),
       Array.empty[Long], s"$base/state", s"$base/accepted",
@@ -2375,14 +2385,14 @@ class StreamingSpec extends GraftSuite {
       s"expected the store-format mismatch message, got: ${err.getMessage}")
   }
 
-  test("near-dup store without a marker is probed and accepted when compatible") {
+  test("near-dup store without a marker is refused") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val base = java.nio.file.Files
       .createTempDirectory("graft-neardup-probe").toString
     val dup = "the quick brown fox jumps over the lazy dog again and again"
-    // create a store, then delete its marker — simulates a pre-marker
-    // store from an earlier deployment of the current band_part layout
+    // create a store, then delete its marker: a store directory with
+    // contents and no marker is never inferred or adopted
     val in1 = MemoryStream[(Long, String)]
     val q1 = graft.streaming.NearDupStream.start(
       in1.toDF().toDF("doc_id", "text"),
@@ -2390,26 +2400,21 @@ class StreamingSpec extends GraftSuite {
     try { in1.addData((1L, dup)); q1.processAllAvailable() } finally q1.stop()
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$base/state.__format"))
-    // a matching-format resume must probe the band_part/band_byte
-    // relation, accept the store, re-stamp the marker, and keep detecting
-    // cross-batch matches against the pre-existing state
     val in2 = MemoryStream[(Long, String)]
     val q2 = graft.streaming.NearDupStream.start(
       in2.toDF().toDF("doc_id", "text"),
       s"$base/state", s"$base/matches", s"$base/cp2")
     try {
       in2.addData((2L, dup))
-      q2.processAllAvailable()
-      assert(q2.exception.isEmpty,
-        s"compatible unmarked store must be accepted: ${q2.exception}")
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+      assert(e.getMessage.contains("carries no NearDupStream format marker"),
+        s"an unmarked store must be refused: ${e.getMessage}")
     } finally q2.stop()
-    assert(java.nio.file.Files.exists(
+    assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$base/state.__format")),
-      "the probe must re-stamp the marker")
-    val got = graft.streaming.NearDupStream.matches(spark, s"$base/matches")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got.contains((1L, 2L)),
-      "cross-batch match against the pre-marker store missed")
+      "a refused store must not be stamped")
   }
 
   test("streaming limit emits exactly n rows then nothing") {
@@ -2562,7 +2567,7 @@ class StreamingSpec extends GraftSuite {
       val fs = new org.apache.hadoop.fs.Path(stateDir).getFileSystem(conf)
       val out = fs.create(
         new org.apache.hadoop.fs.Path(stateDir + ".__format"), true)
-      out.write("minhash-lsh/k=16/bands=4/n=3".getBytes("UTF-8")); out.close()
+      out.write("minhash-lsh/v2/k=16/bands=4/n=3/parts=64".getBytes("UTF-8")); out.close()
       val q = MinHashDupStream.start(
         spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1").parquet(inDir),
@@ -2995,8 +3000,8 @@ class StreamingSpec extends GraftSuite {
     } finally q2.stop()
   }
 
-  test("ingest guard near-dup: a pre-round-14 v1 marker adopts in place " +
-      "as 64-way and upgrades to v2") {
+  test("ingest guard near-dup: a v1 marker or no marker fails fast " +
+      "naming the store") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -3005,34 +3010,40 @@ class StreamingSpec extends GraftSuite {
       .createTempDirectory("graft-nd-adopt").toString
     val baseDoc = "metric spaces carry a measure theory lecture with " +
       "notes volume series chapter section topics"
-    // a legacy store: 64-way band rows of an accepted doc, v1 marker
-    // (no parts field — those stores were all written 64-way)
+    // 64-way band rows of an accepted doc under a v1 marker (no parts
+    // field), as the band store's first format wrote it
     IngestGuard.nearDupRows(Seq((1L, baseDoc)).toDF("doc_id", "text"),
         16, 4, 3, 64)
       .withColumn("__lineage", lit("old-lin"))
       .withColumn("__batch_id", lit(0L))
       .write.partitionBy("band_part").parquet(s"$base/bands")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$base/bands.__format"),
-      "guard-neardup/v1/k=16/bands=4/n=3")
-    val in = MemoryStream[(Long, String)]
-    val q = IngestGuard.start(in.toDF().toDF("doc_id", "text"),
-      Array.empty[Long], s"$base/state", s"$base/accepted",
-      s"$base/rejects", s"$base/checkpoint", minTokens = 3,
-      nearDup = Some(IngestGuard.NearDup(s"$base/bands")))
-    try {
-      in.addData(2L -> (baseDoc + " appendix"))
-      q.processAllAvailable()
-      q.exception.foreach(throw _)
-      val rej = IngestGuard.rejects(spark, s"$base/rejects")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(rej === Map(2L -> "near_dup"),
-        s"adopted legacy store must still convict the near-copy: $rej")
-      val marker = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$base/bands.__format")).trim
-      assert(marker === "guard-neardup/v2/k=16/bands=4/n=3/parts=64",
-        s"adoption must pin the v2 geometry: $marker")
-    } finally q.stop()
+    val markerPath = java.nio.file.Paths.get(s"$base/bands.__format")
+    val v1 = "guard-neardup/v1/k=16/bands=4/n=3"
+    java.nio.file.Files.writeString(markerPath, v1)
+    def refusal(run: String): String = {
+      val in = MemoryStream[(Long, String)]
+      val q = IngestGuard.start(in.toDF().toDF("doc_id", "text"),
+        Array.empty[Long], s"$base/$run/state", s"$base/$run/accepted",
+        s"$base/$run/rejects", s"$base/$run/checkpoint", minTokens = 3,
+        nearDup = Some(IngestGuard.NearDup(s"$base/bands")))
+      try {
+        in.addData(2L -> (baseDoc + " appendix"))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }.getMessage
+      } finally q.stop()
+    }
+    val v1Msg = refusal("v1")
+    assert(v1Msg.contains("IngestGuard.NearDup store") &&
+      v1Msg.contains(v1) &&
+      v1Msg.contains("guard-neardup/v2/k=16/bands=4/n=3/parts=64"),
+      s"a v1 marker must fail fast naming both tags: $v1Msg")
+    assert(java.nio.file.Files.readString(markerPath).trim === v1,
+      "a refused store's marker must stay as written")
+    java.nio.file.Files.delete(markerPath)
+    val noneMsg = refusal("unmarked")
+    assert(noneMsg.contains("carries no IngestGuard.NearDup format marker"),
+      s"an unmarked band store must be refused: $noneMsg")
   }
 
   test("ingest guard Bloom budget: past maxBloomLoadBytes the gate is " +
@@ -3213,8 +3224,8 @@ class StreamingSpec extends GraftSuite {
     } finally q.stop()
   }
 
-  test("minhash/jaccard dup streams: bandParts is geometry-pinned with " +
-      "legacy-marker adoption") {
+  test("minhash/jaccard dup streams: bandParts is geometry-pinned; a " +
+      "v1 marker fails fast") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -3249,38 +3260,40 @@ class StreamingSpec extends GraftSuite {
       assert(e.getMessage.contains("parts=8"),
         s"mismatch must name the pinned count: ${e.getMessage}")
     } finally q2.stop()
-    // a pre-round-14 marker (no parts field) adopts as 64-way in place
+    // a v1 marker (no parts field) is not adopted: the restart fails
+    // fast naming both tags, and the marker stays as written
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(s"$base/legacy")
+    val fs = new org.apache.hadoop.fs.Path(s"$base/v1")
       .getFileSystem(conf)
     val inL1 = MemoryStream[(Long, String)]
     val qL1 = graft.streaming.JaccardDupStream.start(
-      inL1.toDF().toDF("doc_id", "text"), s"$base/legacy",
+      inL1.toDF().toDF("doc_id", "text"), s"$base/v1",
       s"$base/lmatches", s"$base/lcheckpoint")
     try {
       inL1.addData(1L -> docA); qL1.processAllAvailable()
       qL1.exception.foreach(throw _)
     } finally qL1.stop()
-    // rewind the marker to its v1 text, as a pre-upgrade store would have
+    // rewind the marker to its v1 text
+    val v1 = "minhash-jaccard/k=16/bands=4/n=3"
     val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$base/legacy.__format"), true)
-    out.write("minhash-jaccard/k=16/bands=4/n=3".getBytes("UTF-8"))
+      new org.apache.hadoop.fs.Path(s"$base/v1.__format"), true)
+    out.write(v1.getBytes("UTF-8"))
     out.close()
     val inL2 = MemoryStream[(Long, String)]
     val qL2 = graft.streaming.JaccardDupStream.start(
-      inL2.toDF().toDF("doc_id", "text"), s"$base/legacy",
+      inL2.toDF().toDF("doc_id", "text"), s"$base/v1",
       s"$base/lmatches", s"$base/lcheckpoint2")
     try {
-      inL2.addData(2L -> (docA + " appendix")); qL2.processAllAvailable()
-      qL2.exception.foreach(throw _)
-      val got = graft.streaming.JaccardDupStream
-        .matches(spark, s"$base/lmatches")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === Set((1L, 2L)),
-        s"adopted legacy store must still match cross-batch: $got")
-      assert(graft.streaming.Streams.readStoreFormat(fs, s"$base/legacy")
-        .contains("minhash-jaccard/v2/k=16/bands=4/n=3/parts=64"),
-        "adoption must upgrade the marker in place")
+      inL2.addData(2L -> (docA + " appendix"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        qL2.processAllAvailable()
+      }
+      assert(e.getMessage.contains("JaccardDupStream store") &&
+        e.getMessage.contains(v1) &&
+        e.getMessage.contains("minhash-jaccard/v2/k=16/bands=4/n=3/parts=64"),
+        s"a v1 marker must fail fast naming both tags: ${e.getMessage}")
+      assert(graft.streaming.Streams.readStoreFormat(fs, s"$base/v1")
+        .contains(v1), "a refused store's marker must stay as written")
     } finally qL2.stop()
   }
 }
