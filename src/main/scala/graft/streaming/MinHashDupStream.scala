@@ -34,8 +34,9 @@ object MinHashDupStream {
     * `stateDir`. `docs` must be a streaming DataFrame with
     * (doc_id: long, text: string). `bandParts` pins the store's
     * partition count at creation (format-marked: a store with another
-    * count, no marker or a pre-v2 marker fails fast): a full-history deployment (`retainBatches = 0`) never
-    * prunes, so size the slices for the corpus ceiling. */
+    * count, no marker or a pre-v2 marker fails fast): a full-history
+    * deployment (`retainBatches = 0`) never prunes, so size the slices
+    * for the corpus ceiling. */
   def start(docs: DataFrame, stateDir: String, matchesDir: String,
             checkpoint: String, k: Int = 16, bands: Int = 4, n: Int = 3,
             retainBatches: Int = 0, pruneEvery: Int = 0,

@@ -624,8 +624,8 @@ object Streams {
     /** Clustered after-lookup append of the batch's rows (stamped with
       * `__batch_id`; skips empty frames — the [[appendPartitioned]]
       * contract) with the crash-replay append guard. Rows carry a
-      * `__lineage` stamp (`df` must include it): a
-      * batch replayed after a crash that followed the store append must
+      * `__lineage` stamp (`df` must include it): a batch replayed after
+      * a crash that followed the store append must
       * not append a second copy (store bloat per replay — the round-11
       * advice), and a crash that landed MID job-commit (the v1
       * committer's multi-rename window) must not be mistaken for a full
