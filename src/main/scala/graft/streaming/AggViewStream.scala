@@ -30,11 +30,10 @@ import graft.operators.Cdc
   * the new id exceeds the stored one — permanent data loss in the
   * maintained aggregate (the r10 verdict's adoption hole, the same one
   * [[Streams.foldAppendOnce]] closes for the additive stores). A
-  * lineage mismatch — including a pre-lineage store whose rows carry a
-  * null — means "nothing from THIS checkpoint applied yet": the store's
-  * contents are kept (adoption) and the batch applies. The store swap
-  * itself is the two-rename crash-recoverable pattern every side store
-  * here uses ([[Streams.replaceStore]]).
+  * lineage mismatch means "nothing from THIS checkpoint applied yet":
+  * the store's contents are kept (adoption) and the batch applies. The
+  * store swap itself is the two-rename crash-recoverable pattern every
+  * side store here uses ([[Streams.replaceStore]]).
   *
   * Delivery contract: envelopes must arrive in per-key order (the
   * Debezium/Kafka per-key partition guarantee). Under it a group's
@@ -58,9 +57,7 @@ object AggViewStream {
     StructField("sum_value", DecimalType(28, 6)),
     StructField("nnz", LongType),
     StructField("__batch_id", LongType),
-    // which checkpoint lineage stamped __batch_id — reads of a
-    // pre-lineage store surface null here (explicit-schema parquet
-    // read), which the guard treats as "unseen lineage" → adopt+apply
+    // which checkpoint lineage stamped __batch_id
     StructField("__lineage", StringType)))
 
   /** The maintained view as of the last completed batch (empty frame on
@@ -87,6 +84,7 @@ object AggViewStream {
     try {
       // stored stamp: (last applied id, the lineage that wrote it) — both
       // columns are row-constant by construction, max() just collapses
+      // them (to null on an empty store)
       val stamp = current.agg(max(col("__batch_id")),
         max(col("__lineage"))).head()
       val lastApplied = if (stamp.isNullAt(0)) -1L else stamp.getLong(0)

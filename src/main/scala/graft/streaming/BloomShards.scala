@@ -238,6 +238,13 @@ object BloomShards {
     (math.ceil(-capacity.toDouble * math.log(fpp) /
       (math.log(2) * math.log(2))) / 8).toLong + 32
 
+  /** The capacity every shard of the ingest guard's stores starts at:
+    * small, so a shard's size follows its own partition — a fresh
+    * part's first base covers its first batch ([[update]]), and a
+    * baseless or saturated shard rebuilds at a covering capacity from
+    * its store partition ([[prepare]]). */
+  val InitialCapacity: Long = 64L
+
   /** Smallest `cap0 * 2^i` strictly greater than `n` — geometric growth
     * makes total rebuild work amortized O(corpus) per doubling (the
     * dynamic-array argument). */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -127,20 +127,18 @@ object IngestGuard {
     * sets the band store's partition count AT CREATION (format-marked:
     * a store written under another count, or with no marker or a
     * pre-v2 one, fails fast); appends are sorted on `band_key` within
-    * each file; the probe is gated by per-partition Bloom sidecars over
-    * `xxhash64(band_key)` ([[BloomShards]] — the same cache/delta/rebuild
-    * machinery as the fp store), and with at most `maxKeyPushdown` distinct bloom-positive
-    * band keys the candidates are pushed into the store scan as string
-    * point predicates, so the sorted files' row-group stats bound the
-    * read by the CANDIDATES' row groups, not the partitions. Past the
-    * cap the partition-pruned join takes over, unhinted for AQE. */
+    * each file; the probe is the fp store's ([[CorpusStore]]): per-partition
+    * Bloom sidecars over `xxhash64(band_key)` gate it, and with at most
+    * [[PushdownCap]] distinct bloom-positive band keys the candidates
+    * are pushed into the store scan as string point predicates, so the
+    * sorted files' row-group stats bound the read by the CANDIDATES' row
+    * groups, not the partitions. Past the cap the partition-pruned join
+    * takes over, unhinted for AQE. */
   final case class NearDup(stateDir: String, k: Int = 16, bands: Int = 4,
                            n: Int = 3, minEst: Option[Double] = None,
-                           bandParts: Int = DefaultBandParts,
-                           maxKeyPushdown: Int = 64) {
+                           bandParts: Int = DefaultBandParts) {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     require(bandParts > 0, "bandParts must be positive")
-    require(maxKeyPushdown >= 0, "maxKeyPushdown must be >= 0")
     minEst.foreach(t => require(t >= 0.0 && t <= 1.0,
       "minEst must be in [0, 1]"))
   }
@@ -172,6 +170,104 @@ object IngestGuard {
 
   private val DefaultFpParts = 256
 
+  /** Most distinct bloom-positive keys a probe pushes into the store scan
+    * as point predicates — the round-13 measured ceiling: or-of-eq
+    * pruning degrades past ~64 values, and per-value pruning only wins
+    * while candidates number fewer than the partition's row groups. */
+  private val PushdownCap = 64
+
+  /** What [[CorpusStore.probe]] found for a batch: the bloom-positive
+    * rows, the store history that confirms them (None: no row can
+    * collide, so the store is never read), whether that history is
+    * already narrowed to the candidates' pushed keys, and the parts the
+    * load budget deferred (their rows count as bloom-positive). */
+  private final case class Probe(positives: DataFrame,
+                                 history: Option[DataFrame],
+                                 pushed: Boolean, deferred: Set[Int])
+
+  /** One of the guard's two corpus-lifetime stores — the fp store or the
+    * near-dup band store — behind its per-partition Bloom shards
+    * ([[BloomShards]]). `key` is the column candidates are pushed on,
+    * `hash` a row's Bloom item, `nParts` the marker-pinned partition
+    * count. Each store's shard cache gets its own LRU byte budget: the
+    * driver must never hold the whole corpus filter (the 1e11-item
+    * infeasibility the sharding exists to avoid); evicted shards reload
+    * from the log on next touch. Single-writer, like the foreachBatch
+    * that owns it. */
+  private final class CorpusStore(side: Streams.SideStore, key: String,
+                                  hash: Column, nParts: Int,
+                                  lineage: String, fpp: Double,
+                                  maxLoadBytes: Long, maxCacheBytes: Long) {
+    private val cache = new BloomShards.Cache(maxCacheBytes)
+    private val part = col(side.partCol)
+
+    /** Probe the store for `rows` (each carrying `key`, the partition
+      * column and whatever `hash` reads). Only the rows' own LIVE parts
+      * are touched; their shards come from the cache, the sidecar log
+      * (up to the load budget — the rest are deferred) or a store
+      * rebuild ([[BloomShards.prepare]]), and bloom-NEGATIVE rows are
+      * definitively new (no false negatives). With no positives the
+      * store is never read — the fresh-content common case. Otherwise
+      * the history is the store pruned to the positives' partitions,
+      * minus this (lineage, batch)'s own rows (a replay's first attempt
+      * is not history); with at most [[PushdownCap]] candidates their
+      * keys are pushed into the scan as point predicates, so the sorted
+      * files' row-group/page stats bound the read by the candidates' own
+      * row groups. A cheap `approx_count_distinct` runs BEFORE the exact
+      * distinct: a dup-heavy batch that is obviously past the cap must
+      * not pay a candidate-column shuffle just to learn it can't push
+      * (its ±2% error only mis-routes borderline batches between two
+      * exact paths). A Bloom false positive costs a pruned confirm read,
+      * never a wrong decision. */
+    def probe(spark: SparkSession, rows: DataFrame, batchId: Long): Probe = {
+      val live = side.liveParts(side.ensureReady(spark))
+      val touched =
+        if (live.isEmpty) Nil
+        else rows.select(part).distinct().collect().map(_.getInt(0))
+          .toIndexedSeq.filter(live) // bounded ≤ nParts
+      val prep = BloomShards.prepare(spark, side.stateDir, side.partCol,
+        hash, lineage, touched, cache, BloomShards.InitialCapacity, fpp,
+        maxLoadBytes)
+      val positives = rows.filter(BloomShards.gate(hash, part, prep, nParts))
+      val deferred = prep.deferred.toSet
+      val posParts =
+        if (prep.shards.isEmpty && prep.deferred.isEmpty) Array.empty[Int]
+        else positives.select(part).distinct().collect().map(_.getInt(0))
+      if (posParts.isEmpty)
+        return Probe(positives, None, pushed = false, deferred)
+      val history = side.prunedRead(spark, posParts.toIndexedSeq)
+        .filter(!(col("__lineage") <=> lit(lineage) &&
+          col("__batch_id") === lit(batchId)))
+      val nEst = positives.agg(approx_count_distinct(col(key)))
+        .head().getLong(0)
+      val cands =
+        if (nEst > PushdownCap) Array.empty[Any]
+        else positives.select(col(key)).distinct().take(PushdownCap + 1)
+          .map(_.get(0))
+      if (nEst <= PushdownCap && cands.length <= PushdownCap)
+        Probe(positives, Some(history.filter(col(key).isin(cands: _*))),
+          pushed = true, deferred)
+      else Probe(positives, Some(history), pushed = false, deferred)
+    }
+
+    /** Grow the store with the batch's ACCEPTED `rows` after the lookup
+      * (a row never matches itself), through the crash-replay append
+      * guard, then fold their hashes into the Bloom shards — after the
+      * append, so delta rows never cover hashes the store lacks. A
+      * fresh part's first base covers its batch; `deferred` parts' hashes
+      * ride the delta log only ([[BloomShards.update]]). A replayed batch
+      * re-folds its own hashes: bits are idempotent, and the n_items
+      * over-count can only trigger an early rebuild from the store. */
+    def grow(spark: SparkSession, rows: DataFrame, keyCols: Seq[String],
+             batchId: Long, deferred: Set[Int], repair: Boolean): Unit = {
+      side.appendBatchOnce(spark, rows.withColumn("__lineage", lit(lineage)),
+        lineage, batchId, keyCols, repair)
+      BloomShards.update(spark, side.stateDir, side.partCol,
+        rows.select(part, hash), cache, BloomShards.InitialCapacity, fpp,
+        lineage, batchId, deferred = deferred)
+    }
+  }
+
   /** Start the guard. `evalHashes` is the eval set's sorted distinct
     * shingle-hash array (build with
     * `Dedup.shingleRows(evalDocs).select("h1").distinct()` — see
@@ -188,7 +284,7 @@ object IngestGuard {
     * corpus ceiling — corpus/fpParts rows each). Appends are sorted on
     * `__fp` within each file, so the probe's candidate fingerprints —
     * pushed into the scan as point predicates when the batch has at most
-    * `maxFpPushdown` distinct bloom-positive fps — prune by parquet
+    * [[PushdownCap]] (64) distinct bloom-positive fps — prune by parquet
     * row-group/page statistics INSIDE the partition: probe IO is
     * bounded by the candidates' own row groups, not the partition.
     * (Point predicates, not parquet's native large-set `In`: its
@@ -198,21 +294,20 @@ object IngestGuard {
     * cap at start, making Spark push or-of-eq, which prunes per value.
     * NOTE this raise is SESSION-GLOBAL and lives past the query — the
     * conf has no per-read form, so every other query on a shared
-    * session plans In-pushdown with the raised threshold from then on;
-    * the default cap of 64 is the documented safe ceiling (round-13
-    * measurement: or-of-eq pruning degrades past ~64 values), raise it
-    * consciously on shared sessions. The cap stays small deliberately:
-    * per-value pruning only wins while candidates number fewer than the
-    * partition's row groups — a dup-heavy batch past the cap gains
-    * nothing from point reads and falls back to the pruned-partition
-    * semi-join, unhinted so AQE sizes the join.) The Bloom prefilter is
-    * per-partition [[BloomShards]] sidecars — each sized to its slice
-    * (`expectedDocs / fpParts` floor-bounded), CACHED in the driver
+    * session plans In-pushdown with a threshold of at least 64 from then
+    * on. A dup-heavy batch past the cap gains nothing from point reads
+    * and falls back to the pruned-partition semi-join, unhinted so AQE
+    * sizes the join.) The Bloom prefilter is
+    * per-partition [[BloomShards]] sidecars — each shard starts at
+    * [[BloomShards.InitialCapacity]] (64) items and is sized from its
+    * own partition (a fresh part's first base covers its first batch, a
+    * live part with no loadable base is counted then rebuilt at a
+    * covering capacity, a saturated shard rebuilds at a doubled one),
+    * CACHED in the driver
     * across batches (the store is single-writer, so the in-memory map
     * is authoritative: the log is read only on a run's first touch of a
     * partition), fed per batch by batch-proportional DELTA rows rather
-    * than full filter rewrites, and rebuilt from one store partition on
-    * saturation with geometric capacity growth — so no driver-held
+    * than full filter rewrites — so no driver-held
     * filter ever has to be sized for the whole corpus, a saturated
     * filter can never silently degrade the probe to read-everything,
     * and per-batch sidecar IO is proportional to the batch.
@@ -225,7 +320,8 @@ object IngestGuard {
     * ~⌈sidecarBytes/budget⌉ batches after any restart instead of
     * skipping forever, while delta maintenance continues for deferred
     * parts, so deferral never starves the sidecars into false
-    * negatives.
+    * negatives. The near-dup band store ([[NearDup]]) runs the same
+    * probe and growth ([[CorpusStore]]) with its own cache.
     *
     * SIZING RULE (`maxBloomCacheBytes` vs the corpus): warming
     * CONVERGES only if the cache can hold the filters of the parts a
@@ -249,15 +345,12 @@ object IngestGuard {
   def start(docs: DataFrame, evalHashes: Array[Long], stateDir: String,
             acceptedDir: String, rejectsDir: String, checkpoint: String,
             minTokens: Int = 5, maxPunctRatio: Double = 0.2,
-            n: Int = 3, expectedDocs: Long = 1L << 22,
-            fpp: Double = 0.01, views: Option[Views] = None,
+            n: Int = 3, fpp: Double = 0.01, views: Option[Views] = None,
             fpParts: Int = DefaultFpParts,
-            maxFpPushdown: Int = 64,
             nearDup: Option[NearDup] = None,
             maxBloomLoadBytes: Long = 2L << 30,
             maxBloomCacheBytes: Long = 8L << 30): StreamingQuery = {
     require(fpParts > 0, "fpParts must be positive")
-    require(maxFpPushdown >= 0, "maxFpPushdown must be >= 0")
     require(maxBloomLoadBytes > 0, "maxBloomLoadBytes must be positive")
     require(maxBloomCacheBytes > 0, "maxBloomCacheBytes must be positive")
     views.foreach(v => require(docs.columns.contains(v.groupCol),
@@ -265,46 +358,36 @@ object IngestGuard {
     val lineage = Streams.lineageId(
       docs.sparkSession.sparkContext.hadoopConfiguration, checkpoint)
     val inputCols = docs.columns.toIndexedSeq
-    val sliceCap0 = math.max(expectedDocs / fpParts, 64L)
     // candidate point predicates must reach parquet as or-of-eq (see
     // the scaladoc, incl. the session-global caveat); raise the session
-    // threshold to the larger cap — never lower an existing bigger one
+    // threshold to the cap — never lower an existing bigger one
     val sess = docs.sparkSession
     val inThreshold = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val pushCap = math.max(maxFpPushdown,
-      nearDup.map(_.maxKeyPushdown).getOrElse(0))
-    if (sess.conf.get(inThreshold, "10").toInt < pushCap)
-      sess.conf.set(inThreshold, pushCap.toString)
+    if (sess.conf.get(inThreshold, "10").toInt < PushdownCap)
+      sess.conf.set(inThreshold, PushdownCap.toString)
     // the fp store through the shared skeleton: geometry-marked, appends
     // sorted on __fp so in-partition row-group stats serve the probe's
-    // pushed candidates; used for the crash-replay-guarded append — the
-    // probe keeps its own pruned-read path below
-    val fpStore = new Streams.SideStore(stateDir, "fp_part",
-      s"guard-fps/v2/parts=$fpParts", "IngestGuard", 0, 0,
-      sortCols = Seq("__fp"))
-    // each store's shard cache gets its own LRU byte budget: the driver
-    // must never end up holding the whole corpus filter (the 1e11-fps
-    // infeasibility the sharding exists to avoid) — evicted shards
-    // reload from the log on next touch
-    val fpBloomCache = new BloomShards.Cache(maxBloomCacheBytes)
+    // pushed candidates
+    val fpStore = new CorpusStore(new Streams.SideStore(stateDir,
+        "fp_part", s"guard-fps/v2/parts=$fpParts", "IngestGuard", 0, 0,
+        sortCols = Seq("__fp")),
+      "__fp", col("__fp"), fpParts, lineage, fpp, maxBloomLoadBytes,
+      maxBloomCacheBytes)
     // the optional near-dup band store — same skeleton, same geometry
     // discipline as the fp store's (marker-pinned parts,
     // band_key-sorted files for pushed-candidate row-group pruning,
     // per-part Bloom sidecars); accepted docs' bands only
-    val ndStore: Option[Streams.SideStore] = nearDup.map(nd =>
-      new Streams.SideStore(nd.stateDir, "band_part",
-        nearDupFormatTag(nd), "IngestGuard.NearDup", 0, 0,
-        sortCols = Seq("band_key")))
-    val ndBloomCache = new BloomShards.Cache(maxBloomCacheBytes)
-    val ndSliceCap0 = nearDup.map(nd => math.max(
-      expectedDocs * nd.bands / nd.bandParts, 64L)).getOrElse(64L)
+    val ndStore: Option[(NearDup, CorpusStore)] = nearDup.map(nd =>
+      nd -> new CorpusStore(new Streams.SideStore(nd.stateDir, "band_part",
+          nearDupFormatTag(nd), "IngestGuard.NearDup", 0, 0,
+          sortCols = Seq("band_key")),
+        "band_key", xxhash64(col("band_key")), nd.bandParts, lineage, fpp,
+        maxBloomLoadBytes, maxBloomCacheBytes))
     docs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val statePath = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = fpStore.ensureReady(spark) // recovery + geometry check
         // one scan projection computes every per-doc signal
         val scored = TextAnalysis.withQualityCols(batch)
           .withColumn("__overlap",
@@ -328,195 +411,53 @@ object IngestGuard {
         val rn = row_number().over(
           Window.partitionBy(col("__fp"), gate).orderBy(col("doc_id")))
         // cross-batch: fingerprint already accepted in an earlier batch.
-        // Per-partition Bloom prefilter ([[BloomShards]]): only docs that
-        // can ever be charged exact_dup — the GATE-passing ones
-        // (quality/contamination rejects keep their cheaper reason under
-        // the precedence, so probing for them is dead work) — determine
-        // the touched fp_part slices; shards are loaded for exactly
-        // those, any slice whose shard is stale (missing for live store
-        // data, under-capacity after a geometry migration, or saturated
-        // past its tracked n_items) is rebuilt from ITS store partition
-        // in one grouped job, and bloom-NEGATIVE fingerprints are
-        // definitively new (no false negatives). A batch with NO
-        // bloom-positive gate-passers never reads the store at all — the
-        // fresh-content common case. Membership of the positives is then
-        // CONFIRMED against the store pruned to their partitions; with at
-        // most maxFpPushdown candidates the fps are pushed into the scan
-        // as point predicates, so the sorted store's row-group/page stats
-        // bound the read by the candidates' own row groups — probe IO
-        // sublinear in store size even inside a partition. Above the cap
-        // (a pathologically dup-heavy batch) the pruned semi-join form
-        // takes over, unhinted so AQE picks the join strategy instead of
-        // force-broadcasting a batch-sized set. A Bloom false positive
-        // costs a pruned confirm read, never a wrongly-rejected doc.
-        // Replay guard: rows this (lineage, batch) wrote before a crash
-        // are not history.
-        val liveParts: Set[Int] =
-          if (!fs.exists(statePath)) Set.empty
-          else fs.listStatus(statePath).toIndexedSeq
-            .map(_.getPath.getName)
-            .filter(_.startsWith("fp_part="))
-            .flatMap(_.stripPrefix("fp_part=").toIntOption).toSet
-        val touchedParts: Seq[Int] =
-          if (liveParts.isEmpty) Nil
-          else scored.filter(gate).select(col("fp_part"))
-            .distinct().collect().map(_.getInt(0)) // bounded ≤ fpParts
-            .toIndexedSeq.filter(liveParts)
-        // cache-first shard prep ([[BloomShards.prepare]]): first-touch
-        // parts load base+delta rows from the log UP TO the byte budget
-        // (the rest are DEFERRED — treated bloom-positive, exact via the
-        // confirm read, and warmed by later batches), live parts with no
-        // loadable shard are counted then rebuilt at a covering
-        // capacity, saturated shards rebuild at a covering doubled
-        // capacity — all per shard, nothing global.
-        val prep = BloomShards.prepare(spark, stateDir, "fp_part",
-          col("__fp"), lineage, touchedParts, fpBloomCache, sliceCap0,
-          fpp, maxBloomLoadBytes)
-        val probeGate =
-          BloomShards.gate(col("__fp"), col("fp_part"), prep, fpParts)
-        val positives = scored.filter(gate && probeGate)
-        val posParts =
-          if (prep.shards.isEmpty && prep.deferred.isEmpty)
-            Array.empty[Int]
-          else positives.select(col("fp_part"))
-            .distinct().collect().map(_.getInt(0)) // bounded ≤ fpParts
+        // Only docs that can ever be charged exact_dup — the GATE-passing
+        // ones (quality/contamination rejects keep their cheaper reason
+        // under the precedence, so probing for them is dead work) — are
+        // probed ([[CorpusStore.probe]]).
+        val fpProbe = fpStore.probe(spark, scored.filter(gate), batchId)
         val withRn = scored.withColumn("__rn", rn)
-        // the confirm read's history view: rows this (lineage, batch)
-        // wrote before a crash are not history
-        def storeHistory(): DataFrame = spark.read.parquet(stateDir)
-          .filter(!(col("__lineage") <=> lit(lineage) &&
-            col("__batch_id") === lit(batchId)))
-        val probed =
-          if (posParts.isEmpty) withRn.withColumn("__seen", lit(false))
-          else {
-            // cheap cardinality probe BEFORE the exact distinct: the
-            // distinct is a shuffle of the batch's candidate column, and
-            // a dup-heavy batch that is obviously past the cap (the
-            // StreamBench worst case — every batch) must not pay it just
-            // to learn it can't push. approx_count_distinct is one
-            // narrow partial-agg pass; its ±2% error only mis-routes
-            // borderline batches between two EXACT paths.
-            val nCandEst = positives
-              .agg(approx_count_distinct(col("__fp")).as("n"))
-              .head().getLong(0)
-            val candRows =
-              if (nCandEst > maxFpPushdown) Array.empty[org.apache.spark.sql.Row]
-              else positives.select(col("__fp")).distinct()
-                .take(maxFpPushdown + 1)
-            if (nCandEst <= maxFpPushdown &&
-                candRows.length <= maxFpPushdown) {
-              // candidate fps pushed as point predicates: partition
-              // pruning on fp_part, then parquet row-group/page stats
-              // on the sorted __fp — the read is bounded by the
-              // candidates' row groups, not the partitions
-              val cands = candRows.map(_.getLong(0)).toIndexedSeq
-              val seenFps = storeHistory()
-                .filter(col("fp_part").isin(posParts.toIndexedSeq: _*))
-                .filter(col("__fp").isin(cands: _*))
-                .select(col("__fp"))
-                // replay-duplicated store rows must not fan out the
-                // join back onto the batch; ≤ maxFpPushdown rows
-                .distinct()
-                .withColumn("__seen", lit(true))
-              // the broadcast is bounded by the pushdown cap
-              withRn.join(broadcast(seenFps), Seq("__fp"), "left")
-            } else {
-              // dup-heavy batch past the cap: candidate and seen sets
-              // are batch-sized, so NO forced broadcast anywhere — AQE
-              // sizes both joins from runtime stats (round-12 advice: a
-              // force-broadcast batch-sized set risks OOM where a
-              // shuffle join would have absorbed it)
-              val candidateFps = positives.select(col("__fp")).distinct()
-              val seenFps = storeHistory()
-                .filter(col("fp_part").isin(posParts.toIndexedSeq: _*))
-                .select(col("__fp"))
-                .join(candidateFps, Seq("__fp"), "left_semi")
-                .distinct()
-                .withColumn("__seen", lit(true))
-              withRn.join(seenFps, Seq("__fp"), "left")
-            }
-          }
+        val probed = fpProbe.history.fold(
+            withRn.withColumn("__seen", lit(false))) { history =>
+          // pushed: ≤ PushdownCap candidate rows, so the broadcast is
+          // bounded. Past the cap the candidate and seen sets are
+          // batch-sized, so NO forced broadcast anywhere — AQE sizes
+          // both joins from runtime stats (round-12 advice: a
+          // force-broadcast batch-sized set risks OOM where a shuffle
+          // join would have absorbed it). The distinct keeps
+          // replay-duplicated store rows from fanning out the join.
+          val fps = history.select(col("__fp"))
+          val seenFps = (if (fpProbe.pushed) fps
+            else fps.join(fpProbe.positives.select(col("__fp")).distinct(),
+              Seq("__fp"), "left_semi"))
+            .distinct().withColumn("__seen", lit(true))
+          withRn.join(if (fpProbe.pushed) broadcast(seenFps) else seenFps,
+            Seq("__fp"), "left")
+        }
         val isDup = coalesce(col("__seen"), lit(false)) || col("__rn") > 1
         // near-dup stage (see [[NearDup]]): bands are computed ONLY for
         // exact-level keepers (anything already condemned keeps its
         // cheaper reason under the precedence — the same dead-work
-        // argument as the fp probe's gate filter). The store probe runs
-        // the fp store's full geometry: per-part Bloom sidecars over
-        // xxhash64(band_key) gate which band rows can collide with
-        // history at all (bloom-negative rows are definitively new — a
-        // no-keeper or all-negative batch never reads the store), and
-        // the positives' candidate band keys are pushed into the
-        // band_key-sorted store scan as string point predicates under
-        // the cap, so the read is bounded by the candidates' row
-        // groups, not the partitions. Within the batch: lower-doc_id
-        // keepers that are not themselves store-near-dups. The hit sets
-        // are bounded by the batch; no forced broadcasts.
-        val (withNear, ndCtx) = (for { nd <- nearDup; st <- ndStore } yield {
-          val ndfs = st.ensureReady(spark)
+        // argument as the fp probe's gate filter), and probed against
+        // the band store exactly as the fp store is. Within the batch:
+        // lower-doc_id keepers that are not themselves store-near-dups.
+        // The hit sets are bounded by the batch; no forced broadcasts.
+        val (withNear, ndCtx) = ndStore.map { case (nd, st) =>
           val keepers = probed.filter(gate && !isDup)
             .select(col("doc_id"), col("text"))
           val rows = nearDupRows(keepers, nd.k, nd.bands, nd.n,
               nd.bandParts)
             .localCheckpoint(false)
-          val noIds = rows.select(col("doc_id")).limit(0)
-          val ndStatePath = new org.apache.hadoop.fs.Path(nd.stateDir)
-          val ndLive: Set[Int] =
-            if (!ndfs.exists(ndStatePath)) Set.empty
-            else ndfs.listStatus(ndStatePath).toIndexedSeq
-              .map(_.getPath.getName)
-              .filter(_.startsWith("band_part="))
-              .flatMap(_.stripPrefix("band_part=").toIntOption).toSet
-          val touchedNd: Seq[Int] =
-            if (ndLive.isEmpty) Nil
-            else rows.select(col("band_part")).distinct()
-              .collect().map(_.getInt(0)) // bounded ≤ bandParts
-              .toIndexedSeq.filter(ndLive)
-          val ndPrep = BloomShards.prepare(spark, nd.stateDir,
-            "band_part", xxhash64(col("band_key")), lineage, touchedNd,
-            ndBloomCache, ndSliceCap0, fpp, maxBloomLoadBytes)
-          val ndGate = BloomShards.gate(xxhash64(col("band_key")),
-            col("band_part"), ndPrep, nd.bandParts)
-          val ndPositives = rows.filter(ndGate)
-          val ndPosParts =
-            if (ndPrep.shards.isEmpty && ndPrep.deferred.isEmpty)
-              Array.empty[Int]
-            else ndPositives.select(col("band_part"))
-              .distinct().collect().map(_.getInt(0)) // bounded ≤ bandParts
-          val storeHits =
-            if (ndPosParts.isEmpty) noIds
-            else {
-              def ndHistory() = st
-                .prunedRead(spark, ndPosParts.toIndexedSeq)
-                .filter(!(col("__lineage") <=> lit(lineage) &&
-                  col("__batch_id") === lit(batchId)))
-              // same cheap cardinality probe as the fp confirm: never
-              // pay the distinct shuffle just to learn the batch is
-              // past the cap (both routes are exact)
-              val nKeyEst = ndPositives
-                .agg(approx_count_distinct(col("band_key")).as("n"))
-                .head().getLong(0)
-              val candRows =
-                if (nKeyEst > nd.maxKeyPushdown)
-                  Array.empty[org.apache.spark.sql.Row]
-                else ndPositives.select(col("band_key"))
-                  .distinct().take(nd.maxKeyPushdown + 1)
-              val history =
-                if (nKeyEst <= nd.maxKeyPushdown &&
-                    candRows.length <= nd.maxKeyPushdown)
-                  // candidate band keys pushed as point predicates:
-                  // partition pruning on band_part, then row-group
-                  // stats on the sorted band_key bound the read by the
-                  // candidates, not the partitions
-                  ndHistory().filter(col("band_key").isin(
-                    candRows.map(_.getString(0)).toIndexedSeq: _*))
-                else ndHistory() // dup-heavy: AQE sizes the plain join
-              ndPositives.alias("nn").join(history.alias("pp"),
-                  col("nn.band_id") === col("pp.band_id") &&
-                    col("nn.band_key") === col("pp.band_key"))
-                .filter(nd.minEst.fold(lit(true))(t =>
-                  graft.operators.Dedup.sigAgreement(nd.k, "nn.sig", "pp.sig") >= lit(t)))
-                .select(col("nn.doc_id")).distinct()
-            }
+          val ndProbe = st.probe(spark, rows, batchId)
+          val storeHits = ndProbe.history.fold(
+              rows.select(col("doc_id")).limit(0)) { history =>
+            ndProbe.positives.alias("nn").join(history.alias("pp"),
+                col("nn.band_id") === col("pp.band_id") &&
+                  col("nn.band_key") === col("pp.band_key"))
+              .filter(nd.minEst.fold(lit(true))(t =>
+                graft.operators.Dedup.sigAgreement(nd.k, "nn.sig", "pp.sig") >= lit(t)))
+              .select(col("nn.doc_id")).distinct()
+          }
           val batchHits = rows.alias("aa").join(rows.alias("bb"),
               col("aa.band_id") === col("bb.band_id") &&
                 col("aa.band_key") === col("bb.band_key") &&
@@ -531,8 +472,8 @@ object IngestGuard {
           val nearIds = storeHits.unionByName(batchHits).distinct()
             .withColumn("__near", lit(true))
           (probed.join(nearIds, Seq("doc_id"), "left"),
-            Some((rows, ndPrep.deferred.toSet)))
-        }).getOrElse((probed.withColumn("__near", lit(false)), None))
+            Some((st, rows, ndProbe.deferred)))
+        }.getOrElse((probed.withColumn("__near", lit(false)), None))
         val isNear = coalesce(col("__near"), lit(false))
         // honest reason for same-batch fp-twins of a NEAR-DUP winner
         // (the quota-twin rule's sibling): the winner's fingerprint
@@ -622,8 +563,9 @@ object IngestGuard {
         // Cost: one fs.exists per batch; the semi-join (ids-only
         // single-file sidecar vs the batch's accepted ids) only when
         // retirements exist at all.
-        if (fs.exists(new org.apache.hadoop.fs.Path(
-            retiredFile(stateDir)))) {
+        val retired = new org.apache.hadoop.fs.Path(retiredFile(stateDir))
+        if (retired.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .exists(retired)) {
           val clash = retiredIds(spark, stateDir).map(r =>
             accepted.select(col("doc_id"))
               .join(r, Seq("doc_id"), "left_semi").limit(1).collect())
@@ -645,54 +587,25 @@ object IngestGuard {
           .write.mode(SaveMode.Append).parquet(rejectsDir)
         Streams.stampBatch(accepted.select(inputCols.map(col): _*), batchId)
           .write.mode(SaveMode.Append).parquet(acceptedDir)
-        // grow the store AFTER the lookup, accepted fingerprints only —
-        // through the shared crash-replay guard, so a replayed batch
-        // no longer re-appends its fps (the probe's lineage filter and
-        // seenFps distinct already kept LOOKUPS exact; this keeps the
-        // store itself single-copy)
-        // repair = false: the guard's batch path must be able to skip
-        // the store entirely (bloom-all-negative), so the one-batch
-        // append-to-sidecar crash window takes a duplicate copy instead
-        // of an anti-join read — the probe's lineage filter + seenFps
-        // distinct already absorb store duplicates exactly
-        fpStore.appendBatchOnce(spark,
-          accepted.select(col("__fp"), col("fp_part")).distinct()
-            .withColumn("__lineage", lit(lineage)),
-          lineage, batchId, Seq("__fp"), repair = false)
-        // fold the batch's accepted fps into the cached per-partition
-        // Bloom shards and append one batch-proportional delta row per
-        // touched part (fresh slices get their first base row; this
-        // batch's rebuilds persist theirs). A batch can accept NOTHING
-        // (every doc rejected) — then there is nothing to add and the
-        // sidecar stays as-is. A replayed batch re-folds its own fps:
-        // bits are idempotent, n_items over-counts — which can only
-        // trigger an EARLY rebuild that resets the count from the store.
-        BloomShards.update(spark, stateDir, "fp_part",
-          accepted.select(col("fp_part"), col("__fp")),
-          fpBloomCache, sliceCap0, fpp, lineage, batchId,
-          deferred = prep.deferred.toSet)
-        // grow the near-dup band store with the ACCEPTED docs' bands —
-        // after the lookup (a doc never near-dups itself), guarded
-        // appends in exact-repair mode (this store IS read whenever any
-        // keeper exists, so a restart's repair read is already paid
-        // for) — then fold the same bands' key hashes into ITS Bloom
-        // sidecars (after the store append, so delta rows never cover
-        // hashes the store lacks)
-        for { (rows, ndDeferred) <- ndCtx; st <- ndStore; nd <- nearDup } {
-          // checkpointed once: the store append and the sidecar update
-          // both consume it — without this the keeper⋉accepted semi-join
-          // runs twice per batch
+        // repair = false for the fp store: the guard's batch path must be
+        // able to skip the store entirely (bloom-all-negative), so the
+        // one-batch append-to-sidecar crash window takes a duplicate copy
+        // instead of an anti-join read — the probe's lineage filter and
+        // seenFps distinct already absorb store duplicates exactly. No
+        // distinct here: an accepted doc is its fingerprint's __rn = 1.
+        fpStore.grow(spark, accepted.select(col("__fp"), col("fp_part")),
+          Seq("__fp"), batchId, fpProbe.deferred, repair = false)
+        // the band store repairs exactly (it IS read whenever any keeper
+        // exists, so a restart's repair read is already paid for). The
+        // accepted bands are checkpointed once: the store append and the
+        // sidecar update both consume them — without this the
+        // keeper⋉accepted semi-join runs twice per batch.
+        ndCtx.foreach { case (st, rows, deferred) =>
           val acceptedBands = rows.join(
               accepted.select(col("doc_id")), Seq("doc_id"), "left_semi")
             .localCheckpoint(false)
-          st.appendBatchOnce(spark,
-            acceptedBands.withColumn("__lineage", lit(lineage)),
-            lineage, batchId, Seq("doc_id", "band_id"))
-          BloomShards.update(spark, nd.stateDir, "band_part",
-            acceptedBands.select(col("band_part"),
-              xxhash64(col("band_key"))),
-            ndBloomCache, ndSliceCap0, fpp, lineage, batchId,
-            deferred = ndDeferred)
+          st.grow(spark, acceptedBands, Seq("doc_id", "band_id"), batchId,
+            deferred, repair = true)
           org.apache.spark.sql.GraftColumnBridge
             .checkpointRdd(acceptedBands).foreach(_.unpersist(false))
         }
@@ -721,7 +634,7 @@ object IngestGuard {
           HllViewStream.applyBatch(acc, s"${v.baseDir}/hll", lineage,
             batchId, "grp", "__fp", v.lgK, v.compactEvery)
         }
-        (Seq(scored, judged) ++ ndCtx.map(_._1)).foreach(df =>
+        (Seq(scored, judged) ++ ndCtx.map(_._2)).foreach(df =>
           org.apache.spark.sql.GraftColumnBridge.checkpointRdd(df)
             .foreach(_.unpersist(false)))
         ()
@@ -737,8 +650,8 @@ object IngestGuard {
     * one row group per FILE instead of one per candidate; compaction
     * collapses that back and bounds the partitions' file counts.
     * Crash-safe two-rename swap ([[Streams.rewriteStore]]), columns
-    * (incl. the `__lineage`/`__batch_id` stamps) preserved via merged
-    * schema, Bloom sidecars untouched (contents are unchanged).
+    * (incl. the `__lineage`/`__batch_id` stamps) preserved, Bloom
+    * sidecars untouched (contents are unchanged).
     *
     * Cost is O(store) per call — run it OUT OF BAND during a low-traffic
     * window amortized over many batches (the lakehouse equivalent of a
@@ -757,8 +670,8 @@ object IngestGuard {
     * band-key predicates depend on (per-batch appends are each sorted,
     * but a candidate pays one row group PER FILE until compaction
     * collapses them). Same contract as the fp twin: crash-safe two-rename
-    * swap, merged schema, Bloom sidecars untouched, SINGLE-WRITER — stop
-    * the guard's streaming query first. */
+    * swap, columns preserved, Bloom sidecars untouched, SINGLE-WRITER —
+    * stop the guard's streaming query first. */
   def compactNdStore(spark: org.apache.spark.sql.SparkSession,
                      stateDir: String): Unit =
     Streams.rewriteStore(spark, stateDir, Seq("band_part"),

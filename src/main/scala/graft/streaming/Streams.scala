@@ -403,8 +403,9 @@ object Streams {
     LocalCheckpointFileManager.replace(p, conf)(
       _.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
-  /** Crash-safe Bloom sidecar swap for foreachBatch side stores
-    * ([[SubstrDedupStream]], [[IngestGuard]]): an atomic replace
+  /** Crash-safe swap of a side store's single-file Bloom sidecar
+    * (`<stateDir>.__bloom`, [[SubstrDedupStream]]'s gram filter): an
+    * atomic replace
     * ([[LocalCheckpointFileManager.replace]]), so the sidecar always
     * holds either the old filter or the new one (and even if a crash
     * lands before the swap, [[readOrRebuildBloomSidecar]] rebuilds from
@@ -613,6 +614,14 @@ object Streams {
 
     def exists(fs: org.apache.hadoop.fs.FileSystem): Boolean =
       fs.exists(statePath)
+
+    /** The integer `partCol` values the store holds data under (one
+      * directory listing; an absent store has none). */
+    def liveParts(fs: org.apache.hadoop.fs.FileSystem): Set[Int] =
+      if (!exists(fs)) Set.empty
+      else fs.listStatus(statePath).toIndexedSeq.map(_.getPath.getName)
+        .filter(_.startsWith(s"$partCol="))
+        .flatMap(_.stripPrefix(s"$partCol=").toIntOption).toSet
 
     /** The store pruned to `parts` — static partition pruning on the
       * layout key, so the read touches only the slices the batch's own
@@ -847,7 +856,16 @@ object Streams {
     * the absent / just-created-empty states and of a crash landed
     * mid-compaction: empty frame with `schema` when nothing committed. */
   def readFoldStore(spark: SparkSession, stateDir: String,
-                    schema: org.apache.spark.sql.types.StructType): DataFrame = {
+                    schema: org.apache.spark.sql.types.StructType): DataFrame =
+    readFoldLog(spark, stateDir, schema)(identity)
+
+  /** The fold store's committed rows through `select` (which sees the
+    * `batch` partition column; it is dropped after), or an empty frame
+    * with `schema` when no `batch=` commit exists. Restores an
+    * interrupted compaction swap first. */
+  private def readFoldLog(spark: SparkSession, stateDir: String,
+                          schema: org.apache.spark.sql.types.StructType)
+                         (select: DataFrame => DataFrame): DataFrame = {
     val statePath = new org.apache.hadoop.fs.Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverCompaction(fs, stateDir)
@@ -857,7 +875,7 @@ object Streams {
     if (!hasData)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(stateDir).drop("batch")
+    else select(spark.read.parquet(stateDir)).drop("batch")
   }
 
   /** Predicate over a fold store's `batch` partition values selecting
@@ -892,18 +910,8 @@ object Streams {
                           schema: org.apache.spark.sql.types.StructType,
                           lineage: String, batchId: Long): DataFrame = {
     requireParsableLineage(lineage)
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompaction(fs, stateDir)
-    val hasData = fs.exists(statePath) &&
-      fs.listStatus(statePath).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch="))
-    if (!hasData)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(stateDir)
-      .filter(foldCommitBefore(lineage, batchId))
-      .drop("batch")
+    readFoldLog(spark, stateDir, schema)(
+      _.filter(foldCommitBefore(lineage, batchId)))
   }
 
   /** Compact a fold store's PRE-BATCH prefix only: merge every partition
@@ -998,13 +1006,9 @@ object Streams {
     // created it) — nothing to rewrite, and spark.read.parquet on the
     // missing path would throw PATH_NOT_FOUND
     if (!fs.exists(live)) return
-    // mergeSchema: a retention rewrite of a mixed-schema store (files
-    // written with and without a column) must not let SAMPLED schema
-    // inference pick an old file and
-    // permanently strip the newer columns from every row that had them
-    // (round-12 advice) — merged, old rows carry null and nothing is lost
-    val rewritten = rewrite(
-      spark.read.option("mergeSchema", "true").parquet(path))
+    // a plain (sampled-footer) read: every store rewritten here has one
+    // writer schema — its own writer's, which rewrites preserve
+    val rewritten = rewrite(spark.read.parquet(path))
     atomicSwap(fs, path) { tmpPath =>
       // a rewrite that keeps NOTHING (e.g. a retention horizon past the
       // whole store) → drop the store (atomicSwap's false branch)

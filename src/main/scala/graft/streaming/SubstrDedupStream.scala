@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-import org.apache.spark.util.sketch.BloomFilter
 
 import graft.operators.Dedup
 import graft.functions.SketchExpressions
@@ -54,19 +53,6 @@ object SubstrDedupStream {
 
   private def formatTag(k: Int): String = s"substr-grams/k=$k"
 
-  // sidecar IO shared with IngestGuard: [[Streams.writeBloomSidecar]] /
-  // [[Streams.readOrRebuildBloomSidecar]]
-  private def writeBloom(fs: org.apache.hadoop.fs.FileSystem,
-                         stateDir: String, bloom: BloomFilter): Unit =
-    Streams.writeBloomSidecar(fs, stateDir, bloom)
-
-  private def readOrRebuildBloom(spark: SparkSession,
-                                 fs: org.apache.hadoop.fs.FileSystem,
-                                 stateDir: String, expectedGrams: Long,
-                                 fpp: Double): Option[BloomFilter] =
-    Streams.readOrRebuildBloomSidecar(spark, fs, stateDir, "h1",
-      expectedGrams, fpp)
-
   /** Start the detector: emits `(doc_id, span_start, span_tokens, n_grams,
     * __batch_id)` rows to `spansDir` (parquet, append) and maintains the
     * distinct-gram store at `stateDir` plus its Bloom sidecar. `docs` must
@@ -101,8 +87,9 @@ object SubstrDedupStream {
         val grams = Dedup.positionalGramRows(batch, k).localCheckpoint(false)
         val intra = Dedup.flaggedPositions(grams, keepFirst = true)
         val fs = store.ensureReady(spark)
-        val bloom =
-          readOrRebuildBloom(spark, fs, stateDir, expectedGrams, fpp)
+        // the single-file gram sidecar ([[Streams.writeBloomSidecar]])
+        val bloom = Streams.readOrRebuildBloomSidecar(spark, fs, stateDir,
+          "h1", expectedGrams, fpp)
         val cross = (if (store.exists(fs)) Some(()) else None)
           .flatMap { _ =>
             val candidates = bloom match {
@@ -129,7 +116,6 @@ object SubstrDedupStream {
                 // Scoped to the checkpoint lineage: a store adopted under
                 // a fresh checkpoint restarts at batch 0, and its OLD
                 // batch-0 rows are genuine history, not a failed attempt.
-                // Null-safe compare so pre-lineage rows are never masked.
                 // In a clean run the store never holds the current
                 // (lineage, id) at lookup time, so this is a no-op.
                 .filter(!(col("__lineage") <=> lit(lineage) &&
@@ -157,7 +143,7 @@ object SubstrDedupStream {
         // add, the existing sidecar stays as-is
         Streams.bloomOfNonEmpty(grams, "h1", expectedGrams, fpp)
           .foreach { batchBloom =>
-            writeBloom(fs, stateDir, bloom match {
+            Streams.writeBloomSidecar(fs, stateDir, bloom match {
               case Some(prev) =>
                 // a restart with a different expectedGrams/fpp leaves a
                 // sidecar whose bit array no longer matches the batch
@@ -181,7 +167,7 @@ object SubstrDedupStream {
           if (store.exists(fs))
             Streams.bloomOfNonEmpty(spark.read.parquet(stateDir), "h1",
                 expectedGrams, fpp)
-              .foreach(writeBloom(fs, stateDir, _))
+              .foreach(Streams.writeBloomSidecar(fs, stateDir, _))
           else {
             fs.delete(new org.apache.hadoop.fs.Path(stateDir + ".__bloom"),
               false)

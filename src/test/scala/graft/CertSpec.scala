@@ -43,6 +43,14 @@ class CertSpec extends GraftSuite {
     assert(g.keySet === Set("accepted_match", "exact_match", "near_match",
       "quota_match"))
     assert(g.values.forall(identity), g)
+    // each store's Bloom sidecar stays within 2x the store it gates:
+    // shards start small and grow with their own partitions
+    Seq("fp", "band").foreach { store =>
+      val sidecarMb = got.get(s"${store}_sidecar_mb").asDouble
+      val storeMb = got.get(s"${store}_store_mb").asDouble
+      assert(sidecarMb <= 2 * storeMb,
+        s"$store sidecar $sidecarMb MB beside a $storeMb MB store")
+    }
   }
 
   test("ivf: the maintained index reproduces the expected result hash") {

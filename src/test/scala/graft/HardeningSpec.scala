@@ -399,33 +399,6 @@ class HardeningSpec extends GraftSuite {
     assert(id.nonEmpty && id === Streams.lineageId(conf, fresh))
   }
 
-  test("rewriteStore on a mixed-schema store keeps columns sampling " +
-      "would strip") {
-    // round-12 advice: a retention rewrite that SAMPLES a pre-__lineage
-    // file for the schema rewrites the store WITHOUT the column —
-    // permanently disarming the replay guard for rows that had it
-    import spark.implicits._
-    import graft.streaming.Streams
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rewrite-mixed").toString + "/store"
-    Streams.appendPartitioned(
-      Seq((1L, 0)).toDF("k", "p").withColumn("__batch_id", lit(0L)),
-      dir, "p")
-    Streams.appendPartitioned(
-      Seq((2L, 0, "lin")).toDF("k", "p", "__lineage")
-        .withColumn("__batch_id", lit(1L)),
-      dir, "p")
-    Streams.rewriteStore(spark, dir, Seq("p"))(df =>
-      df.filter(col("__batch_id") >= 0L))
-    val after = spark.read.option("mergeSchema", "true").parquet(dir)
-    assert(after.columns.contains("__lineage"),
-      "rewrite stripped __lineage from the store")
-    val stamped = after.filter(col("__lineage") <=> lit("lin"))
-      .select("k").collect().map(_.getLong(0)).toSet
-    assert(stamped === Set(2L),
-      s"the stamped row must keep its lineage through the rewrite: $stamped")
-  }
-
   test("fold-store parsers refuse a lineage that collides with the c- compaction prefix") {
     // round-11 advice: foldCommitBefore/appliedBatchMax strip a leading
     // 'c-' to recognize compaction labels, so a lineage id that itself

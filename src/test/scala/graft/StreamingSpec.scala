@@ -1369,13 +1369,12 @@ class StreamingSpec extends GraftSuite {
     val base = java.nio.file.Files
       .createTempDirectory("graft-bloom-sat").toString
     val in = MemoryStream[(Long, String)]
-    // tiny geometry: 2 slices sized 64 each (expectedDocs 128) — ~240
+    // tiny geometry: 2 slices, each shard starting at 64 items — ~240
     // accepted docs saturate both slices twice over
     val q = graft.streaming.IngestGuard.start(
       in.toDF().toDF("doc_id", "text"), Array.empty[Long],
       s"$base/state", s"$base/accepted", s"$base/rejects",
-      s"$base/checkpoint", minTokens = 3,
-      expectedDocs = 128L, fpParts = 2)
+      s"$base/checkpoint", minTokens = 3, fpParts = 2)
     try {
       (0 until 4).foreach { b =>
         in.addData((0 until 60).map(i =>
@@ -1585,13 +1584,12 @@ class StreamingSpec extends GraftSuite {
     val base = java.nio.file.Files
       .createTempDirectory("graft-bloom-sized").toString
     val in1 = MemoryStream[(Long, String)]
-    // slice sizing 64 (expectedDocs 128 over 2 parts); 300 accepted docs
-    // make each slice ~150 — past TWO doublings of the configured cap
+    // shards start at 64 items over 2 parts; 300 accepted docs make
+    // each slice ~150 — past TWO doublings of the initial capacity
     val q1 = graft.streaming.IngestGuard.start(
       in1.toDF().toDF("doc_id", "text"), Array.empty[Long],
       s"$base/state", s"$base/accepted", s"$base/rejects",
-      s"$base/checkpoint1", minTokens = 3,
-      expectedDocs = 128L, fpParts = 2)
+      s"$base/checkpoint1", minTokens = 3, fpParts = 2)
     try {
       in1.addData((0 until 300).map(i =>
         (i.toLong, s"wholly unique document number $i about " +
@@ -1603,8 +1601,7 @@ class StreamingSpec extends GraftSuite {
     val q2 = graft.streaming.IngestGuard.start(
       in2.toDF().toDF("doc_id", "text"), Array.empty[Long],
       s"$base/state", s"$base/accepted", s"$base/rejects",
-      s"$base/checkpoint2", minTokens = 3,
-      expectedDocs = 128L, fpParts = 2)
+      s"$base/checkpoint2", minTokens = 3, fpParts = 2)
     try {
       in2.addData(
         1000L -> ("wholly unique document number 7 about " +
@@ -3120,8 +3117,7 @@ class StreamingSpec extends GraftSuite {
     val in1 = MemoryStream[(Long, String)]
     val q1 = IngestGuard.start(in1.toDF().toDF("doc_id", "text"),
       Array.empty[Long], s"$base/state", s"$base/accepted",
-      s"$base/rejects", s"$base/checkpoint1", minTokens = 3,
-      expectedDocs = 256, fpParts = 4)
+      s"$base/rejects", s"$base/checkpoint1", minTokens = 3, fpParts = 4)
     try {
       in1.addData((1 to 30).map(i => i.toLong -> doc(i)): _*)
       q1.processAllAvailable()
@@ -3136,8 +3132,7 @@ class StreamingSpec extends GraftSuite {
     val in2 = MemoryStream[(Long, String)]
     val q2 = IngestGuard.start(in2.toDF().toDF("doc_id", "text"),
       Array.empty[Long], s"$base/state", s"$base/accepted",
-      s"$base/rejects", s"$base/checkpoint2", minTokens = 3,
-      expectedDocs = 256, fpParts = 4,
+      s"$base/rejects", s"$base/checkpoint2", minTokens = 3, fpParts = 4,
       maxBloomLoadBytes = perBase + 8)
     try {
       // batch 1 (cold): a dup of phase-1 and a fresh doc
@@ -3168,9 +3163,12 @@ class StreamingSpec extends GraftSuite {
       "never capacity-sized filters") {
     // the round-14 per-batch IO bound end-to-end: with the store's
     // partitions all cached after the first touch, every later batch
-    // appends ONLY kind=1 delta rows (packed batch hashes) to the
-    // sidecar log — write bytes proportional to the batch, not to
-    // touched-shards × capacity
+    // appends ONLY delta files (packed batch hashes) to the sidecar
+    // log — write bytes proportional to the batch, not to
+    // touched-shards × capacity. The 1,500-doc first batch gives the
+    // one shard a 2,048-item base (the smallest 64·2^i past 1,500), so
+    // later 20-doc batches stay below its quarter-filter refresh
+    // threshold.
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -3191,14 +3189,15 @@ class StreamingSpec extends GraftSuite {
     val q = graft.streaming.IngestGuard.start(
       in.toDF().toDF("doc_id", "text"), Array.empty[Long],
       s"$base/state", s"$base/accepted", s"$base/rejects",
-      s"$base/checkpoint", minTokens = 3,
-      expectedDocs = 1L << 20, fpParts = 1)
+      s"$base/checkpoint", minTokens = 3, fpParts = 1)
     try {
-      val grew = (0 until 3).map { b =>
+      val sizes = Seq(1500, 20, 20)
+      val grew = sizes.indices.map { b =>
         val before = sidecarBytes()
-        in.addData((0 until 20).map(i =>
-          (b * 20L + i, s"wholly unique document number ${b * 20 + i} " +
-            s"about subject ${b * 20 + i} with several extra words")): _*)
+        val first = sizes.take(b).sum
+        in.addData((first until first + sizes(b)).map(i =>
+          (i.toLong, s"wholly unique document number $i " +
+            s"about subject $i with several extra words")): _*)
         q.processAllAvailable()
         sidecarBytes() - before
       }
@@ -3209,7 +3208,7 @@ class StreamingSpec extends GraftSuite {
       // and the layout says why: batches 1-2 added ONLY delta files —
       // the single base file (fpParts = 1) is batch 0's, untouched
       // (20-doc batches never cross the quarter-filter refresh
-      // threshold at the 1M-item slice sizing)
+      // threshold of the 2,048-item base)
       def visible(dir: String) = new java.io.File(
         graft.streaming.BloomShards.sidecarDir(s"$base/state") + dir)
         .listFiles().filter(f => !f.getName.endsWith(".tmp") &&
